@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 

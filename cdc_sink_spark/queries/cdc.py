@@ -20,6 +20,7 @@ from cdc_sink_spark.operators import merge as merge_op
 from cdc_sink_spark.operators import msort, script, sequencer
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations, prepare_mutations
 from cdc_sink_spark.sources import cdcjson
+from cdc_sink_spark.session import release_checkpoint
 from cdc_sink_spark.session import spread as _spread
 
 # Shared SQL fragment: the mutation stream derived from events.
@@ -1160,6 +1161,7 @@ def objstore_scan_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i < len(OBJSTORE_CUTS):  # the tail range has no RESOLVED marker
             with open(_os.path.join(root, f"{i:03d}-zz.RESOLVED"), "w") as fh:
                 fh.write(_json.dumps({"resolved": f"{hi}.0000000000"}) + "\n")
+    release_checkpoint(rendered)
 
     state = {"snap": _target(spark, sf_dir), "frontier": None}
 

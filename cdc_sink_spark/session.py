@@ -177,3 +177,13 @@ def table(spark: SparkSession, sf_dir: str, name: str):
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         _TABLE_CACHE[key] = df
     return df
+
+
+def release_checkpoint(df) -> None:
+    """Free the executor blocks behind a ``localCheckpoint`` frame.
+
+    ``df.unpersist()`` and ``df.rdd.unpersist()`` leave them pinned:
+    the blocks belong to the RDD inside the frame's ``LogicalRDD`` plan
+    node, which otherwise lives until a JVM garbage collection lets the
+    context cleaner find it unreachable."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)

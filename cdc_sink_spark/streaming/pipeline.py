@@ -16,15 +16,17 @@ unstages work at/below the resolved frontier.
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cdc_sink_spark.operators import decorators
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
+from cdc_sink_spark.session import release_checkpoint
 from cdc_sink_spark.sources import cdcjson
 
 
@@ -134,39 +136,78 @@ def _write_schema_sentinel(df: DataFrame, path: str) -> None:
     pq.write_table(df.limit(0).toArrow(), os.path.join(sdir, "schema-sentinel.parquet"))
 
 
-def _overwrite_touched_buckets(out: DataFrame, target_path: str, touched: list[int]) -> None:
-    """Dynamic-partition-overwrite `out` (carrying __kb) into the target,
-    then delete touched partitions the apply left EMPTY — dynamic mode
-    only replaces partitions PRESENT in the written data, so a bucket
-    whose every row was deleted would otherwise keep its stale file
-    (found by the bucketed-vs-legacy property test)."""
-    import shutil
+class TargetStore:
+    """The parquet target of both streaming appliers: its layout, the
+    read an apply starts from, and the commit of the result.
 
-    present = {r[0] for r in out.select("__kb").distinct().collect()}
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__kb")
-        .parquet(target_path)
-    )
-    for b in set(touched) - present:
-        shutil.rmtree(os.path.join(target_path, f"__kb={b}"), ignore_errors=True)
+    With ``n_buckets`` the target is partitioned by key bucket ``__kb``
+    (``init_bucketed_target``). Mutations only change rows in their own
+    keys' buckets, so the read is pruned to the touched buckets and the
+    commit rewrites exactly those. Without ``n_buckets`` the commit swaps
+    in the whole snapshot (the local stand-in for a transactional UPSERT;
+    under Delta/Iceberg the apply plan is the same either way).
+    """
+
+    def __init__(self, path: str, key_cols: list[str], n_buckets: int | None):
+        self.path = path
+        self.bucket = bucket_col(key_cols, n_buckets) if n_buckets else None
+
+    def aggregate(self, frame: DataFrame, *aggs) -> tuple:
+        """``frame.agg(*aggs)`` with the buckets ``frame`` touches
+        collected in the same job. Returns the row and the touched bucket
+        ids (None when unbucketed); runs no job with nothing to compute."""
+        if self.bucket is not None:
+            aggs = (*aggs, F.collect_set(self.bucket).alias("__touched"))
+        if not aggs:
+            return None, None
+        row = frame.agg(*aggs).first()
+        return row, (row["__touched"] if self.bucket is not None else None)
+
+    def read(self, spark: SparkSession, touched: list[int] | None) -> DataFrame:
+        target = spark.read.parquet(self.path)
+        if self.bucket is None:
+            return target
+        return target.filter(F.col("__kb").isin(touched)).drop("__kb")
+
+    def commit(self, snapshot: DataFrame, touched: list[int] | None) -> None:
+        """Replace what ``read`` returned with ``snapshot``. The
+        snapshot's lineage reads the target, so it is materialized
+        before anything under ``path`` is replaced."""
+        if self.bucket is None:
+            nxt, prev = self.path + ".next", self.path + ".prev"
+            shutil.rmtree(nxt, ignore_errors=True)
+            snapshot.write.parquet(nxt)
+            os.rename(self.path, prev)
+            os.rename(nxt, self.path)
+            shutil.rmtree(prev)
+            return
+        out = snapshot.withColumn("__kb", self.bucket).localCheckpoint(eager=True)
+        # Dynamic overwrite replaces only the buckets present in `out`, so
+        # a touched bucket the batch emptied would keep its stale files.
+        # The write job itself observes which buckets it wrote.
+        present = Observation()
+        (
+            out.observe(present, F.collect_set("__kb").alias("kb"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__kb")
+            .parquet(self.path)
+        )
+        for b in set(touched) - set(present.get["kb"]):
+            shutil.rmtree(os.path.join(self.path, f"__kb={b}"), ignore_errors=True)
+        release_checkpoint(out)
 
 
 class StreamingApplier:
     """foreachBatch sink: applies each micro-batch onto a parquet target
     snapshot via the batch apply operator (sequencer/immediate shape).
 
-    With ``n_buckets`` set, the target is partitioned by a key-hash
-    bucket column (``init_bucketed_target``) and each micro-batch
-    (a) prunes the target read to the buckets its keys hash into and
-    (b) rewrites ONLY those partitions via dynamic partition overwrite —
-    rewrite volume is proportional to touched buckets, not table size.
-    Mutations can only affect rows in their own key's bucket, so
-    untouched partitions are unaffected by construction. Without
-    ``n_buckets`` the legacy whole-snapshot rewrite remains (the
-    local[*] stand-in for a transactional UPSERT; under Delta/Iceberg
-    the apply plan is identical either way).
+    The target is a ``TargetStore``. With ``n_buckets`` set, the buckets
+    a micro-batch touches are collected by the aggregate that also finds
+    its max HLC; the store reads and rewrites only those, and deletes any
+    the batch emptied, which the write job reports through ``df.observe``.
+    Untouched buckets are never read or rewritten. Without ``n_buckets``
+    the store swaps in the whole snapshot.
     """
 
     def __init__(
@@ -181,7 +222,7 @@ class StreamingApplier:
         staging=None,  # operators.staging.StagingTable: once/marker replay guard
         n_buckets: int | None = None,  # target partitioned by key bucket
     ):
-        self.target_path = target_path
+        self.store = TargetStore(target_path, key_cols, n_buckets)
         self.key_cols = key_cols
         self.cfg = cfg
         self.tie_breaker = tie_breaker
@@ -189,7 +230,6 @@ class StreamingApplier:
         self.target_table = target_table
         self.checkpoints = checkpoints
         self.staging = staging
-        self.n_buckets = n_buckets
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -199,24 +239,21 @@ class StreamingApplier:
             # replays the micro-batch; the applied ledger makes the
             # replay a no-op instead of a double-apply/double-DLQ.
             batch = self.staging.filter_applied(batch, self.key_cols, ts_col="__ts")
-        target = spark.read.parquet(self.target_path)
-        if self.n_buckets:
-            # Partition-prune the target to the touched buckets only.
-            # The distinct bucket list is micro-batch-bounded (≤
-            # n_buckets ints) — the same class of driver action as the
-            # frontier agg below.
-            kb = bucket_col(self.key_cols, self.n_buckets)
-            touched = [
-                r[0] for r in batch.select(kb.alias("__kb")).distinct().collect()
-            ]
-            target = target.filter(F.col("__kb").isin(touched)).drop("__kb")
+        # One micro-batch-sized aggregate: the batch-max HLC and the
+        # touched buckets. It runs BEFORE mark_applied appends to the
+        # applied ledger this batch's filter_applied anti-join reads:
+        # correctness of the agg must not depend on Spark keeping the
+        # ledger's pre-append file listing cached across the append.
+        frontier = [F.max("__ts").alias("hlc")] if self.checkpoints is not None else []
+        stats, touched = self.store.aggregate(batch, *frontier)
         snapshot, rejected = apply_mutations(
-            target, batch, self.key_cols, self.cfg, tie_breaker=self.tie_breaker
+            self.store.read(spark, touched), batch, self.key_cols, self.cfg,
+            tie_breaker=self.tie_breaker,
         )
         if self.dlq is not None or self.staging is not None:
             # Materialize once: the DLQ append and the applied-ledger
             # anti-join below both consume it, and its lineage reads
-            # target_path, which the snapshot overwrite replaces.
+            # the target, which the commit replaces.
             rejected = rejected.localCheckpoint(eager=True)
         if self.dlq is not None:
             # Enqueue distributed and unconditionally: the DLQ itself
@@ -224,31 +261,7 @@ class StreamingApplier:
             # empty reject set, so the steady-state cost here is one
             # cheap materialization of an (almost always empty) frame.
             self.dlq.enqueue(rejected, self.target_table)
-        if self.n_buckets:
-            # Touched-bucket rows only; materialize (the lineage reads
-            # the partitions about to be replaced), then replace exactly
-            # those partitions (including deleting emptied ones).
-            out = snapshot.withColumn(
-                "__kb", bucket_col(self.key_cols, self.n_buckets)
-            ).localCheckpoint(eager=True)
-            _overwrite_touched_buckets(out, self.target_path, touched)
-        else:
-            tmp = self.target_path + f".b{batch_id}"
-            snapshot.write.mode("overwrite").parquet(tmp)
-            final = spark.read.parquet(tmp)
-            final.write.mode("overwrite").parquet(self.target_path)
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-        # Collect the batch-max HLC BEFORE mark_applied appends to the
-        # applied ledger this batch's filter_applied anti-join reads:
-        # correctness of the agg must not depend on Spark keeping the
-        # ledger's pre-append file listing cached across the append.
-        mx = None
-        if self.checkpoints is not None:
-            mx = batch.agg(
-                F.max(F.struct(F.col("__ts.nanos"), F.col("__ts.logical"))).alias("m")
-            ).first()["m"]
+        self.store.commit(snapshot, touched)
         if self.staging is not None:
             # marker-decorator: record the batch applied only after the
             # snapshot write landed (crash before this line -> replay is
@@ -259,17 +272,17 @@ class StreamingApplier:
                 batch, rejected, self.key_cols, ts_col="__ts"
             )
             self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")
-        if self.checkpoints is not None:
+        if self.checkpoints is not None and stats["hlc"] is not None:
             # Durable applied-through frontier (staging/checkpoint): the
             # batch max HLC becomes the partition mark AFTER the snapshot
             # write lands, so a restart resumes from a timestamp whose
-            # effects are guaranteed on disk. The agg is micro-batch-sized.
-            if mx is not None:
-                cur = self.checkpoints.resolved(self.target_table)
-                if cur is None or (mx[0], mx[1]) > cur:
-                    # pass cur: advance() then skips its own re-read of
-                    # the memo log (one scan per batch, not three)
-                    self.checkpoints.advance(self.target_table, mx[0], mx[1], cur=cur)
+            # effects are guaranteed on disk.
+            mx = stats["hlc"]
+            cur = self.checkpoints.resolved(self.target_table)
+            if cur is None or (mx[0], mx[1]) > cur:
+                # pass cur: advance() then skips its own re-read of
+                # the memo log (one scan per batch, not three)
+                self.checkpoints.advance(self.target_table, mx[0], mx[1], cur=cur)
 
 
 def run_pipeline_once(
@@ -342,7 +355,7 @@ class ModeSwitchingApplier:
         # None -> an implicit durable queue at parked_path + "_dlq" is
         # created on first use (finals are never silently dropped)
     ):
-        self.target_path = target_path
+        self.store = TargetStore(target_path, key_cols, n_buckets)
         self.key_cols = key_cols
         self.parked_path = parked_path
         self.cfg = cfg
@@ -352,7 +365,6 @@ class ModeSwitchingApplier:
         self.resolved_dir = resolved_dir
         self.checkpoints = checkpoints
         self.target_table = target_table
-        self.n_buckets = n_buckets
         self.dlq = dlq
         self.mode_history: list[tuple[int, str]] = []
 
@@ -378,38 +390,30 @@ class ModeSwitchingApplier:
         else:
             parked = batch.limit(0)
         work = batch.unionByName(parked)
-        # ONE micro-batch-sized agg feeds the whole mode decision
-        # (backlog depth + newest mutation ts), not a count() plus a
-        # separate max() pass over the same work set.
-        stats = work.agg(
-            F.count(F.lit(1)).alias("n"), F.max("__ts.nanos").alias("hi")
-        ).first()
-        backlog = stats["n"]
+        # ONE micro-batch-sized agg feeds the whole mode decision (backlog
+        # depth + newest mutation ts) and finds the touched buckets: those
+        # of the WORK set, since any parked row can drain this batch.
+        stats, touched = self.store.aggregate(
+            work, F.count(F.lit(1)).alias("n"), F.max("__ts.nanos").alias("hi")
+        )
         resolved = self._resolved_stamps(spark)
-        lag = 0
+        lag, fr = 0, None
         if resolved is not None:
-            # Resolved-timestamp lag: newest mutation vs newest frontier
-            # stamp (group.go flips to besteffort when the frontier falls
-            # too far behind the incoming feed).
-            hi = stats["hi"] or 0
-            fr = resolved.agg(F.max("ts.nanos")).first()[0] or 0
-            lag = max(0, hi - fr)
+            # The newest frontier stamp, read once: the mode decision's
+            # lag and the mark checkpoints.advance records are the same
+            # stamp. Lag is newest mutation vs newest frontier stamp
+            # (group.go flips to besteffort when the frontier falls too
+            # far behind the incoming feed).
+            fr = resolved.agg(F.max("ts")).first()[0]
+            lag = max(0, (stats["hi"] or 0) - (fr[0] if fr is not None else 0))
         mode = sequencer.switcher_mode(
-            backlog, lag, backlog_limit=self.backlog_limit,
+            stats["n"], lag, backlog_limit=self.backlog_limit,
             lag_limit_nanos=self.lag_limit_nanos,
         )
         if mode == "serial" and resolved is None:
             mode = "immediate"  # no frontier feed: core degenerates
         self.mode_history.append((batch_id, mode))
-        target = spark.read.parquet(self.target_path)
-        if self.n_buckets:
-            # Touched buckets come from the WORK set (batch ∪ parked):
-            # any parked row can drain this batch, so its bucket counts
-            # as touched. The bucket list is work-sized, bounded by
-            # n_buckets distinct ints.
-            kb = bucket_col(self.key_cols, self.n_buckets)
-            touched = [r[0] for r in work.select(kb.alias("__kb")).distinct().collect()]
-            target = target.filter(F.col("__kb").isin(touched)).drop("__kb")
+        target = self.store.read(spark, touched)
         if mode == "serial":
             # Plain LWW collapses all covered windows into one apply;
             # with CAS configured the per-window ratchet is semantic —
@@ -465,31 +469,16 @@ class ModeSwitchingApplier:
                     final.withColumnRenamed("__park_reason", "__reason"),
                     self.target_table,
                 )
-        if self.n_buckets:
-            out = snapshot.withColumn(
-                "__kb", bucket_col(self.key_cols, self.n_buckets)
-            ).localCheckpoint(eager=True)
-            _overwrite_touched_buckets(out, self.target_path, touched)
-        else:
-            tmp = self.target_path + f".b{batch_id}"
-            snapshot.write.mode("overwrite").parquet(tmp)
-            spark.read.parquet(tmp).write.mode("overwrite").parquet(self.target_path)
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+        self.store.commit(snapshot, touched)
         # The parked store stays a whole-store rewrite: it is
         # FAILURE-sized (shrinks to zero in steady state), so the rewrite
         # volume is already proportional to the parked backlog, never to
         # the table.
         left_over.write.mode("overwrite").parquet(self.parked_path)
-        if self.checkpoints is not None and resolved is not None:
-            fr = resolved.agg(
-                F.max(F.struct(F.col("ts.nanos"), F.col("ts.logical")))
-            ).first()[0]
-            if fr is not None:
-                cur = self.checkpoints.resolved(self.target_table)
-                if cur is None or (fr[0], fr[1]) > cur:
-                    self.checkpoints.advance(self.target_table, fr[0], fr[1], cur=cur)
+        if self.checkpoints is not None and fr is not None:
+            cur = self.checkpoints.resolved(self.target_table)
+            if cur is None or (fr[0], fr[1]) > cur:
+                self.checkpoints.advance(self.target_table, fr[0], fr[1], cur=cur)
 
 
 def streaming_dedup_time_key(

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -1079,6 +1080,133 @@ def test_mode_switcher_bucketed_target(spark, tmp_path):
             assert got == fs, f"untouched {d} was rewritten"
     out = {r.id: r.v for r in spark.read.parquet(target).drop("__kb").collect()}
     assert out[3] == 100.0 and len(out) == 64
+
+
+_MUT_SCHEMA = "id bigint, v string, __ts struct<nanos:long, logical:int>, __deleted boolean"
+
+
+def _muts(spark, rows):
+    """(id, v, nanos) triples as a mutation frame; v=None is a delete."""
+    return spark.createDataFrame(
+        [Row(id=i, v=v, __ts=Row(nanos=n, logical=0), __deleted=v is None) for i, v, n in rows],
+        _MUT_SCHEMA,
+    )
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, read from the status tracker under a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bucketed_appliers_job_count(spark, tmp_path):
+    """One steady-state micro-batch through each bucketed applier, wired
+    as a deployment would be, runs a pinned number of Spark jobs. The
+    touched buckets ride the stats aggregate each applier already runs,
+    and the set of buckets the commit leaves non-empty rides the commit
+    write itself, so neither runs a job of its own."""
+    from cdc_sink_spark.operators.checkpoint import CheckpointGroup
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+    from cdc_sink_spark.operators.memo import Memo
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    seed = spark.createDataFrame(
+        [Row(id=i, v=f"seed{i}") for i in range(64)], "id bigint, v string"
+    )
+    warm = _muts(spark, [(5, "w", 3), (6, None, 4)])
+    batch = _muts(spark, [(1, "new1", 5), (2, None, 6), (999, "ins", 7)])
+
+    def store(name):
+        return str(tmp_path / name)
+
+    pipeline.init_bucketed_target(seed, store("t1"), ["id"], 8)
+    streaming = pipeline.StreamingApplier(
+        store("t1"), ["id"],
+        dlq=DeadLetterQueue(spark, store("dlq")),
+        target_table="t",
+        checkpoints=CheckpointGroup(Memo(spark, store("memo1")), "t"),
+        staging=StagingTable(spark, store("staging")),
+        n_buckets=8,
+    )
+    os.makedirs(store("resolved"))
+    with open(os.path.join(store("resolved"), "r.json"), "w") as f:
+        f.write(json.dumps({"resolved": "10.0000000000"}) + "\n")
+    pipeline.init_bucketed_target(seed, store("t2"), ["id"], 8)
+    switching = pipeline.ModeSwitchingApplier(
+        store("t2"), ["id"], store("parked"),
+        backlog_limit=100, lag_limit_nanos=1 << 60,
+        resolved_dir=store("resolved"),
+        checkpoints=CheckpointGroup(Memo(spark, store("memo2")), "t"),
+        target_table="t",
+        n_buckets=8,
+    )
+    streaming(warm, 0)
+    switching(warm, 0)
+    counts = (
+        _job_count(spark, lambda: streaming(batch, 1)),
+        _job_count(spark, lambda: switching(batch, 1)),
+    )
+    assert switching.mode_history[-1] == (1, "serial")
+    assert counts == (14, 16)
+
+
+def _bucket_files(target):
+    """Bucket directory -> {file name: bytes} (schema sentinel included)."""
+    out = {}
+    for d in os.listdir(target):
+        if d.startswith("__kb="):
+            p = os.path.join(target, d)
+            out[d] = {}
+            for f in os.listdir(p):
+                with open(os.path.join(p, f), "rb") as fh:
+                    out[d][f] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("kind", ["streaming", "mode_switching"])
+def test_bucketed_applier_deletes_emptied_bucket(spark, tmp_path, kind):
+    """A micro-batch that deletes every row of one bucket removes that
+    bucket's directory: a dynamic partition overwrite only replaces the
+    buckets present in what it writes, so the applier must drop the
+    emptied one itself. Every bucket the batch did not touch stays
+    byte-identical."""
+    target = str(tmp_path / "target")
+    seed = spark.createDataFrame(
+        [Row(id=i, v=f"seed{i}") for i in range(64)], "id bigint, v string"
+    )
+    pipeline.init_bucketed_target(seed, target, ["id"], 8)
+    kb = {r.id: r.b for r in seed.select("id", pipeline.bucket_col(["id"], 8).alias("b")).collect()}
+    emptied = kb[0]
+    doomed = sorted(i for i, b in kb.items() if b == emptied)
+    kept = next(i for i, b in kb.items() if b != emptied)
+    batch = _muts(spark, [(i, None, 5) for i in doomed] + [(kept, "upd", 6)])
+    before = _bucket_files(target)
+    if kind == "streaming":
+        applier = pipeline.StreamingApplier(target, ["id"], n_buckets=8)
+    else:
+        applier = pipeline.ModeSwitchingApplier(
+            target, ["id"], str(tmp_path / "parked"), n_buckets=8
+        )
+    applier(batch, 0)
+    after = _bucket_files(target)
+    assert f"__kb={emptied}" not in after
+    for d in set(before) - {f"__kb={emptied}", f"__kb={kb[kept]}"}:
+        assert after[d] == before[d], f"untouched {d} was rewritten"
+    out = {r.id: r.v for r in spark.read.parquet(target).drop("__kb").collect()}
+    expect = {i: f"seed{i}" for i in range(64) if i not in doomed}
+    expect[kept] = "upd"
+    assert out == expect
 
 
 def test_save_offsets_respects_unflushed_tail(spark, tmp_path):

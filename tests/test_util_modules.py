@@ -470,3 +470,20 @@ def test_bench_hot_paths_pay_no_rdd_probe(spark, sf_dir):
         assert fn is not None, name
         fn(spark, sf_dir)  # construction only; no materialization
         assert S._RDD_PROBES == before, f"{name} paid an rdd probe"
+
+
+def test_release_checkpoint_frees_blocks(spark):
+    """release_checkpoint frees a localCheckpoint's executor blocks, which
+    df.unpersist() leaves pinned."""
+    from cdc_sink_spark.session import release_checkpoint
+
+    df = spark.range(100).localCheckpoint(eager=True)
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+
+    def pinned():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().contains(rdd_id)
+
+    df.unpersist()
+    assert pinned()
+    release_checkpoint(df)
+    assert not pinned()
