@@ -82,8 +82,6 @@ def with_marker(accept: Acceptor, staging, ts_col: str = "ts") -> Acceptor:
     out of the ledger on (key, ts), so a DLQ replay or a best-effort
     retry of a parked mutation is not silently dropped by once()
     (marker.go marks exactly the batch the target transaction took).
-    ``rejected`` is materialized too, so the returned handle and the
-    ledger anti-join don't re-run the apply lineage.
     """
 
     def wrapped(target, muts, key_cols, *args, **kw):
@@ -122,7 +120,7 @@ def mark_exclude_rejected(
     rej = rejected.select(
         *[F.col(k).alias(f"__rj_{k}") for k in key_cols],
         F.col(rej_ts).alias("__rj_ts"),
-    ).localCheckpoint(eager=True)
+    )
     cond = muts[ts_col] == rej["__rj_ts"]
     for k in key_cols:
         cond = cond & (muts[k] == rej[f"__rj_{k}"])

@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_sink_spark.session import release_checkpoint
 
 
 class DeadLetterQueue:
@@ -36,32 +38,40 @@ class DeadLetterQueue:
         # Dedupe WITHIN the batch too: deadline-expired rows split off
         # before LWW dedup, so one batch can carry per-key duplicates of
         # the same rejection — without this they each append an identical
-        # DLQ entry. Checkpoint so the distinct-reason probe below and
-        # the write don't recompute the (possibly joined) reject lineage.
-        out = out.dropDuplicates(["target_table", "reason", "payload"]).localCheckpoint()
-        if os.path.isdir(self.path) and out.isEmpty():
-            # Steady-state streaming calls enqueue per micro-batch with a
-            # usually-empty reject set: skip the reason probe + append
-            # once the queue dir exists (a first-time empty enqueue still
-            # writes, so read() keeps working on an all-clean pipeline).
-            return
-        if os.path.isdir(self.path):
-            # Idempotent on the full rendered row: a crash-replayed
-            # micro-batch re-rejects the same mutations (rejected rows
-            # deliberately stay out of the applied ledger so DLQ replay
-            # can converge), and re-enqueueing them would duplicate DLQ
-            # entries. The reference keeps ONE staged row per failed
-            # mutation; the anti-join against the existing queue is the
-            # append-only equivalent. The queue scan is pruned to the
-            # reason PARTITIONS present in this batch (reasons are a
-            # handful of literals — 'cas', 'deadline', 'merge' — so the
-            # collect is constant-sized) so the read stays bounded by
-            # this batch's failure classes, not total queue history.
-            reasons = [r[0] for r in out.select("reason").distinct().collect()]
-            if reasons:
-                existing = self.read().filter(F.col("reason").isin(reasons))
+        # DLQ entry. Checkpoint so the write doesn't recompute the
+        # (possibly joined) reject lineage; the same job observes the
+        # row count and the reasons present.
+        seen = Observation()
+        rendered = (
+            out.dropDuplicates(["target_table", "reason", "payload"])
+            .observe(seen, F.count(F.lit(1)).alias("n"), F.collect_set("reason").alias("reasons"))
+            .localCheckpoint()
+        )
+        out = rendered
+        try:
+            if os.path.isdir(self.path):
+                if seen.get["n"] == 0:
+                    # Steady-state streaming calls enqueue per micro-batch
+                    # with a usually-empty reject set: skip the append once
+                    # the queue dir exists (a first-time empty enqueue still
+                    # writes, so read() keeps working on an all-clean
+                    # pipeline).
+                    return
+                # Idempotent on the full rendered row: a crash-replayed
+                # micro-batch re-rejects the same mutations (rejected rows
+                # deliberately stay out of the applied ledger so DLQ replay
+                # can converge), and re-enqueueing them would duplicate DLQ
+                # entries. The reference keeps ONE staged row per failed
+                # mutation; the anti-join against the existing queue is the
+                # append-only equivalent. The queue scan is pruned to the
+                # reason PARTITIONS present in this batch, so the read
+                # stays bounded by this batch's failure classes, not total
+                # queue history.
+                existing = self.read().filter(F.col("reason").isin(seen.get["reasons"]))
                 out = out.join(existing, ["target_table", "reason", "payload"], "left_anti")
-        out.write.mode("append").partitionBy("reason").parquet(self.path)
+            out.write.mode("append").partitionBy("reason").parquet(self.path)
+        finally:
+            release_checkpoint(rendered)
 
     # Fixed schema (dlq_schema.go): also lets read() work on a DLQ dir
     # that exists but holds no part files yet (an all-clean pipeline run

@@ -58,11 +58,13 @@ class StagingTable:
         return muts.join(applied, cond, "left_anti")
 
     def mark_applied(self, muts: DataFrame, key_cols: list[str], ts_col: str = "ts") -> None:
-        """Record mutations as applied (Stager.MarkApplied)."""
+        """Record mutations as applied (Stager.MarkApplied). Each call
+        appends one file, not one per shuffle partition: ``filter_applied``
+        lists and reads every file of the ledger."""
         ledger = muts.select(
             *[F.col(k).alias(f"a_{k}") for k in key_cols], F.col(ts_col).alias("a_ts")
         )
-        ledger.write.mode("append").parquet(self.applied_path)
+        ledger.coalesce(1).write.mode("append").parquet(self.applied_path)
 
     def retire(self, end_nanos: int) -> None:
         """Delete staged mutations with ts <= end (Stager.Retire).

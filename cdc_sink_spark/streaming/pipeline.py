@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import ExitStack
 from typing import Iterator
 
 import pandas as pd
@@ -146,22 +147,30 @@ class TargetStore:
     commit rewrites exactly those. Without ``n_buckets`` the commit swaps
     in the whole snapshot (the local stand-in for a transactional UPSERT;
     under Delta/Iceberg the apply plan is the same either way).
+
+    An applier materializes its micro-batch once, in a job that also
+    yields its stats and touched buckets (``materialize``); the bucketed
+    commit then writes the snapshot with no checkpoint of its own.
     """
 
     def __init__(self, path: str, key_cols: list[str], n_buckets: int | None):
         self.path = path
         self.bucket = bucket_col(key_cols, n_buckets) if n_buckets else None
 
-    def aggregate(self, frame: DataFrame, *aggs) -> tuple:
-        """``frame.agg(*aggs)`` with the buckets ``frame`` touches
-        collected in the same job. Returns the row and the touched bucket
-        ids (None when unbucketed); runs no job with nothing to compute."""
+    def materialize(self, frame: DataFrame, *aggs) -> tuple[DataFrame, dict, list[int] | None]:
+        """One eager ``localCheckpoint`` of ``frame`` whose job also
+        computes ``aggs``, the row count ``n`` and, when bucketed, the
+        buckets ``frame`` touches (all through ``df.observe``). Returns
+        the checkpointed frame, the stats by alias and the touched bucket
+        ids (None when unbucketed). The caller frees the frame with
+        ``release_checkpoint``."""
+        metrics = [*aggs, F.count(F.lit(1)).alias("n")]
         if self.bucket is not None:
-            aggs = (*aggs, F.collect_set(self.bucket).alias("__touched"))
-        if not aggs:
-            return None, None
-        row = frame.agg(*aggs).first()
-        return row, (row["__touched"] if self.bucket is not None else None)
+            metrics.append(F.collect_set(self.bucket).alias("__touched"))
+        obs = Observation()
+        frame = frame.observe(obs, *metrics).localCheckpoint(eager=True)
+        stats = obs.get
+        return frame, stats, stats.pop("__touched", None)
 
     def read(self, spark: SparkSession, touched: list[int] | None) -> DataFrame:
         target = spark.read.parquet(self.path)
@@ -170,9 +179,16 @@ class TargetStore:
         return target.filter(F.col("__kb").isin(touched)).drop("__kb")
 
     def commit(self, snapshot: DataFrame, touched: list[int] | None) -> None:
-        """Replace what ``read`` returned with ``snapshot``. The
-        snapshot's lineage reads the target, so it is materialized
-        before anything under ``path`` is replaced."""
+        """Replace what ``read`` returned with ``snapshot``, whose lineage
+        reads the target.
+
+        Unbucketed, the snapshot is written beside the target and swapped
+        in by rename. Bucketed, it is written straight through a dynamic
+        partition overwrite: Spark writes every task's output to a staging
+        directory and replaces the ``__kb=<b>`` directories only at job
+        commit, after every task that reads the target has finished, so
+        the write may read the buckets it replaces. A job that fails
+        leaves every bucket as it was."""
         if self.bucket is None:
             nxt, prev = self.path + ".next", self.path + ".prev"
             shutil.rmtree(nxt, ignore_errors=True)
@@ -181,13 +197,13 @@ class TargetStore:
             os.rename(nxt, self.path)
             shutil.rmtree(prev)
             return
-        out = snapshot.withColumn("__kb", self.bucket).localCheckpoint(eager=True)
-        # Dynamic overwrite replaces only the buckets present in `out`, so
-        # a touched bucket the batch emptied would keep its stale files.
-        # The write job itself observes which buckets it wrote.
+        # Dynamic overwrite replaces only the buckets present in the
+        # output, so a touched bucket the batch emptied would keep its
+        # stale files. The write job itself observes which it wrote.
         present = Observation()
         (
-            out.observe(present, F.collect_set("__kb").alias("kb"))
+            snapshot.withColumn("__kb", self.bucket)
+            .observe(present, F.collect_set("__kb").alias("kb"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__kb")
@@ -195,19 +211,21 @@ class TargetStore:
         )
         for b in set(touched) - set(present.get["kb"]):
             shutil.rmtree(os.path.join(self.path, f"__kb={b}"), ignore_errors=True)
-        release_checkpoint(out)
 
 
 class StreamingApplier:
     """foreachBatch sink: applies each micro-batch onto a parquet target
     snapshot via the batch apply operator (sequencer/immediate shape).
 
-    The target is a ``TargetStore``. With ``n_buckets`` set, the buckets
-    a micro-batch touches are collected by the aggregate that also finds
-    its max HLC; the store reads and rewrites only those, and deletes any
-    the batch emptied, which the write job reports through ``df.observe``.
-    Untouched buckets are never read or rewritten. Without ``n_buckets``
-    the store swaps in the whole snapshot.
+    The target is a ``TargetStore``. Each micro-batch, after the applied
+    ledger's anti-join, is materialized once by ``TargetStore.materialize``,
+    whose job also finds its max HLC and touched buckets; the apply, the
+    DLQ, the commit and the ledger mark all read that checkpoint, and the
+    call frees every checkpoint it takes before it returns. With
+    ``n_buckets`` set, the store reads and rewrites only the touched
+    buckets and deletes any the batch emptied, which the write job reports
+    through ``df.observe``. Untouched buckets are never read or rewritten.
+    Without ``n_buckets`` the store swaps in the whole snapshot.
     """
 
     def __init__(
@@ -237,41 +255,44 @@ class StreamingApplier:
             # once-decorator semantics (sequencer/decorators/once.go): a
             # crash between snapshot write and stream-checkpoint commit
             # replays the micro-batch; the applied ledger makes the
-            # replay a no-op instead of a double-apply/double-DLQ.
+            # replay a no-op instead of a double-apply/double-DLQ. The
+            # ledger is keyed by (key, HLC), not by batch: the target
+            # carries no HLC, so only this anti-join stops a redelivered
+            # older mutation in a LATER micro-batch from overwriting a
+            # newer row.
             batch = self.staging.filter_applied(batch, self.key_cols, ts_col="__ts")
-        # One micro-batch-sized aggregate: the batch-max HLC and the
-        # touched buckets. It runs BEFORE mark_applied appends to the
-        # applied ledger this batch's filter_applied anti-join reads:
-        # correctness of the agg must not depend on Spark keeping the
-        # ledger's pre-append file listing cached across the append.
+        # Materialized BEFORE mark_applied appends to the ledger the
+        # anti-join above reads, so nothing below re-runs the anti-join
+        # (or the source's parse) against a changed ledger listing.
         frontier = [F.max("__ts").alias("hlc")] if self.checkpoints is not None else []
-        stats, touched = self.store.aggregate(batch, *frontier)
-        snapshot, rejected = apply_mutations(
-            self.store.read(spark, touched), batch, self.key_cols, self.cfg,
-            tie_breaker=self.tie_breaker,
-        )
-        if self.dlq is not None or self.staging is not None:
-            # Materialize once: the DLQ append and the applied-ledger
-            # anti-join below both consume it, and its lineage reads
-            # the target, which the commit replaces.
-            rejected = rejected.localCheckpoint(eager=True)
-        if self.dlq is not None:
-            # Enqueue distributed and unconditionally: the DLQ itself
-            # checkpoints its rendered frame once and early-outs on an
-            # empty reject set, so the steady-state cost here is one
-            # cheap materialization of an (almost always empty) frame.
-            self.dlq.enqueue(rejected, self.target_table)
-        self.store.commit(snapshot, touched)
-        if self.staging is not None:
-            # marker-decorator: record the batch applied only after the
-            # snapshot write landed (crash before this line -> replay is
-            # filtered next time by LWW idempotence, not double-marked).
-            # Rejected mutations stay OUT of the ledger so a DLQ replay
-            # or retry isn't silently dropped by filter_applied.
-            applied = decorators.mark_exclude_rejected(
-                batch, rejected, self.key_cols, ts_col="__ts"
+        batch, stats, touched = self.store.materialize(batch, *frontier)
+        with ExitStack() as pinned:
+            pinned.callback(release_checkpoint, batch)
+            snapshot, rejected = apply_mutations(
+                self.store.read(spark, touched), batch, self.key_cols, self.cfg,
+                tie_breaker=self.tie_breaker,
             )
-            self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")
+            if self.staging is not None:
+                # The ledger anti-join below reads the rejects after the
+                # commit has replaced the target their lineage reads.
+                rejected = rejected.localCheckpoint(eager=True)
+                pinned.callback(release_checkpoint, rejected)
+            if self.dlq is not None:
+                # Enqueue distributed and unconditionally: the DLQ itself
+                # checkpoints its rendered frame once and early-outs on an
+                # empty reject set.
+                self.dlq.enqueue(rejected, self.target_table)
+            self.store.commit(snapshot, touched)
+            if self.staging is not None:
+                # marker-decorator: record the batch applied only after the
+                # snapshot write landed (crash before this line -> replay is
+                # filtered next time by LWW idempotence, not double-marked).
+                # Rejected mutations stay OUT of the ledger so a DLQ replay
+                # or retry isn't silently dropped by filter_applied.
+                applied = decorators.mark_exclude_rejected(
+                    batch, rejected, self.key_cols, ts_col="__ts"
+                )
+                self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")
         if self.checkpoints is not None and stats["hlc"] is not None:
             # Durable applied-through frontier (staging/checkpoint): the
             # batch max HLC becomes the partition mark AFTER the snapshot
@@ -379,23 +400,26 @@ class ModeSwitchingApplier:
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        from cdc_sink_spark.operators import sequencer
-
         spark = batch.sparkSession
-        # Materialize once: counted for the mode decision, unioned into
-        # the work set, and (post-overwrite) written back as parked.
-        batch = batch.localCheckpoint(eager=True)
         if os.path.isdir(self.parked_path):
             parked = spark.read.schema(batch.schema).parquet(self.parked_path)
         else:
             parked = batch.limit(0)
-        work = batch.unionByName(parked)
-        # ONE micro-batch-sized agg feeds the whole mode decision (backlog
-        # depth + newest mutation ts) and finds the touched buckets: those
-        # of the WORK set, since any parked row can drain this batch.
-        stats, touched = self.store.aggregate(
-            work, F.count(F.lit(1)).alias("n"), F.max("__ts.nanos").alias("hi")
+        # Materialize the WORK set once: the sequencer reads it, and what
+        # it leaves over is written back to the parked store it reads. The
+        # same job yields the whole mode decision's input (backlog depth +
+        # newest mutation ts) and the touched buckets: those of the work
+        # set, since any parked row can drain this batch.
+        work, stats, touched = self.store.materialize(
+            batch.unionByName(parked), F.max("__ts.nanos").alias("hi")
         )
+        with ExitStack() as pinned:
+            pinned.callback(release_checkpoint, work)
+            self._apply(spark, work, stats, touched, batch_id, pinned)
+
+    def _apply(self, spark, work, stats, touched, batch_id, pinned: ExitStack) -> None:
+        from cdc_sink_spark.operators import sequencer
+
         resolved = self._resolved_stamps(spark)
         lag, fr = 0, None
         if resolved is not None:
@@ -438,6 +462,7 @@ class ModeSwitchingApplier:
                 tie_breaker=self.tie_breaker, with_reason=True,
             )
         left_over = left_over.localCheckpoint(eager=True)
+        pinned.callback(release_checkpoint, left_over)
         if "__park_reason" in left_over.columns:
             # CAS- and deadline-rejected mutations are FINAL under this
             # class's own semantics (the CAS ratchet only rises, time only

@@ -97,6 +97,26 @@ def test_staging_roundtrip(spark, tmp_path):
     assert {r.ts.nanos >> 41 for r in st.read().collect()} == {3}
 
 
+def test_mark_applied_appends_one_file_per_call(spark, tmp_path):
+    """Each mark_applied call adds one ledger file, however many
+    partitions its input has, and filter_applied still returns exactly
+    the unapplied rows."""
+    st = staging.StagingTable(spark, str(tmp_path / "stage"))
+    muts = spark.createDataFrame(
+        [Row(key=f"k{i}", ts=Row(nanos=i, logical=0), data="v") for i in range(12)],
+        "key string, ts struct<nanos:long, logical:int>, data string",
+    ).repartition(4)
+    for lo in (0, 3, 6):
+        st.mark_applied(
+            muts.filter((F.col("ts.nanos") >= lo) & (F.col("ts.nanos") < lo + 3)), ["key"]
+        )
+    parts = [f for f in os.listdir(st.applied_path) if f.startswith("part-")]
+    assert len(parts) == 3
+    assert sorted(r.key for r in st.filter_applied(muts, ["key"]).collect()) == [
+        "k10", "k11", "k9"
+    ]
+
+
 def test_resolved_frontier(spark):
     staged = spark.createDataFrame(
         [Row(ts=Row(nanos=n, logical=0)) for n in (7, 9)],

@@ -1113,9 +1113,9 @@ def _job_count(spark, fn) -> int:
 def test_bucketed_appliers_job_count(spark, tmp_path):
     """One steady-state micro-batch through each bucketed applier, wired
     as a deployment would be, runs a pinned number of Spark jobs. The
-    touched buckets ride the stats aggregate each applier already runs,
-    and the set of buckets the commit leaves non-empty rides the commit
-    write itself, so neither runs a job of its own."""
+    batch's stats and touched buckets ride the one job that materializes
+    it, and the set of buckets the commit leaves non-empty rides the
+    commit write itself, so none of them runs a job of its own."""
     from cdc_sink_spark.operators.checkpoint import CheckpointGroup
     from cdc_sink_spark.operators.dlq import DeadLetterQueue
     from cdc_sink_spark.operators.memo import Memo
@@ -1158,7 +1158,7 @@ def test_bucketed_appliers_job_count(spark, tmp_path):
         _job_count(spark, lambda: switching(batch, 1)),
     )
     assert switching.mode_history[-1] == (1, "serial")
-    assert counts == (14, 16)
+    assert counts == (9, 13)
 
 
 def _bucket_files(target):
@@ -1207,6 +1207,90 @@ def test_bucketed_applier_deletes_emptied_bucket(spark, tmp_path, kind):
     expect = {i: f"seed{i}" for i in range(64) if i not in doomed}
     expect[kept] = "upd"
     assert out == expect
+
+
+def test_bucketed_commit_failure_leaves_target_intact(spark, tmp_path):
+    """The bucketed commit writes its snapshot straight over the buckets
+    the snapshot reads. A write job that fails part-way raises and leaves
+    every bucket directory byte-identical and the target readable: the
+    dynamic overwrite replaces buckets only at job commit."""
+    target = str(tmp_path / "target")
+    seed = spark.createDataFrame(
+        [Row(id=i, v=f"seed{i}") for i in range(64)], "id bigint, v string"
+    )
+    pipeline.init_bucketed_target(seed, target, ["id"], 8)
+    store = pipeline.TargetStore(target, ["id"], 8)
+    touched = list(range(8))
+    snapshot = store.read(spark, touched).withColumn(
+        "v", F.when(F.col("id") == 37, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+    before = _bucket_files(target)
+    with pytest.raises(Exception, match="boom"):
+        store.commit(snapshot, touched)
+    assert _bucket_files(target) == before
+    out = {r.id: r.v for r in spark.read.parquet(target).drop("__kb").collect()}
+    assert out == {i: f"seed{i}" for i in range(64)}
+
+
+def test_streaming_applier_ledger_guards_cross_batch_redelivery(spark, tmp_path):
+    """A mutation redelivered in a LATER micro-batch, under a new batch
+    id, must not overwrite the newer row an earlier batch applied: the
+    target carries no HLC, so only the applied ledger's (key, HLC)
+    anti-join can drop it."""
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    target = str(tmp_path / "target")
+    spark.createDataFrame([Row(id=0, v="seed")], "id bigint, v string").write.parquet(target)
+    applier = pipeline.StreamingApplier(
+        target, ["id"], staging=StagingTable(spark, str(tmp_path / "staging"))
+    )
+    applier(_muts(spark, [(1, "old", 5)]), 0)
+    applier(_muts(spark, [(1, "new", 6)]), 1)
+    applier(_muts(spark, [(1, "old", 5)]), 2)  # redelivered
+    out = {r.id: r.v for r in spark.read.parquet(target).collect()}
+    assert out == {0: "seed", 1: "new"}
+
+
+@pytest.mark.parametrize("kind", ["streaming", "mode_switching"])
+def test_applier_releases_its_checkpoints(spark, tmp_path, kind):
+    """A micro-batch leaves no RDD pinned behind it: every checkpoint the
+    applier takes (the materialized batch, the rejects, the DLQ's
+    rendered frame) is freed before the call returns, with the DLQ
+    writing CAS rejects."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+    from cdc_sink_spark.operators.checkpoint import CheckpointGroup
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+    from cdc_sink_spark.operators.memo import Memo
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    target = str(tmp_path / "target")
+    seed = spark.createDataFrame(
+        [Row(id=i, v=f"seed{i}") for i in range(64)], "id bigint, v string"
+    )
+    pipeline.init_bucketed_target(seed, target, ["id"], 8)
+    dlq = DeadLetterQueue(spark, str(tmp_path / "dlq"))
+    cfg = ApplyConfig(cas_columns=["v"])
+    if kind == "streaming":
+        applier = pipeline.StreamingApplier(
+            target, ["id"], cfg=cfg, dlq=dlq, target_table="t",
+            checkpoints=CheckpointGroup(Memo(spark, str(tmp_path / "memo")), "t"),
+            staging=StagingTable(spark, str(tmp_path / "staging")),
+            n_buckets=8,
+        )
+    else:
+        applier = pipeline.ModeSwitchingApplier(
+            target, ["id"], str(tmp_path / "parked"), cfg=cfg, dlq=dlq,
+            target_table="t", n_buckets=8,
+        )
+    # id 1: 'a' < 'seed1' is a CAS reject; id 2: 'zz' > 'seed2' applies.
+    batch = _muts(spark, [(1, "a", 5), (2, "zz", 6)])
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    applier(batch, 0)
+    assert set(rdds().keySet()) - before == set()
+    assert [r.reason for r in dlq.read().collect()] == ["cas"]
+    out = {r.id: r.v for r in spark.read.parquet(target).drop("__kb").collect()}
+    assert out[1] == "seed1" and out[2] == "zz"
 
 
 def test_save_offsets_respects_unflushed_tail(spark, tmp_path):
