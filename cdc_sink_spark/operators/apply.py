@@ -47,6 +47,12 @@ class ApplyConfig:
     # the target's current value instead of overwriting it.
     toast_sentinel: str | None = None
 
+    @property
+    def can_reject(self) -> bool:
+        """Whether ``apply_mutations`` can return a non-empty reject
+        frame: only a CAS rule or a deadline rejects a mutation."""
+        return bool(self.cas_columns or self.deadlines)
+
 
 def prepare_mutations(
     muts: DataFrame,

@@ -14,7 +14,7 @@ convergence check is a cheap count per round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -24,12 +24,10 @@ def connected_components(
     """(node, label) with label = min node id reachable (cluster id)."""
     # Materialize the symmetric edge list once: every iteration joins
     # against it, and without the checkpoint each round would re-execute
-    # the (possibly expensive) upstream pair-generation lineage.
-    # eager=False on every checkpoint in this loop (r13): the frames are
-    # still materialized-once (persist semantics), but materialization
-    # rides the NEXT action's job — the label-sum agg below — instead of
-    # each checkpoint scheduling its own standalone job. One job per
-    # round instead of two; identical data flow.
+    # the (possibly expensive) upstream pair-generation lineage. The edge
+    # list and the initial labels are checkpointed lazily (r13): they are
+    # materialized-once (persist semantics), but materialization rides
+    # round 1's job instead of each scheduling a standalone job.
     # Partition the symmetric edge list by the PER-ROUND JOIN KEY (dst)
     # while deduping it (r13): hash(dst) satisfies the dedup's
     # clustered-by-(src,dst) requirement, so one explicit repartition
@@ -55,23 +53,33 @@ def connected_components(
     )
     # Labels only ever DECREASE (min-propagation), so the label sum is a
     # strictly-decreasing potential until the fixed point: equal sums ==
-    # converged. Checking it is one map-side agg over the checkpointed
-    # labels — cheaper than the old join-new-vs-old change count (one
-    # fewer shuffle per round). Summed as decimal(38,0): bigint F.sum
-    # wraps silently at int64 overflow in non-ANSI mode, and with 64-bit
-    # hash node ids a wrap collision could fake a fixed point.
-    _label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_label_sum).first()[0]
+    # converged. Both sums ride each round's checkpoint job through
+    # df.observe, so a round is one job-bearing action. The node set
+    # never changes, so round 1's node sum is the initial label sum
+    # (every label starts as its own node). Summed as decimal(38,0):
+    # bigint F.sum wraps silently at int64 overflow in non-ANSI mode, and
+    # with 64-bit hash node ids a wrap collision could fake a fixed point.
+    prev_sum = None
     for _ in range(max_iter):
         # neighbor labels + own label, take the min per node
         neighbor = sym.join(labels, sym.dst == labels.node).select(
             F.col("src").alias("node"), "label"
         )
-        new_labels = (
-            labels.unionByName(neighbor).groupBy("node").agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=False)  # truncate lineage; materialized by the agg below
-        cur_sum = new_labels.agg(_label_sum).first()[0]
-        labels = new_labels
+        sums = Observation()
+        labels = (
+            labels.unionByName(neighbor)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .observe(
+                sums,
+                F.sum(F.col("label").cast("decimal(38,0)")).alias("label"),
+                F.sum(F.col("node").cast("decimal(38,0)")).alias("node"),
+            )
+            .localCheckpoint(eager=True)  # truncate lineage
+        )
+        if prev_sum is None:
+            prev_sum = sums.get["node"]
+        cur_sum = sums.get["label"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

@@ -49,36 +49,36 @@ class DeadLetterQueue:
         )
         out = rendered
         try:
-            if os.path.isdir(self.path):
-                if seen.get["n"] == 0:
-                    # Steady-state streaming calls enqueue per micro-batch
-                    # with a usually-empty reject set: skip the append once
-                    # the queue dir exists (a first-time empty enqueue still
-                    # writes, so read() keeps working on an all-clean
-                    # pipeline).
-                    return
-                # Idempotent on the full rendered row: a crash-replayed
-                # micro-batch re-rejects the same mutations (rejected rows
-                # deliberately stay out of the applied ledger so DLQ replay
-                # can converge), and re-enqueueing them would duplicate DLQ
-                # entries. The reference keeps ONE staged row per failed
-                # mutation; the anti-join against the existing queue is the
-                # append-only equivalent. The queue scan is pruned to the
-                # reason PARTITIONS present in this batch, so the read
-                # stays bounded by this batch's failure classes, not total
-                # queue history.
-                existing = self.read().filter(F.col("reason").isin(seen.get["reasons"]))
-                out = out.join(existing, ["target_table", "reason", "payload"], "left_anti")
+            if seen.get["n"] == 0:
+                # Nothing to append; read() answers a queue that was never
+                # written with an empty frame.
+                return
+            # Idempotent on the full rendered row: a crash-replayed
+            # micro-batch re-rejects the same mutations (rejected rows
+            # deliberately stay out of the applied ledger so DLQ replay
+            # can converge), and re-enqueueing them would duplicate DLQ
+            # entries. The reference keeps ONE staged row per failed
+            # mutation; the anti-join against the existing queue is the
+            # append-only equivalent. The queue scan is pruned to the
+            # reason PARTITIONS present in this batch, so the read
+            # stays bounded by this batch's failure classes, not total
+            # queue history.
+            existing = self.read().filter(F.col("reason").isin(seen.get["reasons"]))
+            out = out.join(existing, ["target_table", "reason", "payload"], "left_anti")
             out.write.mode("append").partitionBy("reason").parquet(self.path)
         finally:
             release_checkpoint(rendered)
 
     # Fixed schema (dlq_schema.go): also lets read() work on a DLQ dir
-    # that exists but holds no part files yet (an all-clean pipeline run
-    # appends empty batches — schema inference would fail there).
+    # that exists but holds no part files yet (schema inference would
+    # fail there), and on a queue that was never written at all.
     SCHEMA = "target_table string, payload string, reason string"
 
     def read(self, reason: str | None = None) -> DataFrame:
+        if not os.path.isdir(self.path):
+            # A pipeline that never rejected anything never created the
+            # queue: that is an empty queue, not a missing one.
+            return self.spark.createDataFrame([], self.SCHEMA)
         df = self.spark.read.schema(self.SCHEMA).parquet(self.path)
         if reason:
             df = df.filter(F.col("reason") == reason)  # partition-pruned

@@ -12,8 +12,10 @@ schema, and diffs snapshots declaratively.
 
 from __future__ import annotations
 
+import fcntl
 import os
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -30,12 +32,28 @@ class Memo:
         # Crash recovery for the compaction swap: a kill between
         # rename(path -> .old) and rename(.compact -> path) leaves the
         # data in the side dirs; restore rather than silently starting
-        # empty.
-        if not os.path.isdir(path):
-            for cand in (path + ".compact", path + ".old"):
-                if os.path.isdir(cand):
-                    os.rename(cand, path)
-                    break
+        # empty. Under the exclusive lock, so a live compaction in
+        # another process is never mistaken for a crashed one.
+        sides = (path + ".compact", path + ".old")
+        if not os.path.isdir(path) and any(map(os.path.isdir, sides)):
+            with self._locked(fcntl.LOCK_EX):
+                for cand in sides:
+                    if not os.path.isdir(path) and os.path.isdir(cand):
+                        os.rename(cand, path)
+
+    @contextmanager
+    def _locked(self, mode: int):
+        """Hold ``flock(mode)`` on ``path + ".lock"``. Puts and gets
+        share it; compaction and crash recovery, which move the live
+        directory, hold it exclusively. The lock file sits beside the
+        store, so it survives the directory swap."""
+        os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
+        fd = os.open(self.path + ".lock", os.O_RDWR | os.O_CREAT, 0o644)
+        try:
+            fcntl.flock(fd, mode)
+            yield
+        finally:
+            os.close(fd)
 
     # Appends-per-compaction: every put() adds a parquet file, and get()
     # scans all of them; without a bound a long-running streaming job's
@@ -84,16 +102,19 @@ class Memo:
         import pyarrow.parquet as pq
 
         self._last_version = max(self._last_version + 1, time.time_ns())
-        os.makedirs(self.path, exist_ok=True)
         t = pa.table(
             {"k": [key], "v": [value], "version": [self._last_version]},
             schema=self._schema(),
         )
         # Unique append-file name (same role as Spark's part-UUID): two
-        # processes appending concurrently can never collide.
-        pq.write_table(
-            t, os.path.join(self.path, f"part-memo-{uuid.uuid4().hex}.parquet")
-        )
+        # processes appending concurrently never write the same file, and
+        # the shared lock keeps a compaction from folding the log (and
+        # swapping the directory) while this file is being written.
+        with self._locked(fcntl.LOCK_SH):
+            os.makedirs(self.path, exist_ok=True)
+            pq.write_table(
+                t, os.path.join(self.path, f"part-memo-{uuid.uuid4().hex}.parquet")
+            )
         self._maybe_compact()
 
     def _read_all(self):
@@ -108,15 +129,22 @@ class Memo:
                 cols[c].extend(t.column(c).to_pylist())
         return cols
 
+    def _fragmented(self) -> bool:
+        return len(self._files()) > self.COMPACT_THRESHOLD
+
     def _maybe_compact(self) -> None:
-        """Fold the append log into one file once it fragments (single-
-        writer assumption, same as the parquet target snapshots)."""
-        try:
-            n = sum(1 for f in os.listdir(self.path) if f.endswith(".parquet"))
-        except FileNotFoundError:
+        """Fold the append log into one file once it fragments. The
+        exclusive lock spans the read, the write and the swap, so no put
+        lands between the read and the rename (it would be lost) and none
+        recreates the live directory mid-swap."""
+        if not self._fragmented():
             return
-        if n <= self.COMPACT_THRESHOLD:
-            return
+        with self._locked(fcntl.LOCK_EX):
+            # Another process may have compacted while this one waited.
+            if self._fragmented():
+                self._compact()
+
+    def _compact(self) -> None:
         import shutil
 
         import pyarrow as pa
@@ -140,10 +168,11 @@ class Memo:
         shutil.rmtree(old, ignore_errors=True)
 
     def get(self, key: str) -> str | None:
-        if not os.path.isdir(self.path):
-            return None
         best: tuple[int, str] | None = None
-        rows = self._read_all()
+        # Shared lock: a compaction mid-swap would otherwise show an
+        # absent store (None) or a file deleted under the read.
+        with self._locked(fcntl.LOCK_SH):
+            rows = self._read_all()
         for k, v, ver in zip(rows["k"], rows["v"], rows["version"]):
             if k == key and (best is None or ver > best[0]):
                 best = (ver, v)

@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # One bucket per ~17.9 minutes of wall time (2^40 ns); coarse enough to
 # keep directory counts sane at years of retention, fine enough to prune.
@@ -47,10 +48,19 @@ class StagingTable:
 
     def filter_applied(self, muts: DataFrame, key_cols: list[str], ts_col: str = "ts") -> DataFrame:
         """Anti-join against the applied ledger (types.go:153
-        FilterApplied) — returns only unapplied mutations."""
+        FilterApplied) — returns only unapplied mutations.
+
+        The ledger's schema comes from ``muts``' own key and ts types,
+        which ``mark_applied`` writes, so the read runs no
+        schema-inference job."""
         if not os.path.isdir(self.applied_path):
             return muts
-        applied = self.spark.read.parquet(self.applied_path)
+        schema = muts.schema
+        ledger = StructType(
+            [StructField(f"a_{k}", schema[k].dataType) for k in key_cols]
+            + [StructField("a_ts", schema[ts_col].dataType)]
+        )
+        applied = self.spark.read.schema(ledger).parquet(self.applied_path)
         cond = F.lit(True)
         for k in key_cols:
             cond = cond & (muts[k] == applied[f"a_{k}"])

@@ -41,6 +41,16 @@ def get_spark(app_name: str = "cdc-sink-spark", shuffle_partitions: int | None =
         .config("spark.sql.maxMetadataStringLength", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every F.* function and every Column/DataFrame
+        # method in a call-site capture: it walks the Python stack and
+        # makes four extra py4j round trips per call (active session,
+        # the stack-depth conf, origin set, origin clear). Turning it off
+        # took one steady StreamingApplier micro-batch (staging, DLQ and
+        # checkpoints wired, 8-bucket target) from ~1,535 py4j round
+        # trips to ~685. The cost: analysis errors no longer carry the
+        # Python line that built the failing expression; the JVM error
+        # text is unchanged.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Pin the warehouse inside the repo: saveAsTable/catalog metadata
         # must never land in the caller's cwd (the grading driver may not
         # run from the repo root).

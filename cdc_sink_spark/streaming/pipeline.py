@@ -156,6 +156,7 @@ class TargetStore:
     def __init__(self, path: str, key_cols: list[str], n_buckets: int | None):
         self.path = path
         self.bucket = bucket_col(key_cols, n_buckets) if n_buckets else None
+        self.schema = None  # inferred by the first read
 
     def materialize(self, frame: DataFrame, *aggs) -> tuple[DataFrame, dict, list[int] | None]:
         """One eager ``localCheckpoint`` of ``frame`` whose job also
@@ -173,7 +174,16 @@ class TargetStore:
         return frame, stats, stats.pop("__touched", None)
 
     def read(self, spark: SparkSession, touched: list[int] | None) -> DataFrame:
-        target = spark.read.parquet(self.path)
+        """The target rows an apply starts from. Only the first read
+        infers the schema from the parquet footers (a Spark job); later
+        reads reuse it. That holds because a commit writes back exactly
+        the columns ``read`` returned, and mutations are typed from the
+        target's own schema, so the types stay too."""
+        if self.schema is None:
+            target = spark.read.parquet(self.path)
+            self.schema = target.schema
+        else:
+            target = spark.read.schema(self.schema).parquet(self.path)
         if self.bucket is None:
             return target
         return target.filter(F.col("__kb").isin(touched)).drop("__kb")
@@ -225,7 +235,9 @@ class StreamingApplier:
     ``n_buckets`` set, the store reads and rewrites only the touched
     buckets and deletes any the batch emptied, which the write job reports
     through ``df.observe``. Untouched buckets are never read or rewritten.
-    Without ``n_buckets`` the store swaps in the whole snapshot.
+    Without ``n_buckets`` the store swaps in the whole snapshot. Without a
+    rule that can reject (``ApplyConfig.can_reject``) the reject path is
+    skipped: the DLQ is never called and the whole batch is marked.
     """
 
     def __init__(
@@ -242,7 +254,7 @@ class StreamingApplier:
     ):
         self.store = TargetStore(target_path, key_cols, n_buckets)
         self.key_cols = key_cols
-        self.cfg = cfg
+        self.cfg = cfg or ApplyConfig()
         self.tie_breaker = tie_breaker
         self.dlq = dlq
         self.target_table = target_table
@@ -272,26 +284,29 @@ class StreamingApplier:
                 self.store.read(spark, touched), batch, self.key_cols, self.cfg,
                 tie_breaker=self.tie_breaker,
             )
-            if self.staging is not None:
-                # The ledger anti-join below reads the rejects after the
-                # commit has replaced the target their lineage reads.
-                rejected = rejected.localCheckpoint(eager=True)
-                pinned.callback(release_checkpoint, rejected)
-            if self.dlq is not None:
-                # Enqueue distributed and unconditionally: the DLQ itself
-                # checkpoints its rendered frame once and early-outs on an
-                # empty reject set.
-                self.dlq.enqueue(rejected, self.target_table)
+            applied = batch
+            # Without a rule that can reject, the reject frame is empty by
+            # construction: no checkpoint, no DLQ call, no ledger exclusion.
+            if self.cfg.can_reject:
+                if self.staging is not None:
+                    # The ledger exclusion below reads the rejects after
+                    # the commit has replaced the target their lineage reads.
+                    rejected = rejected.localCheckpoint(eager=True)
+                    pinned.callback(release_checkpoint, rejected)
+                    # Rejected mutations stay OUT of the ledger so a DLQ
+                    # replay or retry isn't silently dropped by filter_applied.
+                    applied = decorators.mark_exclude_rejected(
+                        batch, rejected, self.key_cols, ts_col="__ts"
+                    )
+                if self.dlq is not None:
+                    # The DLQ checkpoints its rendered frame once and
+                    # early-outs on an empty reject set.
+                    self.dlq.enqueue(rejected, self.target_table)
             self.store.commit(snapshot, touched)
             if self.staging is not None:
                 # marker-decorator: record the batch applied only after the
                 # snapshot write landed (crash before this line -> replay is
                 # filtered next time by LWW idempotence, not double-marked).
-                # Rejected mutations stay OUT of the ledger so a DLQ replay
-                # or retry isn't silently dropped by filter_applied.
-                applied = decorators.mark_exclude_rejected(
-                    batch, rejected, self.key_cols, ts_col="__ts"
-                )
                 self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")
         if self.checkpoints is not None and stats["hlc"] is not None:
             # Durable applied-through frontier (staging/checkpoint): the

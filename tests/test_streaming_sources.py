@@ -513,6 +513,33 @@ def test_streaming_applier_replay_is_noop(spark, tmp_path):
     assert dlq.read().count() == n_dlq1  # no duplicate DLQ entry
 
 
+def test_streaming_applier_without_reject_rule_marks_whole_batch(spark, tmp_path):
+    """With no CAS rule nothing can be rejected, so the applier skips the
+    reject path: a wired DLQ never creates its directory. It still marks
+    every applied mutation, deletes included, so a replay of the batch
+    after a newer one has landed changes nothing."""
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    target = str(tmp_path / "target")
+    spark.createDataFrame(
+        [Row(id=1, v="z"), Row(id=3, v="gone")], "id bigint, v string"
+    ).write.parquet(target)
+    st = StagingTable(spark, str(tmp_path / "staging"))
+    dlq = DeadLetterQueue(spark, str(tmp_path / "dlq"))
+    applier = pipeline.StreamingApplier(target, ["id"], dlq=dlq, staging=st)
+    first = _muts(spark, [(1, "a", 5), (2, "b", 6), (3, None, 7)])
+    applier(first, 0)
+    assert not os.path.exists(dlq.path)
+    assert dlq.read().count() == 0
+    assert st.filter_applied(first, ["id"], ts_col="__ts").count() == 0
+    applier(_muts(spark, [(1, "c", 8), (3, "back", 9)]), 1)
+    applier(first, 0)  # replay: every mutation is in the ledger
+    out = {r.id: r.v for r in spark.read.parquet(target).collect()}
+    assert out == {1: "c", 2: "b", 3: "back"}
+    assert not os.path.exists(dlq.path)
+
+
 def test_pg_test_decoding_transcript(spark):
     """contrib/test_decoding text format: BEGIN/COMMIT transaction
     assembly (xid carried forward, commit time carried backward onto
@@ -1115,7 +1142,9 @@ def test_bucketed_appliers_job_count(spark, tmp_path):
     as a deployment would be, runs a pinned number of Spark jobs. The
     batch's stats and touched buckets ride the one job that materializes
     it, and the set of buckets the commit leaves non-empty rides the
-    commit write itself, so none of them runs a job of its own."""
+    commit write itself, so none of them runs a job of its own. The
+    target read after the first batch infers no schema, and without a
+    CAS rule the ``StreamingApplier`` runs no reject path."""
     from cdc_sink_spark.operators.checkpoint import CheckpointGroup
     from cdc_sink_spark.operators.dlq import DeadLetterQueue
     from cdc_sink_spark.operators.memo import Memo
@@ -1158,7 +1187,7 @@ def test_bucketed_appliers_job_count(spark, tmp_path):
         _job_count(spark, lambda: switching(batch, 1)),
     )
     assert switching.mode_history[-1] == (1, "serial")
-    assert counts == (9, 13)
+    assert counts == (6, 12)
 
 
 def _bucket_files(target):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, LongType, TimestampType
@@ -263,6 +265,76 @@ def test_dlq_read_survives_empty_appends(spark, tmp_path):
     dlq.enqueue(rows, "t")
     got = dlq.read("cas").collect()
     assert len(got) == 1 and got[0].target_table == "t"
+
+
+def test_dlq_read_on_never_written_queue(spark, tmp_path):
+    """A queue nothing was ever enqueued to has no directory; read()
+    returns an empty frame with the fixed schema instead of failing."""
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+
+    dlq = DeadLetterQueue(spark, str(tmp_path / "dlq"))
+    dlq.enqueue(spark.createDataFrame([], "id bigint, __reason string"), "t")
+    assert not os.path.exists(dlq.path)
+    df = dlq.read()
+    assert df.schema.simpleString() == (
+        "struct<target_table:string,payload:string,reason:string>"
+    )
+    assert df.count() == 0 and dlq.read("cas").count() == 0
+    assert dlq.replayable("cas", "id bigint").count() == 0
+
+
+def test_get_spark_turns_off_origin_capture(spark):
+    """get_spark() turns PySpark's per-call origin capture off, so
+    building a plan does not pay four extra py4j round trips per
+    function or method call."""
+    from pyspark.errors import utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    utils._enable_debugging_cache = None  # re-read it from the active session
+    assert utils.is_debugging_enabled() is False
+
+
+def test_memo_puts_survive_concurrent_compaction(spark, tmp_path):
+    """A put from another process that lands while this one compacts is
+    never lost and never fails: a subprocess puts in a loop while the
+    parent forces compactions, and every key reads back at its last
+    value."""
+    import subprocess
+    import sys
+    import time
+
+    from cdc_sink_spark.operators.memo import Memo
+
+    path = str(tmp_path / "memo")
+    n = 300
+    child = subprocess.Popen(
+        [sys.executable, "-c", (
+            "import sys\n"
+            "from cdc_sink_spark.operators.memo import Memo\n"
+            "m = Memo(None, sys.argv[1])\n"
+            "for i in range(int(sys.argv[2])):\n"
+            "    m.put(f'k{i}', f'v{i}')\n"
+            "    m.put('last', str(i))\n"
+        ), path, str(n)],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    memo = Memo(spark, path)
+    memo.COMPACT_THRESHOLD = 1
+    compactions = []
+    compact = memo._compact
+    memo._compact = lambda: (compactions.append(1), compact())
+    deadline = time.monotonic() + 120
+    try:
+        while child.poll() is None:
+            assert time.monotonic() < deadline, "the putting process never finished"
+            memo._maybe_compact()
+    finally:
+        child.kill()
+        child.wait()
+    assert child.returncode == 0
+    assert compactions, "the parent never compacted while the child put"
+    assert memo.get("last") == str(n - 1)
+    assert [memo.get(f"k{i}") for i in range(n)] == [f"v{i}" for i in range(n)]
 
 
 def test_memo_compaction_bounds_files_and_survives(spark, tmp_path):
