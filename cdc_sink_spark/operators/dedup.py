@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 
 def connected_components(
-    edges: DataFrame, a: str = "a", b: str = "b", max_iter: int = 25
+    edges: DataFrame, a: str = "a", b: str = "b"
 ) -> DataFrame:
     """(node, label) with label = min node id reachable (cluster id)."""
     # Materialize the symmetric edge list once: every iteration joins
@@ -52,15 +52,17 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     # Labels only ever DECREASE (min-propagation), so the label sum is a
-    # strictly-decreasing potential until the fixed point: equal sums ==
-    # converged. Both sums ride each round's checkpoint job through
-    # df.observe, so a round is one job-bearing action. The node set
-    # never changes, so round 1's node sum is the initial label sum
-    # (every label starts as its own node). Summed as decimal(38,0):
-    # bigint F.sum wraps silently at int64 overflow in non-ANSI mode, and
-    # with 64-bit hash node ids a wrap collision could fake a fixed point.
+    # strictly-decreasing potential over the integers until the fixed
+    # point: equal sums == converged, and the loop runs to that point
+    # with no round cap (diameter + 1 rounds). Both sums ride each
+    # round's checkpoint job through df.observe, so a round is one
+    # job-bearing action. The node set never changes, so round 1's node
+    # sum is the initial label sum (every label starts as its own node).
+    # Summed as decimal(38,0): bigint F.sum wraps silently at int64
+    # overflow in non-ANSI mode, and with 64-bit hash node ids a wrap
+    # collision could fake a fixed point.
     prev_sum = None
-    for _ in range(max_iter):
+    while True:
         # neighbor labels + own label, take the min per node
         neighbor = sym.join(labels, sym.dst == labels.node).select(
             F.col("src").alias("node"), "label"
@@ -96,8 +98,7 @@ def canonicalize(labels: DataFrame) -> DataFrame:
 
 
 def connected_components_star(
-    edges: DataFrame, a: str = "a", b: str = "b", max_iter: int = 30,
-    return_rounds: bool = False,
+    edges: DataFrame, a: str = "a", b: str = "b", return_rounds: bool = False,
 ):
     """(node, label) via alternating large-star/small-star contractions
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -216,8 +217,10 @@ def connected_components_star(
         )
         return bad.isEmpty()
 
+    # No round cap: the exit below is exact and Kiveris et al. prove the
+    # alternation reaches a star forest, so the loop ends at the fixed point.
     rounds = 0
-    for _ in range(max_iter):
+    while True:
         new_e = small_star(large_star(e)).localCheckpoint(eager=False)
         rounds += 1
         e = new_e

@@ -5,9 +5,10 @@ stored in the staging database so exactly one replicator instance
 drives a given table-group at a time.
 
 Spark-first: leases are *driver-side* coordination (row data never
-needs them); this implementation uses atomic filesystem renames as the
-compare-and-swap, which is the local[*] stand-in for the staging-DB
-row. The API mirrors Acquire / Renew / Release / Singleton semantics.
+needs them). Each lease is a JSON file whose read-check-write runs
+under ``artifact.locked`` on that file, the local[*] stand-in for the
+staging-DB row's transaction. The API mirrors Acquire / Renew / Release
+/ Singleton semantics.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ import json
 import os
 import time
 import uuid
+
+from cdc_sink_spark.operators import artifact
 
 
 class LeaseStore:
@@ -30,33 +33,38 @@ class LeaseStore:
         """Try to acquire; returns a lease dict or None if held by a
         live owner (leases.Acquire)."""
         owner = owner or str(uuid.uuid4())
-        now = time.time()
         f = self._file(name)
-        cur = self._read(f)
-        if cur and cur["expires"] > now and cur["owner"] != owner:
-            return None
-        lease = {"name": name, "owner": owner, "expires": now + duration_s, "nonce": str(uuid.uuid4())}
-        tmp = f + f".{lease['nonce']}"
-        with open(tmp, "w") as fh:
-            json.dump(lease, fh)
-        os.replace(tmp, f)  # atomic CAS-ish publish
-        # Re-read to detect a racing writer that replaced after us.
-        final = self._read(f)
-        return lease if final and final["nonce"] == lease["nonce"] else None
+        with artifact.locked(f):
+            cur = self._read(f)
+            if cur and cur["expires"] > time.time() and cur["owner"] != owner:
+                return None
+            return self._write(f, name, owner, duration_s)
 
     def renew(self, lease: dict, duration_s: float = 60.0):
-        cur = self._read(self._file(lease["name"]))
-        if not cur or cur["nonce"] != lease["nonce"]:
-            return None  # lost the lease (leases.Renew -> expired)
-        return self.acquire(lease["name"], lease["owner"], duration_s)
+        f = self._file(lease["name"])
+        with artifact.locked(f):
+            cur = self._read(f)
+            if not cur or cur["nonce"] != lease["nonce"]:
+                return None  # lost the lease (leases.Renew -> expired)
+            return self._write(f, lease["name"], lease["owner"], duration_s)
 
     def release(self, lease: dict) -> bool:
         f = self._file(lease["name"])
-        cur = self._read(f)
-        if cur and cur["nonce"] == lease["nonce"]:
-            os.remove(f)
-            return True
-        return False
+        with artifact.locked(f):
+            cur = self._read(f)
+            if cur and cur["nonce"] == lease["nonce"]:
+                os.remove(f)
+                return True
+            return False
+
+    def _write(self, f: str, name: str, owner: str, duration_s: float) -> dict:
+        lease = {"name": name, "owner": owner, "expires": time.time() + duration_s,
+                 "nonce": str(uuid.uuid4())}
+        tmp = f + f".{lease['nonce']}"
+        with open(tmp, "w") as fh:
+            json.dump(lease, fh)
+        os.replace(tmp, f)  # a crash mid-write never leaves a torn lease
+        return lease
 
     def _read(self, f: str):
         try:

@@ -13,15 +13,15 @@ join shuffles ONLY the batch side — the index side is read pre-hashed
 into its buckets (no Exchange above its scan). Appends land in a plain
 "delta" directory (bucketed tables can't be appended without a shuffle
 per batch); ``compact()`` folds deltas back into the bucketed base the
-same way the memo store self-compacts. The reference has no analogue
+same way the memo store self-compacts. Both live in the version
+directory ``build`` resolves (``operators/artifact.py``); only ``append``
+and ``compact`` change it after its build. The reference has no analogue
 (this is a training-data operator); the LSH math is shared verbatim
 with queries/textops.py's full-corpus path.
 """
 
 from __future__ import annotations
 
-import contextlib
-import json
 import os
 import shutil
 
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_sink_spark.functions import text as T
+from cdc_sink_spark.operators import artifact
 
 KEYS = ["band", *[f"k{r}" for r in range(T.LSH_ROWS)]]
 
@@ -75,14 +76,14 @@ class BandIndex:
 
     Layout::
 
-        path/base/   bucketed parquet table (CLUSTERED BY the band key)
-        path/delta/  plain parquet appends awaiting compaction
-        path/_meta.json  build fingerprint (corpus id + LSH params)
+        path/v-<sha256>/base/   bucketed parquet table (CLUSTERED BY the band key)
+        path/v-<sha256>/delta/  plain parquet appends awaiting compaction
 
-    The bucketed base is registered in the session catalog as
-    ``table_name``; a fresh session re-registers it from the DDL (the
-    in-memory catalog forgets bucketing metadata across sessions, the
-    files don't).
+    The version is ``artifact.build_once`` of the build fingerprint
+    (corpus id + LSH params). ``build`` resolves it, building it the
+    first time, and registers its bucketed base in the session catalog
+    as ``table_name``: the in-memory catalog forgets bucketing metadata
+    across sessions, the files don't.
     """
 
     def __init__(
@@ -98,11 +99,7 @@ class BandIndex:
         self.table_name = table_name
         self.n_buckets = n_buckets
         self.bucket_cap = bucket_cap
-
-    # ------------------------------------------------------------ meta
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_meta.json")
+        self.version: str | None = None  # resolved by build()
 
     def _params(self) -> dict:
         return {
@@ -113,49 +110,13 @@ class BandIndex:
             "n_buckets": self.n_buckets,
         }
 
-    def exists(self, fingerprint: dict | None = None) -> bool:
-        """True iff a built index is present AND (when given) its build
-        fingerprint matches — a changed corpus or LSH parameterization
-        invalidates the index rather than silently serving stale
-        buckets."""
-        if not os.path.isfile(self._meta_path):
-            return False
-        try:
-            with open(self._meta_path) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            return False  # truncated/corrupt meta == stale index: rebuild
-        if meta.get("params") != self._params():
-            return False
-        return fingerprint is None or meta.get("fingerprint") == fingerprint
+    @property
+    def _base(self) -> str:
+        return os.path.join(self.version, "base")
 
-    # ------------------------------------------------------------ lock
-    @contextlib.contextmanager
-    def _mutation_lock(self):
-        """Cross-process lock around build()/compact(): two sessions
-        probing the same sf_dir must not race a build against a
-        concurrent rmtree of the shared warehouse path.
-
-        ``flock`` on a persistent lock file, NOT a create/unlink PID
-        file: the kernel releases the lock when the holder dies (no
-        stale-age heuristic that could steal the lock from a live
-        builder mid-``saveAsTable``), acquisition blocks for as long as
-        a legitimate holder runs, and there is no stat-then-remove
-        window where two waiters could both claim a stale lock. The
-        lock file itself is never unlinked (unlink would re-open the
-        classic flock race: a waiter holding an fd to the unlinked
-        inode locks a file nobody else can see)."""
-        import fcntl
-
-        lock = self.path + ".lock"
-        os.makedirs(os.path.dirname(lock) or ".", exist_ok=True)
-        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
+    @property
+    def _delta_dir(self) -> str:
+        return os.path.join(self.version, "delta")
 
     # ----------------------------------------------------------- build
     def _grouped(self, docs: DataFrame) -> DataFrame:
@@ -166,61 +127,50 @@ class BandIndex:
             .filter(F.size("idx") <= self.bucket_cap)
         )
 
+    def _write_bucketed(self, df: DataFrame, path: str) -> None:
+        # bucketBy needs saveAsTable; dropping the external table keeps
+        # the files. Overwrite replaces what a killed compaction left.
+        scratch = f"{self.table_name}__write"
+        self.spark.sql(f"DROP TABLE IF EXISTS {scratch}")
+        df.write.bucketBy(self.n_buckets, KEYS[0], *KEYS[1:]).mode(
+            "overwrite"
+        ).option("path", path).saveAsTable(scratch)
+        self.spark.sql(f"DROP TABLE IF EXISTS {scratch}")
+
     def _register(self) -> None:
-        """(Re-)register the bucketed base table in the session catalog.
-        The column DDL is derived from the written files' OWN footer
-        schema (a hard-coded doc_id:bigint would corrupt reads for any
-        corpus whose doc_id is a different type); only the bucket spec
-        is ours to re-assert."""
+        """Point the catalog table at this version's bucketed base. The
+        column DDL is derived from the written files' OWN footer schema
+        (a hard-coded doc_id:bigint would corrupt reads for any corpus
+        whose doc_id is a different type); only the bucket spec is ours
+        to re-assert."""
         self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
-        base = os.path.join(self.path, "base")
-        scm = self.spark.read.parquet(base).schema  # footer read, no scan
+        scm = self.spark.read.parquet(self._base).schema  # footer read, no scan
         cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in scm.fields)
         cluster = ", ".join(KEYS)
         self.spark.sql(
             f"CREATE TABLE {self.table_name} ({cols}) "
             f"USING PARQUET CLUSTERED BY ({cluster}) INTO {self.n_buckets} BUCKETS "
-            f"LOCATION '{base}'"
+            f"LOCATION '{self._base}'"
         )
 
-    def build(
-        self,
-        docs: DataFrame,
-        fingerprint: dict | None = None,
-        skip_if_current: bool = False,
-    ) -> bool:
-        """Full build: ONE signature pass over the existing corpus, then
-        a bucketed write clustered on the band key. Run once (or per
-        compaction) — never per batch.
-
-        ``skip_if_current=True`` re-checks ``exists(fingerprint)`` AFTER
-        taking the mutation lock and returns False without building if a
-        concurrent session already built the same index — callers'
-        check-then-build is racy without this (two sessions could both
-        see exists()==False and then fight over the shared path).
-        Returns True when a build actually ran."""
-        with self._mutation_lock():
-            if skip_if_current and self.exists(fingerprint):
-                return False
-            if os.path.isdir(self.path):
-                shutil.rmtree(self.path)
-            os.makedirs(self.path, exist_ok=True)
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
-            (
-                self._grouped(docs)
-                .write.bucketBy(self.n_buckets, KEYS[0], *KEYS[1:])
-                .option("path", os.path.join(self.path, "base"))
-                .saveAsTable(self.table_name)
-            )
-            with open(self._meta_path, "w") as f:
-                json.dump({"params": self._params(), "fingerprint": fingerprint}, f)
-            return True
+    def build(self, docs: DataFrame, fingerprint: dict | None = None) -> str:
+        """Resolve the index version for ``fingerprint`` and the LSH
+        parameters, building it the first time: ONE signature pass over
+        the existing corpus, then a bucketed write clustered on the band
+        key. A changed corpus or parameterization resolves a new version
+        rather than serving stale buckets. Returns the version directory."""
+        self.version = artifact.build_once(
+            self.path,
+            {"params": self._params(), "fingerprint": fingerprint},
+            lambda d: self._write_bucketed(self._grouped(docs), os.path.join(d, "base")),
+        )
+        if not os.path.isdir(self._base):  # a compaction killed mid-swap
+            with artifact.locked(self.path):
+                artifact.recover_dir(self._base)
+        self._register()
+        return self.version
 
     # ---------------------------------------------------------- append
-    @property
-    def _delta_dir(self) -> str:
-        return os.path.join(self.path, "delta")
-
     def append(self, docs: DataFrame) -> None:
         """Add a batch's bands as a plain-parquet delta (O(batch)); the
         bucketed base is untouched. Deltas are grouped per-append (the
@@ -228,72 +178,29 @@ class BandIndex:
         bounded by compaction cadence, the memo-store trade)."""
         self._grouped(docs).write.mode("append").parquet(self._delta_dir)
 
-    def compact(self, fingerprint: dict | None = None) -> None:
+    def compact(self) -> None:
         """Fold deltas into the bucketed base: one read of base+delta,
-        one regroup, one bucketed rewrite — run on a cadence, not per
-        batch.
-
-        Crash-safe ordering: the merged rewrite lands in a SIDE
-        directory first, the meta file is removed (turning any crash
-        below into a clean exists()==False -> rebuild, never a silently
-        empty index), then the directories swap and the meta is written
-        back — the meta file is the commit point."""
-        if not os.path.isdir(self._delta_dir):
-            return
-        with self._mutation_lock():
-            self._compact_locked(fingerprint)
-
-    def _compact_locked(self, fingerprint: dict | None = None) -> None:
-        if not os.path.isdir(self._delta_dir):
-            return  # a concurrent compact drained it while we waited
-        merged = (
-            self._base_df()
-            .unionByName(self.spark.read.parquet(self._delta_dir))
-            .select(*KEYS, F.explode("idx").alias("m"))
-            .groupBy(*KEYS)
-            .agg(F.collect_list("m").alias("idx"))
-            .filter(F.size("idx") <= self.bucket_cap)
-        )
-        base = os.path.join(self.path, "base")
-        tmp = base + ".compact"
-        tmp_table = f"{self.table_name}__compact"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        (
-            merged.write.bucketBy(self.n_buckets, KEYS[0], *KEYS[1:])
-            .option("path", tmp)
-            .saveAsTable(tmp_table)
-        )
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        meta = None
-        if os.path.isfile(self._meta_path):
-            with open(self._meta_path) as f:
-                meta = f.read()
-            os.remove(self._meta_path)  # invalidate: crash below -> rebuild
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
-        old = base + ".old"
-        os.rename(base, old)
-        os.rename(tmp, base)
-        shutil.rmtree(old)
-        shutil.rmtree(self._delta_dir)
-        self._register()
-        if fingerprint is not None:
-            with open(self._meta_path, "w") as f:
-                json.dump({"params": self._params(), "fingerprint": fingerprint}, f)
-        elif meta is not None:
-            with open(self._meta_path, "w") as f:
-                f.write(meta)
+        one regroup, one bucketed rewrite swapped in by
+        ``artifact.replace_dir`` — run on a cadence, not per batch."""
+        with artifact.locked(self.path):
+            if not os.path.isdir(self._delta_dir):
+                return  # nothing appended, or a concurrent compact drained it
+            merged = (
+                self.spark.table(self.table_name)
+                .unionByName(self.spark.read.parquet(self._delta_dir))
+                .select(*KEYS, F.explode("idx").alias("m"))
+                .groupBy(*KEYS)
+                .agg(F.collect_list("m").alias("idx"))
+                .filter(F.size("idx") <= self.bucket_cap)
+            )
+            tmp = self._base + ".compact"
+            self._write_bucketed(merged, tmp)
+            self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
+            artifact.replace_dir(tmp, self._base)
+            shutil.rmtree(self._delta_dir)
+            self._register()
 
     # ----------------------------------------------------------- probe
-    def _base_df(self) -> DataFrame:
-        if not any(
-            t.name == self.table_name
-            for t in self.spark.catalog.listTables()
-        ):
-            self._register()
-        return self.spark.table(self.table_name)
-
     def probe(self, docs: DataFrame) -> DataFrame:
         """(new_id, old_id, est): candidate matches for a NEW batch
         against the persisted index. Signatures are computed for the
@@ -337,7 +244,7 @@ class BandIndex:
                 )
             )
 
-        out = hits(self._base_df())
+        out = hits(self.spark.table(self.table_name))
         if os.path.isdir(self._delta_dir):
             out = out.unionByName(hits(self.spark.read.parquet(self._delta_dir)))
         return out.dropDuplicates(["new_id", "old_id"])

@@ -12,13 +12,13 @@ schema, and diffs snapshots declaratively.
 
 from __future__ import annotations
 
-import fcntl
 import os
 import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_sink_spark.operators import artifact
 
 
 class Memo:
@@ -29,31 +29,10 @@ class Memo:
         self.path = path
         self._seq = 0
         self._last_version = 0
-        # Crash recovery for the compaction swap: a kill between
-        # rename(path -> .old) and rename(.compact -> path) leaves the
-        # data in the side dirs; restore rather than silently starting
-        # empty. Under the exclusive lock, so a live compaction in
-        # another process is never mistaken for a crashed one.
-        sides = (path + ".compact", path + ".old")
-        if not os.path.isdir(path) and any(map(os.path.isdir, sides)):
-            with self._locked(fcntl.LOCK_EX):
-                for cand in sides:
-                    if not os.path.isdir(path) and os.path.isdir(cand):
-                        os.rename(cand, path)
-
-    @contextmanager
-    def _locked(self, mode: int):
-        """Hold ``flock(mode)`` on ``path + ".lock"``. Puts and gets
-        share it; compaction and crash recovery, which move the live
-        directory, hold it exclusively. The lock file sits beside the
-        store, so it survives the directory swap."""
-        os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
-        fd = os.open(self.path + ".lock", os.O_RDWR | os.O_CREAT, 0o644)
-        try:
-            fcntl.flock(fd, mode)
-            yield
-        finally:
-            os.close(fd)
+        # A compaction killed mid-swap left the log aside (artifact.py);
+        # under the lock, a live compaction is never taken for one.
+        with artifact.locked(path):
+            artifact.recover_dir(path)
 
     # Appends-per-compaction: every put() adds a parquet file, and get()
     # scans all of them; without a bound a long-running streaming job's
@@ -110,7 +89,7 @@ class Memo:
         # processes appending concurrently never write the same file, and
         # the shared lock keeps a compaction from folding the log (and
         # swapping the directory) while this file is being written.
-        with self._locked(fcntl.LOCK_SH):
+        with artifact.locked(self.path, shared=True):
             os.makedirs(self.path, exist_ok=True)
             pq.write_table(
                 t, os.path.join(self.path, f"part-memo-{uuid.uuid4().hex}.parquet")
@@ -139,39 +118,28 @@ class Memo:
         recreates the live directory mid-swap."""
         if not self._fragmented():
             return
-        with self._locked(fcntl.LOCK_EX):
+        with artifact.locked(self.path):
             # Another process may have compacted while this one waited.
             if self._fragmented():
                 self._compact()
 
     def _compact(self) -> None:
-        import shutil
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        rows = self._read_all()
         tmp = self.path + ".compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
+        os.makedirs(tmp, exist_ok=True)
         pq.write_table(
-            pa.table(rows, schema=self._schema()),
+            pa.table(self._read_all(), schema=self._schema()),
             os.path.join(tmp, "part-memo-compacted.parquet"),
         )
-        # Crash-safe swap: the live dir is renamed aside, never deleted
-        # before the replacement is in place (a kill between rmtree and
-        # rename would otherwise destroy the durable store).
-        old = self.path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        artifact.replace_dir(tmp, self.path)
 
     def get(self, key: str) -> str | None:
         best: tuple[int, str] | None = None
         # Shared lock: a compaction mid-swap would otherwise show an
         # absent store (None) or a file deleted under the read.
-        with self._locked(fcntl.LOCK_SH):
+        with artifact.locked(self.path, shared=True):
             rows = self._read_all()
         for k, v, ver in zip(rows["k"], rows["v"], rows["version"]):
             if k == key and (best is None or ver > best[0]):

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from cdc_sink_spark.operators import artifact
+
 # One bucket per ~17.9 minutes of wall time (2^40 ns); coarse enough to
 # keep directory counts sane at years of retention, fine enough to prune.
 BUCKET_SHIFT = 40
@@ -36,6 +38,12 @@ class StagingTable:
         self.path = path
         self.applied_path = os.path.join(path, "_applied")
         self.data_path = os.path.join(path, "data")
+        # A retire killed mid-swap left its boundary bucket aside as
+        # ".hlc_bucket=<b>.old" (artifact.replace_dir); restore it.
+        if os.path.isdir(self.data_path):
+            for entry in os.listdir(self.data_path):
+                if entry.startswith(".hlc_bucket=") and entry.endswith(".old"):
+                    artifact.recover_dir(os.path.join(self.data_path, entry[1:-4]))
 
     def stage(self, muts: DataFrame, ts_col: str = "ts") -> None:
         """Durably persist mutations (Stager.Store)."""
@@ -93,14 +101,15 @@ class StagingTable:
             b = int(entry.split("=", 1)[1])
             if b < boundary_bucket:
                 shutil.rmtree(os.path.join(self.data_path, entry))
-        # Rewrite the boundary bucket, keeping rows above the horizon.
-        bpath = os.path.join(self.data_path, f"hlc_bucket={boundary_bucket}")
+        # Rewrite the boundary bucket, keeping rows above the horizon. The
+        # rewrite's dot-name keeps it out of Spark's listing of the table.
+        name = f"hlc_bucket={boundary_bucket}"
+        bpath = os.path.join(self.data_path, name)
         if os.path.isdir(bpath):
             keep = self.spark.read.parquet(bpath).filter(F.col("ts.nanos") > end_nanos)
-            tmp = bpath + ".tmp"
+            tmp = os.path.join(self.data_path, f".{name}.new")
             keep.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(bpath)
-            os.rename(tmp, bpath)
+            artifact.replace_dir(tmp, bpath)
 
 
 def resolved_frontier(

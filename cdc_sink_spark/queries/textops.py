@@ -1681,10 +1681,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per-invocation cost is O(batch): signatures are computed for the
     batch ONLY; the corpus index is a bucketed parquet table
-    (operators/lshindex.py) built ONCE per corpus (fingerprint-guarded
-    — parquet rowcount is footer metadata, not a scan) and the probe
-    join shuffles only the batch side. Output per new doc: is_dup at
-    tau, the best-matching indexed doc, and the agreement estimate."""
+    (operators/lshindex.py) built ONCE per corpus fingerprint (footer
+    metadata, not a scan) and the probe join shuffles only the batch
+    side. Output per new doc: is_dup at tau, the best-matching indexed
+    doc, and the agreement estimate."""
     import os as _os
 
     from cdc_sink_spark.operators.lshindex import BandIndex, signatures
@@ -1710,17 +1710,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_name=f"lsh_band_index_{tag}",
         bucket_cap=LSH_BUCKET_CAP,
     )
-    fp = _corpus_fingerprint(sf_dir, existing)
-    if not idx.exists(fp):
-        # skip_if_current: the exists() above is a lock-free fast path;
-        # build re-checks UNDER the mutation lock, so two concurrent
-        # sessions probing the same sf_dir can't race build vs rmtree on
-        # the shared warehouse path (one builds, the other waits + skips).
-        idx.build(
-            existing.transform(_spread),
-            fingerprint=fp,
-            skip_if_current=True,
-        )
+    idx.build(existing.transform(_spread), fingerprint=_corpus_fingerprint(sf_dir, existing))
     # ONE signature pass over the batch, shared by the probe and the
     # surviving-doc list (recomputing it for `news` would double the
     # per-batch shingle+minhash cost the persisted index exists to cap).

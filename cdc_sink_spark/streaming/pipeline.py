@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from cdc_sink_spark.operators import decorators
+from cdc_sink_spark.operators import artifact, decorators
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
 from cdc_sink_spark.session import release_checkpoint
 from cdc_sink_spark.sources import cdcjson
@@ -156,6 +156,7 @@ class TargetStore:
     def __init__(self, path: str, key_cols: list[str], n_buckets: int | None):
         self.path = path
         self.bucket = bucket_col(key_cols, n_buckets) if n_buckets else None
+        artifact.recover_dir(path)  # an unbucketed commit killed mid-swap
         self.schema = None  # inferred by the first read
 
     def materialize(self, frame: DataFrame, *aggs) -> tuple[DataFrame, dict, list[int] | None]:
@@ -193,19 +194,16 @@ class TargetStore:
         reads the target.
 
         Unbucketed, the snapshot is written beside the target and swapped
-        in by rename. Bucketed, it is written straight through a dynamic
-        partition overwrite: Spark writes every task's output to a staging
-        directory and replaces the ``__kb=<b>`` directories only at job
-        commit, after every task that reads the target has finished, so
-        the write may read the buckets it replaces. A job that fails
-        leaves every bucket as it was."""
+        in by ``artifact.replace_dir``. Bucketed, it is written straight
+        through a dynamic partition overwrite: Spark writes every task's
+        output to a staging directory and replaces the ``__kb=<b>``
+        directories only at job commit, after every task that reads the
+        target has finished, so the write may read the buckets it
+        replaces. A job that fails leaves every bucket as it was."""
         if self.bucket is None:
-            nxt, prev = self.path + ".next", self.path + ".prev"
-            shutil.rmtree(nxt, ignore_errors=True)
-            snapshot.write.parquet(nxt)
-            os.rename(self.path, prev)
-            os.rename(nxt, self.path)
-            shutil.rmtree(prev)
+            nxt = self.path + ".next"
+            snapshot.write.mode("overwrite").parquet(nxt)
+            artifact.replace_dir(nxt, self.path)
             return
         # Dynamic overwrite replaces only the buckets present in the
         # output, so a touched bucket the batch emptied would keep its

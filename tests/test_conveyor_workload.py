@@ -120,6 +120,40 @@ def test_lease_store(tmp_path):
     assert store.acquire("tbl-group-1", "owner-d") is not None  # ...and expire
 
 
+def _race_acquire(path, rounds, barrier, out):
+    store = LeaseStore(path)
+    for r in range(rounds):
+        barrier.wait()
+        out.put((r, store.acquire(f"race-{r}") is not None))
+
+
+def test_lease_acquire_has_one_winner_across_processes(tmp_path):
+    """Four processes race acquire() on one fresh lease name per round,
+    released together by a barrier: every round has exactly one winner."""
+    import multiprocessing
+
+    ctx = multiprocessing.get_context("spawn")
+    n, rounds = 4, 60
+    barrier, out = ctx.Barrier(n), ctx.Queue()
+    procs = [
+        ctx.Process(target=_race_acquire, args=(str(tmp_path / "leases"), rounds, barrier, out))
+        for _ in range(n)
+    ]
+    for p in procs:
+        p.start()
+    try:
+        wins = [0] * rounds
+        for _ in range(n * rounds):
+            r, won = out.get(timeout=120)
+            wins[r] += won
+    finally:
+        for p in procs:
+            p.join(timeout=60)
+            p.kill()
+    assert [p.exitcode for p in procs] == [0] * n
+    assert wins == [1] * rounds
+
+
 def test_conveyor_bare_envelope_full_rules(spark, tmp_path):
     """Conveyor with every apply rule at once over bare envelopes:
     deadline rejects stale rows, CAS rejects non-newer versions, both

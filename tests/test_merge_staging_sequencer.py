@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -95,6 +96,33 @@ def test_staging_roundtrip(spark, tmp_path):
     # retire everything at/below bucket of nanos=2<<41
     st.retire(2 << 41)
     assert {r.ts.nanos >> 41 for r in st.read().collect()} == {3}
+
+
+def test_staging_retire_killed_mid_swap_keeps_rows(spark, tmp_path, monkeypatch):
+    """A kill just before the boundary bucket's rewrite is renamed into
+    place loses no staged row: the reopened store restores the bucket,
+    and retiring again leaves exactly the rows above the horizon."""
+    st = staging.StagingTable(spark, str(tmp_path / "stage"))
+    b = 5 << staging.BUCKET_SHIFT
+    st.stage(spark.createDataFrame(
+        [Row(key=f"k{i}", ts=Row(nanos=b + i, logical=0), data="v") for i in range(10)],
+        "key string, ts struct<nanos:long, logical:int>, data string",
+    ))
+    live = os.path.join(st.data_path, "hlc_bucket=5")
+    rename = os.rename
+
+    def killed_before_commit(src, dst, *a, **k):
+        if os.path.abspath(dst) == os.path.abspath(live):
+            raise OSError("killed before the rename onto the live bucket")
+        return rename(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "rename", killed_before_commit)
+    with pytest.raises(OSError, match="killed"):
+        st.retire(b + 4)
+    monkeypatch.undo()
+    reopened = staging.StagingTable(spark, st.path)
+    reopened.retire(b + 4)
+    assert sorted(r.ts.nanos for r in reopened.read().collect()) == [b + i for i in range(5, 10)]
 
 
 def test_mark_applied_appends_one_file_per_call(spark, tmp_path):

@@ -1261,6 +1261,34 @@ def test_bucketed_commit_failure_leaves_target_intact(spark, tmp_path):
     assert out == {i: f"seed{i}" for i in range(64)}
 
 
+def test_unbucketed_commit_killed_mid_swap_recovers_on_open(spark, tmp_path, monkeypatch):
+    """A kill between the two renames of the unbucketed commit's swap
+    leaves the target aside, not lost: the next TargetStore opened on
+    the path restores it, and the target reads as it was before the
+    commit."""
+    target = str(tmp_path / "target")
+    seed = spark.createDataFrame(
+        [Row(id=i, v=f"seed{i}") for i in range(16)], "id bigint, v string"
+    )
+    seed.write.parquet(target)
+    store = pipeline.TargetStore(target, ["id"], None)
+    snapshot = store.read(spark, None).withColumn("v", F.lit("new"))
+    rename = os.rename
+
+    def killed_before_commit(src, dst, *a, **k):
+        if os.path.abspath(dst) == os.path.abspath(target):
+            raise OSError("killed before the rename onto the live target")
+        return rename(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "rename", killed_before_commit)
+    with pytest.raises(OSError, match="killed"):
+        store.commit(snapshot, None)
+    monkeypatch.undo()
+    pipeline.TargetStore(target, ["id"], None)  # reopen
+    out = {r.id: r.v for r in spark.read.parquet(target).collect()}
+    assert out == {i: f"seed{i}" for i in range(16)}
+
+
 def test_streaming_applier_ledger_guards_cross_batch_redelivery(spark, tmp_path):
     """A mutation redelivered in a LATER micro-batch, under a new batch
     id, must not overwrite the newer row an earlier batch applied: the
@@ -1421,17 +1449,17 @@ def test_mode_switch_final_rejects_implicit_dlq_without_config(spark, tmp_path):
     assert implicit.read("cas").count() == 1
 
 
-def test_shared_feed_renders_once_and_invalidates(spark, tmp_path, monkeypatch):
+def test_shared_feed_renders_once_and_invalidates(spark, sf_dir):
     """_shared_feed must render exactly once per (sf_dir, fingerprint,
-    params) — reuse on repeat invocations, re-render when the params or
+    params): reuse on repeat invocations, re-render when the params or
     the source-table footers change (the band-index staleness contract
-    applied to streaming feeds)."""
-    import json
-    import os
+    applied to streaming feeds). An interrupted render publishes no
+    version: the next call renders again and deletes its side directory."""
+    import shutil
 
     from cdc_sink_spark.queries import runtime
 
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     calls = {"n": 0}
 
     def render(d):
@@ -1440,23 +1468,83 @@ def test_shared_feed_renders_once_and_invalidates(spark, tmp_path, monkeypatch):
             f.write('{"x": 1}\n')
 
     f1 = runtime._shared_feed(spark, sf, "testfeed", {"layout": 1}, render)
-    assert calls["n"] == 1 and os.path.isfile(os.path.join(f1, "data.ndjson"))
-    f2 = runtime._shared_feed(spark, sf, "testfeed", {"layout": 1}, render)
-    assert f2 == f1 and calls["n"] == 1, "second invocation must reuse the feed"
-    # Param change invalidates.
-    runtime._shared_feed(spark, sf, "testfeed", {"layout": 2}, render)
-    assert calls["n"] == 2
-    # Corrupt meta invalidates (truncated write == stale).
-    meta = os.path.join(os.path.dirname(f1), "_meta.json")
-    with open(meta, "w") as f:
-        f.write("{")
-    runtime._shared_feed(spark, sf, "testfeed", {"layout": 2}, render)
-    assert calls["n"] == 3
-    # Cleanup the shared dir this test created.
-    import shutil
-
-    shutil.rmtree(os.path.dirname(f1), ignore_errors=True)
+    root = os.path.dirname(f1)
     try:
-        os.remove(os.path.dirname(f1) + ".lock")
-    except OSError:
-        pass
+        assert calls["n"] == 1 and os.path.isfile(os.path.join(f1, "data.ndjson"))
+        f2 = runtime._shared_feed(spark, sf, "testfeed", {"layout": 1}, render)
+        assert f2 == f1 and calls["n"] == 1, "second invocation must reuse the feed"
+        # Param change invalidates.
+        f2 = runtime._shared_feed(spark, sf, "testfeed", {"layout": 2}, render)
+        assert f2 != f1 and calls["n"] == 2
+
+        def interrupted(d):
+            render(d)
+            raise KeyboardInterrupt  # killed mid-render
+
+        with pytest.raises(KeyboardInterrupt):
+            runtime._shared_feed(spark, sf, "testfeed", {"layout": 3}, interrupted)
+        side = set(os.listdir(root)) - {os.path.basename(f1), os.path.basename(f2)}
+        assert len(side) == 1, side  # a side directory, no third version
+        f3 = runtime._shared_feed(spark, sf, "testfeed", {"layout": 3}, render)
+        assert calls["n"] == 4, "an interrupted build must not be served"
+        assert os.path.isfile(os.path.join(f3, "data.ndjson"))
+        # The side directory and the oldest version are deleted.
+        assert sorted(os.listdir(root)) == sorted(map(os.path.basename, (f2, f3)))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        os.remove(root + ".lock")
+
+
+def test_shared_feed_reader_survives_concurrent_rebuild(spark, sf_dir):
+    """One process reads the feed returned for one set of params while
+    another process publishes the feed for new params: every file of
+    the first feed stays present and byte-identical throughout."""
+    import shutil
+    import subprocess
+    import sys
+
+    from cdc_sink_spark.queries import runtime
+
+    sf = sf_dir
+
+    def render(d):
+        for i in range(8):
+            with open(os.path.join(d, f"part-{i}.ndjson"), "w") as f:
+                f.write(f'{{"x": {i}}}\n' * 1000)
+
+    feed = runtime._shared_feed(spark, sf, "readerfeed", {"layout": "a"}, render)
+    want = {}
+    for name in os.listdir(feed):
+        with open(os.path.join(feed, name), "rb") as f:
+            want[name] = f.read()
+    # The other process has no Spark session: the events fingerprint
+    # reads parquet footers only.
+    child = subprocess.Popen(
+        [sys.executable, "-c", (
+            "import os, sys, time\n"
+            "from cdc_sink_spark import session\n"
+            "from cdc_sink_spark.queries import runtime\n"
+            "session.table = lambda *a, **k: None\n"
+            "def render(d):\n"
+            "    for i in range(50):\n"
+            "        with open(os.path.join(d, f'part-{i}.ndjson'), 'w') as f:\n"
+            "            f.write('{}\\n')\n"
+            "        time.sleep(0.01)\n"
+            "runtime._shared_feed(None, sys.argv[1], 'readerfeed', {'layout': 'b'}, render)\n"
+        ), sf],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    try:
+        reads = 0
+        while child.poll() is None or reads == 0:
+            for name, data in want.items():
+                with open(os.path.join(feed, name), "rb") as f:
+                    assert f.read() == data, name
+            reads += 1
+        assert child.returncode == 0
+        assert sorted(os.listdir(feed)) == sorted(want)
+    finally:
+        child.kill()
+        child.wait()
+        shutil.rmtree(os.path.dirname(feed), ignore_errors=True)
+        os.remove(os.path.dirname(feed) + ".lock")

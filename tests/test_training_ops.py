@@ -4,6 +4,8 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -260,6 +262,18 @@ def test_connected_components_star_beats_diameter(spark):
     assert rounds <= 8, rounds  # log-ish, far under the 64-hop diameter
 
 
+def test_connected_components_converge_past_25_hops(spark):
+    """Both CC loops run to their fixed point: a 27-node chain (26 hops)
+    is one component, so every node carries label 0. A loop capped at
+    25 rounds returned unconverged labels here."""
+    from cdc_sink_spark.operators import dedup
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(26)], "a bigint, b bigint")
+    for cc in (dedup.connected_components, dedup.connected_components_star):
+        labels = cc(df).collect()
+        assert len(labels) == 27 and {r.label for r in labels} == {0}, cc.__name__
+
+
 def _mini_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
@@ -282,8 +296,9 @@ def test_band_index_build_probe_roundtrip(spark, tmp_path):
          (102, "totally unrelated words compose this brand new doc")],
     )
     idx = BandIndex(spark, str(tmp_path / "idx"), "t_bandidx_rt")
-    idx.build(corpus, fingerprint={"n": 2})
-    assert idx.exists({"n": 2}) and not idx.exists({"n": 3})
+    version = idx.build(corpus, fingerprint={"n": 2})
+    assert os.path.dirname(version) == idx.path
+    assert os.path.isdir(os.path.join(version, "base"))
     hits = {(r.new_id, r.old_id): r.est for r in idx.probe(batch).collect()}
     assert hits[(101, 1)] == 1.0
     assert all(new != 102 for new, _ in hits)
@@ -331,12 +346,12 @@ def test_band_index_append_compact(spark, tmp_path):
     idx.build(corpus)
     assert idx.probe(batch).count() == 0  # day2 not indexed yet
     idx.append(day2)
+    delta = os.path.join(idx.version, "delta")
+    assert os.path.isdir(delta)
     hits = {(r.new_id, r.old_id) for r in idx.probe(batch).collect()}
     assert hits == {(201, 2)}
     idx.compact()
-    import os
-
-    assert not os.path.isdir(str(tmp_path / "idx" / "delta"))
+    assert not os.path.isdir(delta)
     hits2 = {(r.new_id, r.old_id) for r in idx.probe(batch).collect()}
     assert hits2 == {(201, 2)}
     spark.sql("DROP TABLE IF EXISTS t_bandidx_ac")
@@ -425,14 +440,12 @@ def test_ansi_edge_cases_no_crash(spark):
 
 
 def test_band_index_lock_and_race_safe_build(spark, tmp_path):
-    """build(skip_if_current=True) re-checks the fingerprint UNDER the
-    mutation lock (two sessions' check-then-build can't race a build
-    against a concurrent rmtree), and a held flock blocks a second
-    builder until released — the kernel releases a crashed holder's
-    flock automatically, so there is no stale-steal heuristic that
-    could evict a live long-running builder."""
+    """build() resolves one immutable version per fingerprint: the same
+    fingerprint returns the same directory without rebuilding, a changed
+    one publishes a new version, and a held flock on the index root
+    blocks a build until released (the kernel releases a crashed
+    holder's flock, so no stale-steal heuristic can evict a live one)."""
     import fcntl
-    import os
     import threading
     import time
 
@@ -440,11 +453,14 @@ def test_band_index_lock_and_race_safe_build(spark, tmp_path):
 
     corpus = _mini_docs(spark, [(1, "alpha beta gamma delta epsilon zeta eta")])
     idx = BandIndex(spark, str(tmp_path / "idx"), "t_bandidx_lock")
-    assert idx.build(corpus, fingerprint={"v": 1}, skip_if_current=True) is True
-    # Same fingerprint: the locked re-check skips the rebuild.
-    assert idx.build(corpus, fingerprint={"v": 1}, skip_if_current=True) is False
-    # Changed fingerprint still rebuilds.
-    assert idx.build(corpus, fingerprint={"v": 2}, skip_if_current=True) is True
+    v1 = idx.build(corpus, fingerprint={"v": 1})
+    base_inode = os.stat(os.path.join(v1, "base")).st_ino
+    # Same fingerprint: the published version is served, not rebuilt.
+    assert idx.build(corpus, fingerprint={"v": 1}) == v1
+    assert os.stat(os.path.join(v1, "base")).st_ino == base_inode
+    # Changed fingerprint publishes a new version beside the old one.
+    v2 = idx.build(corpus, fingerprint={"v": 2})
+    assert v2 != v1 and os.path.isdir(os.path.join(v1, "base"))
 
     # A held flock blocks; releasing it lets the builder proceed. (Two
     # separate os.open() fds have distinct open-file descriptions, so
@@ -462,7 +478,8 @@ def test_band_index_lock_and_race_safe_build(spark, tmp_path):
     fcntl.flock(fd, fcntl.LOCK_UN)
     os.close(fd)
     t.join(timeout=60)
-    assert done.is_set() and idx.exists({"v": 3})
+    assert done.is_set() and idx.version not in (v1, v2)
+    assert os.path.isdir(os.path.join(idx.version, "base"))
     spark.sql("DROP TABLE IF EXISTS t_bandidx_lock")
 
 

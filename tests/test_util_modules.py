@@ -337,6 +337,31 @@ def test_memo_puts_survive_concurrent_compaction(spark, tmp_path):
     assert [memo.get(f"k{i}") for i in range(n)] == [f"v{i}" for i in range(n)]
 
 
+def test_build_once_keeps_two_versions(tmp_path):
+    """build_once builds a key once, and after three distinct keys only
+    the two newest versions remain."""
+    from cdc_sink_spark.operators import artifact
+
+    root = str(tmp_path / "artifact")
+    built = []
+
+    def build(tag):
+        def write(d):
+            built.append(tag)
+            with open(os.path.join(d, "f"), "w") as f:
+                f.write(tag)
+        return write
+
+    va = artifact.build_once(root, {"k": "a"}, build("a"))
+    assert artifact.build_once(root, {"k": "a"}, build("again")) == va
+    vb = artifact.build_once(root, {"k": "b"}, build("b"))
+    vc = artifact.build_once(root, {"k": "c"}, build("c"))
+    assert built == ["a", "b", "c"]
+    assert sorted(os.listdir(root)) == sorted(map(os.path.basename, (vb, vc)))
+    with open(os.path.join(vc, "f")) as f:
+        assert f.read() == "c"
+
+
 def test_memo_compaction_bounds_files_and_survives(spark, tmp_path):
     """Compaction folds the append log once it fragments, preserving
     last-write-wins, without a window where the live dir is deleted."""
