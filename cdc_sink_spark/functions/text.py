@@ -38,6 +38,20 @@ LSH_ROWS = N_HASHES // LSH_BANDS
 
 SIMHASH_BITS = 30
 
+# Constant-heavy Spark expressions are built from SQL text generated
+# once from the parameters above, not from Column calls: every Column
+# builder call is a py4j round trip, so the 16-entry (a, b) table built
+# from F.struct/F.lit/cast/alias made minhash_signature cost 643 round
+# trips per call, against 80 with the text, which the JVM parses in
+# one. The arithmetic is the same either way. operators/lshindex.py
+# (band keys) and queries/textops.py (bucket pairs) follow this rule.
+MINHASH_AB_SQL = "array({})".format(
+    ", ".join(
+        f"named_struct('a', CAST({a} AS BIGINT), 'b', CAST({b} AS BIGINT))"
+        for a, b in zip(MINHASH_A, MINHASH_B)
+    )
+)
+
 
 # ------------------------------------------------------------------ Spark
 def tokens(col) -> Column:
@@ -125,12 +139,7 @@ def minhash_signature(sid_col) -> Column:
     embed H copies of it in the plan and Catalyst evaluates the shingle
     pipeline H times per row (a measured 16x blowup at sf0.1)."""
     sids = F.col(sid_col) if isinstance(sid_col, str) else sid_col
-    ab = F.array(
-        *[
-            F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
-            for a, b in zip(MINHASH_A, MINHASH_B)
-        ]
-    )
+    ab = F.expr(MINHASH_AB_SQL)
     init = F.array_repeat(F.lit(P).cast("long"), N_HASHES)
     return F.aggregate(
         sids,

@@ -3,8 +3,10 @@
 Reference: ``internal/target/apply`` + ``internal/util/applycfg/conf.go``.
 The reference renders per-product SQL (UPSERT/CTE templates, e.g.
 ``queries/crdb/conditional.tmpl``); we compute the *post-apply snapshot*
-of the target relation declaratively so Catalyst plans it — one shuffle
-on the primary key, broadcast when the mutation batch is small.
+of the target relation declaratively so Catalyst plans it — one full
+outer join on the primary key. Spark never broadcasts a full outer
+join, so both sides shuffle on the key, the target included, however
+small the mutation batch.
 
 Per-table rules carried over (conf.go:53 Config):
 - ``source_names``  rename incoming columns (SourceNames)

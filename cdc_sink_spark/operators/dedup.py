@@ -4,12 +4,16 @@ After candidate-pair generation (minhash LSH) and verification (exact
 Jaccard), corpus dedup needs the *transitive closure*: near-dup pairs
 form clusters, and one canonical document survives per cluster.
 
-Spark-first: iterative min-label propagation over the edge list — each
-round is one shuffle (join on node), and rounds = cluster diameter,
-which for near-dup graphs is tiny. At extreme scale the same loop
-upgrades to the large-star/small-star algorithm (alternating
-neighborhood contractions) without changing the interface; the
-convergence check is a cheap count per round.
+Spark-first: iterative min-label propagation in the vertex-centric
+shape of Pregel (Malewicz et al., SIGMOD 2010) and Hash-Min (Rastogi et
+al., ICDE 2013). Each node's adjacency set travels with its label, so
+one round is one explode (the node's own row plus one message per
+neighbour) and one groupBy on node: a single exchange, with no join
+against a separately partitioned edge list. Rounds = cluster diameter,
+which for near-dup graphs is tiny; each round's checkpoint job also
+observes the label sum that detects the fixed point. Chain-shaped
+graphs whose diameter grows with cluster size take the large-star/
+small-star loop below instead (O(log n) rounds).
 """
 
 from __future__ import annotations
@@ -18,74 +22,75 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
+def _observed_checkpoint(state: DataFrame) -> tuple[DataFrame, dict]:
+    """Eagerly checkpoint ``state`` (truncating the round's lineage) and
+    return it with the sums of its labels and nodes, observed on that
+    same job. Summed as decimal(38,0): bigint F.sum wraps silently at
+    int64 overflow in non-ANSI mode, and with 64-bit hash node ids a
+    wrap collision could fake a fixed point."""
+    sums = Observation()
+    state = state.observe(
+        sums,
+        F.sum(F.col("label").cast("decimal(38,0)")).alias("label"),
+        F.sum(F.col("node").cast("decimal(38,0)")).alias("node"),
+    ).localCheckpoint(eager=True)
+    return state, sums.get
+
+
 def connected_components(
     edges: DataFrame, a: str = "a", b: str = "b"
 ) -> DataFrame:
-    """(node, label) with label = min node id reachable (cluster id)."""
-    # Materialize the symmetric edge list once: every iteration joins
-    # against it, and without the checkpoint each round would re-execute
-    # the (possibly expensive) upstream pair-generation lineage. The edge
-    # list and the initial labels are checkpointed lazily (r13): they are
-    # materialized-once (persist semantics), but materialization rides
-    # round 1's job instead of each scheduling a standalone job.
-    # Partition the symmetric edge list by the PER-ROUND JOIN KEY (dst)
-    # while deduping it (r13): hash(dst) satisfies the dedup's
-    # clustered-by-(src,dst) requirement, so one explicit repartition
-    # replaces the distinct's own exchange rather than adding to it —
-    # and localCheckpoint preserves the partitioning, so every
-    # iteration's sym.dst == labels.node join reuses it instead of
-    # re-shuffling the full edge list once per round (the edge list is
-    # the BIG frame in CC; paired best-of-3 at sf0.1: 4.76 -> 3.75s,
-    # identical labels). Hot-dst skew exposure is unchanged — the join
-    # shuffled by dst every round before; this just does it once.
-    sym = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .unionByName(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
+    """(node, label) with label = min node id reachable (cluster id).
+
+    Node ids must be non-null (every caller passes LSH doc ids); duplicate,
+    reversed and self-loop edges are allowed."""
+    sym = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionByName(
+        edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
     )
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
+    # (node, label, nbrs): the adjacency set is built once, and starting
+    # from label = node, its min over the neighbours is already round 1.
+    # collect_set ignores duplicate edges, so callers need not dedup.
+    state = (
+        sym.groupBy("src")
+        .agg(F.collect_set("dst").alias("nbrs"))
+        .select(
+            F.col("src").alias("node"),
+            F.least("src", F.array_min("nbrs")).alias("label"),
+            "nbrs",
+        )
     )
+    no_nbrs = F.lit(None).cast(state.schema["nbrs"].dataType)
     # Labels only ever DECREASE (min-propagation), so the label sum is a
     # strictly-decreasing potential over the integers until the fixed
     # point: equal sums == converged, and the loop runs to that point
-    # with no round cap (diameter + 1 rounds). Both sums ride each
-    # round's checkpoint job through df.observe, so a round is one
-    # job-bearing action. The node set never changes, so round 1's node
-    # sum is the initial label sum (every label starts as its own node).
-    # Summed as decimal(38,0): bigint F.sum wraps silently at int64
-    # overflow in non-ANSI mode, and with 64-bit hash node ids a wrap
-    # collision could fake a fixed point.
-    prev_sum = None
-    while True:
-        # neighbor labels + own label, take the min per node
-        neighbor = sym.join(labels, sym.dst == labels.node).select(
-            F.col("src").alias("node"), "label"
-        )
-        sums = Observation()
-        labels = (
-            labels.unionByName(neighbor)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .observe(
-                sums,
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("label"),
-                F.sum(F.col("node").cast("decimal(38,0)")).alias("node"),
+    # with no round cap (diameter + 1 rounds). The node set never
+    # changes, so the node sum is the label sum before round 1.
+    state, sums = _observed_checkpoint(state)
+    prev_sum, cur_sum = sums["node"], sums["label"]
+    while cur_sum != prev_sum:
+        # The node's own row keeps its adjacency; each neighbour gets
+        # one message with the node's label and no adjacency.
+        msgs = state.select(
+            F.explode(
+                F.concat(
+                    F.array(F.struct("node", "label", "nbrs")),
+                    F.transform(
+                        "nbrs",
+                        lambda n: F.struct(
+                            n.alias("node"), F.col("label"), no_nbrs.alias("nbrs")
+                        ),
+                    ),
+                )
+            ).alias("m")
+        ).select("m.*")
+        state, sums = _observed_checkpoint(
+            msgs.groupBy("node").agg(
+                F.min("label").alias("label"),
+                F.first("nbrs", ignorenulls=True).alias("nbrs"),
             )
-            .localCheckpoint(eager=True)  # truncate lineage
         )
-        if prev_sum is None:
-            prev_sum = sums.get["node"]
-        cur_sum = sums.get["label"]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+        prev_sum, cur_sum = cur_sum, sums["label"]
+    return state.select("node", "label")
 
 
 def canonicalize(labels: DataFrame) -> DataFrame:

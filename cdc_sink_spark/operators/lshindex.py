@@ -50,25 +50,27 @@ def signatures(docs: DataFrame) -> DataFrame:
     return sids.select("doc_id", T.minhash_signature("sids").alias("sig"))
 
 
+# One (band, k0..k_r) struct per band, as SQL text generated from T's
+# LSH parameters (see functions/text.py on why constant-heavy
+# expressions are text); ``sig[i]`` is 0-based, as Column.getItem.
+BAND_KEYS_SQL = "array({})".format(
+    ", ".join(
+        "named_struct('band', {}, {})".format(
+            b,
+            ", ".join(
+                f"'k{r}', sig[{b * T.LSH_ROWS + r}]" for r in range(T.LSH_ROWS)
+            ),
+        )
+        for b in range(T.LSH_BANDS)
+    )
+)
+
+
 def band_rows(sigs: DataFrame) -> DataFrame:
     """(doc_id, sig, band, k0..k_r): one row per (doc, band), produced by
-    ONE explode of an array of band-key structs (a per-band union would
+    ONE inline of an array of band-key structs (a per-band union would
     re-execute the signature lineage once per band)."""
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                *[
-                    F.col("sig")[b * T.LSH_ROWS + r].alias(f"k{r}")
-                    for r in range(T.LSH_ROWS)
-                ],
-            )
-            for b in range(T.LSH_BANDS)
-        ]
-    )
-    return sigs.select("doc_id", "sig", F.explode(band_arr).alias("bk")).select(
-        "doc_id", "sig", *[F.col(f"bk.{k}").alias(k) for k in KEYS]
-    )
+    return sigs.selectExpr("doc_id", "sig", f"inline({BAND_KEYS_SQL})")
 
 
 class BandIndex:

@@ -82,12 +82,23 @@ FROM corpus GROUP BY 1
 
 
 # --------------------------------------------------------------------- C2
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + LSH near-dup pairs: shingle -> H-component signature ->
-    band buckets -> equi-join within buckets -> signature-agreement
-    estimate. The band bucket join replaces the O(n^2) all-pairs scan
-    with an equi-join Catalyst can shuffle-plan; the signature compute
-    itself is shuffle-free."""
+# Every pair (x, y) of a bucket's sorted members with x before y, as
+# (doc_a, doc_b, est_jaccard) rows: SQL text generated from T's
+# parameters, like the band keys (functions/text.py says why).
+PAIRS_SQL = (
+    "inline(flatten(transform(members, (x, i) -> transform("
+    "slice(members, i + 2, size(members)), y -> named_struct("
+    "'doc_a', x.doc_id, 'doc_b', y.doc_id, 'est_jaccard', "
+    "size(filter(zip_with(x.sig, y.sig, (p, q) -> p = q), m -> m)) / "
+    f"{T.N_HASHES})))))"
+)
+
+
+def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dedup_minhash_lsh's pairs before its dedup: a pair that shares
+    several band buckets appears once per bucket, each copy with the
+    same est_jaccard (same signatures). Callers that ignore duplicate
+    edges (the CC loops) read this and skip the dedup's exchange."""
     # The signature/band pipeline is SHARED with the persisted band
     # index (operators/lshindex.py) — one implementation, two consumers,
     # so the incremental index can never drift from the full-corpus
@@ -111,35 +122,16 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = bands.groupBy(*lshindex.KEYS).agg(
         F.array_sort(F.collect_list(F.struct("doc_id", "sig"))).alias("members")
     ).filter((F.size("members") > 1) & (F.size("members") <= LSH_BUCKET_CAP))
+    return buckets.selectExpr(PAIRS_SQL)
 
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("members"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        (
-                            F.size(
-                                F.filter(
-                                    F.zip_with(x["sig"], y["sig"], lambda p, q: p == q),
-                                    lambda m: m,
-                                )
-                            )
-                            / F.lit(T.N_HASHES)
-                        ).alias("est_jaccard"),
-                    ),
-                ),
-            )
-        )
-    ).alias("p")
-    return (
-        buckets.select(pair)
-        .select("p.doc_a", "p.doc_b", "p.est_jaccard")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash + LSH near-dup pairs: shingle -> H-component signature ->
+    band buckets -> equi-join within buckets -> signature-agreement
+    estimate. The band bucket join replaces the O(n^2) all-pairs scan
+    with an equi-join Catalyst can shuffle-plan; the signature compute
+    itself is shuffle-free."""
+    return _lsh_candidates(spark, sf_dir).dropDuplicates(["doc_a", "doc_b"])
 
 
 def _minhash_lsh_sql() -> str:
@@ -490,13 +482,15 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark side, recursive CTE on the oracle side."""
     from cdc_sink_spark.operators.dedup import connected_components
 
-    pairs = dedup_minhash_lsh(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
+    pairs = _lsh_candidates(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
     return connected_components(pairs, "doc_a", "doc_b").select("node", "label")
 
 
 def _cc_sql() -> str:
+    # MATERIALIZED: without it DuckDB inlines the LSH pair CTE and
+    # re-evaluates it on every recursive step (~9x slower, same rows).
     return f"""
-WITH RECURSIVE pairs AS ({_minhash_lsh_sql()}),
+WITH RECURSIVE pairs AS MATERIALIZED ({_minhash_lsh_sql()}),
 edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs WHERE est_jaccard >= 0.5),
 sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
 reach(node, root) AS (
@@ -800,13 +794,13 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter stage."""
     from cdc_sink_spark.operators.dedup import canonicalize, connected_components
 
-    pairs = dedup_minhash_lsh(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
+    pairs = _lsh_candidates(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
     labels = connected_components(pairs, "doc_a", "doc_b")
     return canonicalize(labels)
 
 
 KEEP_LIST_SQL = f"""
-WITH RECURSIVE pairs AS ({_minhash_lsh_sql()}),
+WITH RECURSIVE pairs AS MATERIALIZED ({_minhash_lsh_sql()}),
 edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs WHERE est_jaccard >= 0.5),
 sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
 reach(node, root) AS (
@@ -1586,7 +1580,7 @@ def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     label map is algorithm-independent."""
     from cdc_sink_spark.operators.dedup import connected_components_star
 
-    pairs = dedup_minhash_lsh(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
+    pairs = _lsh_candidates(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
     return connected_components_star(pairs, "doc_a", "doc_b").select("node", "label")
 
 

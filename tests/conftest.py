@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,3 +23,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def job_count(spark):
+    """``job_count(fn)``: the Spark jobs ``fn()`` runs, read from the
+    status tracker under a job group of its own."""
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -1120,24 +1120,7 @@ def _muts(spark, rows):
     )
 
 
-def _job_count(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, read from the status tracker under a job
-    group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_bucketed_appliers_job_count(spark, tmp_path):
+def test_bucketed_appliers_job_count(spark, tmp_path, job_count):
     """One steady-state micro-batch through each bucketed applier, wired
     as a deployment would be, runs a pinned number of Spark jobs. The
     batch's stats and touched buckets ride the one job that materializes
@@ -1183,8 +1166,8 @@ def test_bucketed_appliers_job_count(spark, tmp_path):
     streaming(warm, 0)
     switching(warm, 0)
     counts = (
-        _job_count(spark, lambda: streaming(batch, 1)),
-        _job_count(spark, lambda: switching(batch, 1)),
+        job_count(lambda: streaming(batch, 1)),
+        job_count(lambda: switching(batch, 1)),
     )
     assert switching.mode_history[-1] == (1, "serial")
     assert counts == (6, 12)

@@ -5,6 +5,7 @@ multimodal plumbing."""
 from __future__ import annotations
 
 import os
+import random
 
 import duckdb
 import pytest
@@ -272,6 +273,75 @@ def test_connected_components_converge_past_25_hops(spark):
     for cc in (dedup.connected_components, dedup.connected_components_star):
         labels = cc(df).collect()
         assert len(labels) == 27 and {r.label for r in labels} == {0}, cc.__name__
+
+
+def _union_find_labels(edges):
+    """Reference closure: node -> min node id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:  # the smaller root wins, so a root is its set's min
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _random_graph(seed):
+    """Edges over random 40-bit ids: a chain of 31 hops, a hub with 27
+    spokes, small random trees with extra intra-tree edges, self-loops
+    (one on an otherwise isolated node), duplicate and reversed edges."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 1 << 40), 140)
+    chain, hub, rest = ids[:32], ids[32:60], ids[60:]
+    edges = list(zip(chain, chain[1:]))
+    edges += [(hub[0], x) for x in hub[1:]]
+    while rest:
+        k = rng.randint(2, 6)
+        g, rest = rest[:k], rest[k:]
+        edges += [(g[i], g[rng.randrange(i)]) for i in range(1, len(g))]
+        edges += [(rng.choice(g), rng.choice(g)) for _ in range(len(g) // 2)]
+    edges += [(x, x) for x in rng.sample(ids, 5)] + [(1 << 41, 1 << 41)]
+    dups = rng.sample(edges, 20)
+    edges += [(b, a) if rng.random() < 0.5 else (a, b) for a, b in dups]
+    rng.shuffle(edges)
+    return edges
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_connected_components_equal_union_find(spark, seed):
+    """Both CC loops return exactly the union-find closure: one row per
+    node, labelled with its component's min id, on a random graph with
+    every edge shape the LSH candidate stream can carry."""
+    from cdc_sink_spark.operators import dedup
+
+    edges = _random_graph(seed)
+    expect = sorted(_union_find_labels(edges).items())
+    df = spark.createDataFrame(edges, "a bigint, b bigint")
+    for cc in (dedup.connected_components, dedup.connected_components_star):
+        got = sorted((r.node, r.label) for r in cc(df).collect())
+        assert got == expect, cc.__name__
+
+
+def test_connected_components_job_count(spark, job_count):
+    """Propagation runs two jobs per round (one exchange plus its
+    checkpoint): on pairs plus a 4-node path that is the adjacency state
+    (round 1), rounds 2-3 and the round that sees no change, then the
+    collect."""
+    from cdc_sink_spark.operators import dedup
+
+    edges = [(1, 2), (10, 11), (20, 21), (21, 22), (22, 23)]
+    df = spark.createDataFrame(edges, "a bigint, b bigint")
+    got = []
+    assert job_count(lambda: got.extend(dedup.connected_components(df).collect())) == 9
+    assert sorted((r.node, r.label) for r in got) == [
+        (1, 1), (2, 1), (10, 10), (11, 10), (20, 20), (21, 20), (22, 20), (23, 20)
+    ]
 
 
 def _mini_docs(spark, rows):
