@@ -49,8 +49,3 @@ def canonical(col, dtype: DataType) -> Column:
     else:
         out = c.cast("string")
     return F.coalesce(out, F.lit(NULL_SENTINEL))
-
-
-def crep_equal(a, b, dtype: DataType) -> Column:
-    """Fuzzy equivalence via canonical forms (crep.Equal)."""
-    return canonical(a, dtype) == canonical(b, dtype)

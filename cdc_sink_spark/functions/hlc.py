@@ -71,18 +71,6 @@ def format_hlc(col) -> Column:
     )
 
 
-def hlc_from_timestamp(col) -> Column:
-    """HLC from a wall-clock timestamp column (hlc.go:57 From)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # Exact long arithmetic: micros*1000 stays within int64. The previous
-    # cast-to-double * 1e9 lost precision past 2^53 (~hundreds of ns at
-    # current epoch), enough to misorder HLCs from close timestamps.
-    return F.struct(
-        (F.unix_micros(c.cast("timestamp")) * F.lit(1000)).alias("nanos"),
-        F.lit(0).cast("int").alias("logical"),
-    )
-
-
 def compare(a, b) -> Column:
     """Three-way compare, -1/0/1 (hlc.go:49). Struct ordering is
     field-by-field, so plain operators suffice."""

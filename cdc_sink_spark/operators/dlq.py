@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_sink_spark.operators import artifact
 from cdc_sink_spark.session import release_checkpoint
 
 
@@ -62,10 +63,13 @@ class DeadLetterQueue:
             # append-only equivalent. The queue scan is pruned to the
             # reason PARTITIONS present in this batch, so the read
             # stays bounded by this batch's failure classes, not total
-            # queue history.
-            existing = self.read().filter(F.col("reason").isin(seen.get["reasons"]))
-            out = out.join(existing, ["target_table", "reason", "payload"], "left_anti")
-            out.write.mode("append").partitionBy("reason").parquet(self.path)
+            # queue history. The lock spans the read, the anti-join and
+            # the append: two processes enqueueing the same rejects must
+            # not both see them absent and both append them.
+            with artifact.locked(self.path):
+                existing = self.read().filter(F.col("reason").isin(seen.get["reasons"]))
+                out = out.join(existing, ["target_table", "reason", "payload"], "left_anti")
+                out.write.mode("append").partitionBy("reason").parquet(self.path)
         finally:
             release_checkpoint(rendered)
 

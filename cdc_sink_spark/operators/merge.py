@@ -44,11 +44,6 @@ def rule_prefer_proposed(tgt: Column, bef: Column, prop: Column) -> Column:
     return prop
 
 
-def rule_prefer_target(tgt: Column, bef: Column, prop: Column) -> Column:
-    """Target-wins: keep the current value (explicit, auditable drop)."""
-    return tgt
-
-
 def _eq(a, b):
     """NULL-safe equality (crep.Equal treats equal nulls as equal)."""
     return a.eqNullSafe(b)

@@ -71,7 +71,6 @@ def seq_serial(
     cfg: ApplyConfig | None = None,
     apply_fn: Callable | None = None,
     collapse_windows: bool = False,
-    checkpoint_every: int = 8,
     **kw,
 ) -> tuple[DataFrame, DataFrame]:
     """Serial mode (sequencer/core): apply resolved windows in ascending
@@ -100,9 +99,7 @@ def seq_serial(
       fold 9 s, and it is the only one whose job count stays constant
       as frontiers accumulate.)
 
-    ``apply_fn``/``checkpoint_every`` are accepted for backward
-    compatibility; the grouped fold made the checkpoint cadence moot
-    (custom ``apply_fn`` is honored via the collapse path only).
+    A custom ``apply_fn`` is honored via the collapse path only.
 
     Rejection semantics: CAS- and deadline-rejected mutations under
     serial consistency are FINAL — the CAS ratchet only rises and time

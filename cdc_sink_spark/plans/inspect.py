@@ -16,10 +16,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def has_pushed_filter(df: DataFrame, column: str) -> bool:
     """True if the parquet scan reports a pushed filter on the column.
 
@@ -86,16 +82,6 @@ def scan_columns(df: DataFrame) -> list[list[str]]:
 
 def broadcast_join_count(df: DataFrame) -> int:
     return executed_plan(df).count("BroadcastHashJoin")
-
-
-def shuffle_count(df: DataFrame) -> int:
-    """TRUE shuffle Exchange operators in the plan (AQE may later
-    coalesce them). Word-bounded so BroadcastExchange does not count —
-    a substring count would keep reporting the same number when a
-    broadcast join degrades into a real shuffle."""
-    import re
-
-    return len(re.findall(r"\bExchange\b", executed_plan(df)))
 
 
 def has_partial_aggregate(df: DataFrame) -> bool:

@@ -478,8 +478,9 @@ ORACLES = {
 # ------------------------------------------------------------ C2b: closure
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive closure over LSH near-dup pairs: per node, the cluster
-    label (min reachable doc_id) — iterative min-label propagation on
-    the Spark side, recursive CTE on the oracle side."""
+    label (min reachable doc_id) — randomised contraction
+    (``operators.dedup.connected_components``) on the Spark side,
+    recursive CTE on the oracle side."""
     from cdc_sink_spark.operators.dedup import connected_components
 
     pairs = _lsh_candidates(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
@@ -1571,17 +1572,17 @@ QUERIES["bm25_topk"] = bm25_topk
 ORACLES["bm25_topk"] = _bm25_sql()
 
 
-# ------------------------------------------- C2d: star-contraction CC
+# ------------------------------------------- C2d: contraction CC
 def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same transitive closure as dedup_connected_components, computed
-    with large-star/small-star contractions instead of label
-    propagation — O(log n) rounds independent of cluster diameter (the
-    scale path for chain-shaped drift clusters). Identical oracle: the
-    label map is algorithm-independent."""
-    from cdc_sink_spark.operators.dedup import connected_components_star
+    by the same loop: randomised contraction takes O(log n) rounds
+    whatever the cluster diameter, the scale path for chain-shaped
+    drift clusters that this key names. Identical oracle: the label map
+    is algorithm-independent."""
+    from cdc_sink_spark.operators.dedup import connected_components
 
     pairs = _lsh_candidates(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
-    return connected_components_star(pairs, "doc_a", "doc_b").select("node", "label")
+    return connected_components(pairs, "doc_a", "doc_b").select("node", "label")
 
 
 QUERIES["dedup_cc_star"] = dedup_cc_star

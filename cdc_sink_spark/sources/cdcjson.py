@@ -70,16 +70,6 @@ def resolved(parsed: DataFrame) -> DataFrame:
     )
 
 
-def read_ndjson(spark, path: str, streaming: bool = False) -> DataFrame:
-    """Load an ndjson feed directory/file as raw lines. With
-    ``streaming=True`` this is the objstore-style incremental source
-    (reference: internal/source/objstore watches a bucket for new
-    changefeed files)."""
-    if streaming:
-        return spark.readStream.format("text").load(path)
-    return spark.read.text(path)
-
-
 def typed_mutations(parsed_or_lines: DataFrame, payload_schema, key_cols: list[str]) -> DataFrame:
     """Explode payload JSON into typed columns for apply: one column per
     target column plus __ts / __deleted. Delete detection follows

@@ -218,29 +218,3 @@ def load_offsets(memo, topic: str) -> dict[int, int] | None:
 
     raw = memo.get(f"kafka-offsets::{topic}")
     return {int(k): v for k, v in json.loads(raw).items()} if raw else None
-
-
-def read_kafka_stream(
-    spark,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str | dict[int, int] = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Real transport entry point — requires the spark-sql-kafka
-    connector on the classpath (unavailable in this container).
-
-    ``starting_offsets`` accepts 'earliest'/'latest' or a per-partition
-    dict (resume from ``load_offsets``); ``max_offsets_per_trigger``
-    bounds micro-batch size (backpressure at 100 TB feeds)."""
-    if isinstance(starting_offsets, dict):
-        starting_offsets = offsets_json(topic, starting_offsets)
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger:
-        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    return reader.load()

@@ -73,13 +73,18 @@ def streaming_lww(
     cols = list(flat.columns)  # plain list: the closure must not capture the DataFrame
     order_cols = ["__nanos", "__logical", *(tie_breaker or [])]
 
+    # The state and output frames are object-typed: pyspark concatenates
+    # the yielded frames with an all-None object frame, and a float64
+    # column there makes pandas warn that the concat's result dtype will
+    # change (empty/all-NA entries will count). Arrow casts each object
+    # column to the output schema's type on the way back.
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        best = pd.DataFrame([state.get], columns=cols) if state.exists else None
+        best = pd.DataFrame([state.get], columns=cols, dtype=object) if state.exists else None
         for pdf in pdfs:
             pdf = pdf.sort_values(order_cols).tail(1)
             cand = tuple(pdf.iloc[0][c] for c in order_cols)
             if best is None or cand > tuple(best.iloc[0][c] for c in order_cols):
-                best = pdf[cols]
+                best = pdf[cols].astype(object)
         state.update(tuple(best.iloc[0]))
         yield best
 

@@ -512,7 +512,7 @@ def test_assign_resolved_windows_no_row_blowup(spark):
 
 def test_seq_serial_100_windows_bounded(spark):
     """100 resolved frontiers: the per-window fold must stay tractable
-    (localCheckpoint every k windows truncates the join lineage), and
+    (the grouped per-key fold keeps the plan depth constant), and
     collapse mode produces the identical snapshot in one apply."""
     muts = _m(spark, [(i, f"v{i}", i) for i in range(1, 101)])
     resolved = spark.createDataFrame(
@@ -520,9 +520,7 @@ def test_seq_serial_100_windows_bounded(spark):
         "ts struct<nanos:long, logical:int>",
     )
     target = spark.createDataFrame([], "id bigint, val string")
-    snap, pending = sequencer.seq_serial(
-        target, muts, resolved, ["id"], ts_col="__ts", checkpoint_every=8
-    )
+    snap, pending = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
     assert snap.count() == 100 and pending.count() == 0
     snap2, _ = sequencer.seq_serial(
         target, muts, resolved, ["id"], ts_col="__ts", collapse_windows=True

@@ -253,8 +253,7 @@ def test_seq_serial_collapse_equals_windowed(spark, data):
         "ts struct<nanos:long, logical:int>",
     )
     target = spark.createDataFrame([], "id bigint, val string")
-    s1, p1 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts",
-                                  checkpoint_every=2)
+    s1, p1 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
     s2, p2 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts",
                                   collapse_windows=True)
     assert sorted((r.id, r.val) for r in s1.collect()) == sorted(

@@ -66,6 +66,47 @@ def test_streaming_lww_state(spark, tmp_path):
     assert rows[2]["__del"] is True  # latest for key 2 is the delete
 
 
+def test_streaming_lww_raises_no_pandas_concat_warning(spark, tmp_path):
+    """The LWW's Python workers run with pandas' concat FutureWarning
+    (empty or all-NA entries in a concat) raised as an error: a double
+    column, and a delete whose value is null, must not trip it."""
+    feed = str(tmp_path / "feed")
+    _write_feed(feed, [
+        '{"after":{"id":1,"v":1.5},"updated":"1.0","key":[1]}',
+        '{"after":{"id":1,"v":2.5},"updated":"3.0","key":[1]}',
+        '{"after":{"id":2,"v":0.5},"updated":"2.0","key":[2]}',
+        '{"after":null,"updated":"4.0","key":[2]}',
+    ])
+    env = spark.sparkContext.environment
+    old = env.get("PYTHONWARNINGS")
+    env["PYTHONWARNINGS"] = "error:The behavior of DataFrame concatenation:FutureWarning"
+    try:
+        typed = pipeline.stream_typed_mutations(
+            pipeline.stream_ndjson(spark, feed), "id bigint, v double", ["id"]
+        )
+        winners = pipeline.streaming_lww(
+            typed, ["id"], "id bigint, v double, __nanos long, __logical int, __del boolean"
+        )
+        q = (
+            winners.writeStream.format("memory")
+            .queryName("lww_no_warning")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        # The environment belongs to the session-wide fixture: put back
+        # whatever it held before.
+        if old is None:
+            env.pop("PYTHONWARNINGS", None)
+        else:
+            env["PYTHONWARNINGS"] = old
+    rows = {r.id: tuple(r) for r in spark.sql("select * from lww_no_warning").collect()}
+    assert rows == {1: (1, 2.5, 3, 0, False), 2: (2, None, 4, 0, True)}
+
+
 def test_streaming_windowed_counts(spark, tmp_path):
     feed = str(tmp_path / "feed")
     lines = [

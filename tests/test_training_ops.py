@@ -232,47 +232,48 @@ def test_ivf_assign_uses_maxby_not_window(spark, sf_dir):
 
 
 def test_connected_components_star_matches_propagation(spark):
-    """Large-star/small-star must produce the identical (node, label)
-    map as min-label propagation on an arbitrary graph: several
-    clusters, a hub, a chain, and singleton-free isolation."""
+    """The one CC loop (randomised contraction, which replaced both
+    min-label propagation and large-star/small-star) returns the exact
+    (node, label) map on a graph with several clusters, a triangle, a
+    chain and a pair."""
     from cdc_sink_spark.operators import dedup
 
     edges = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (20, 21),
              (5, 30), (30, 6), (6, 40), (40, 7)]
     df = spark.createDataFrame(edges, "a bigint, b bigint")
-    prop = {(r.node, r.label) for r in dedup.connected_components(df).collect()}
-    star = {(r.node, r.label) for r in dedup.connected_components_star(df).collect()}
-    assert prop == star
-    labels = dict(star)
-    assert labels[3] == 1 and labels[12] == 10 and labels[21] == 20
-    assert labels[7] == 5 and labels[40] == 5  # the chain collapses to 5
+    got = sorted((r.node, r.label) for r in dedup.connected_components(df).collect())
+    assert got == [
+        (1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 5), (10, 10), (11, 10),
+        (12, 10), (20, 20), (21, 20), (30, 5), (40, 5),
+    ]  # the chain 5-30-6-40-7 collapses to 5
 
 
-def test_connected_components_star_beats_diameter(spark):
-    """On a 64-node chain the propagation loop needs ~diameter rounds;
-    star contraction must converge in O(log n) — the upgrade path for
-    content-drift chains."""
+def test_connected_components_star_beats_diameter(spark, job_count):
+    """On a 64-node chain min-label propagation needs ~diameter rounds;
+    contraction must converge in O(log n). Round 1 runs 4 jobs (the
+    adjacency groupBy, the message exchange, the contraction exchange
+    and the checkpoint), each later round 3, and the collect 1, so
+    rounds <= 8 is jobs <= 26."""
     from cdc_sink_spark.operators import dedup
 
     chain = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(chain, "a bigint, b bigint")
-    labels, rounds = dedup.connected_components_star(df, return_rounds=True)
-    got = {r.label for r in labels.collect()}
-    assert got == {0}  # one component rooted at the min node
-    assert labels.count() == 65
-    assert rounds <= 8, rounds  # log-ish, far under the 64-hop diameter
+    got = []
+    jobs = job_count(lambda: got.extend(dedup.connected_components(df).collect()))
+    assert sorted(r.node for r in got) == list(range(65))
+    assert {r.label for r in got} == {0}  # one component rooted at the min node
+    assert jobs <= 26, jobs  # <= 8 rounds, far under the 64-hop diameter
 
 
 def test_connected_components_converge_past_25_hops(spark):
-    """Both CC loops run to their fixed point: a 27-node chain (26 hops)
-    is one component, so every node carries label 0. A loop capped at
-    25 rounds returned unconverged labels here."""
+    """The CC loop runs to its fixed point: a 27-node chain (26 hops) is
+    one component, so every node carries label 0. A loop capped at 25
+    rounds returned unconverged labels here."""
     from cdc_sink_spark.operators import dedup
 
     df = spark.createDataFrame([(i, i + 1) for i in range(26)], "a bigint, b bigint")
-    for cc in (dedup.connected_components, dedup.connected_components_star):
-        labels = cc(df).collect()
-        assert len(labels) == 27 and {r.label for r in labels} == {0}, cc.__name__
+    got = sorted((r.node, r.label) for r in dedup.connected_components(df).collect())
+    assert got == [(i, 0) for i in range(27)]
 
 
 def _union_find_labels(edges):
@@ -315,7 +316,7 @@ def _random_graph(seed):
 
 @pytest.mark.parametrize("seed", [3, 11])
 def test_connected_components_equal_union_find(spark, seed):
-    """Both CC loops return exactly the union-find closure: one row per
+    """The CC loop returns exactly the union-find closure: one row per
     node, labelled with its component's min id, on a random graph with
     every edge shape the LSH candidate stream can carry."""
     from cdc_sink_spark.operators import dedup
@@ -323,22 +324,20 @@ def test_connected_components_equal_union_find(spark, seed):
     edges = _random_graph(seed)
     expect = sorted(_union_find_labels(edges).items())
     df = spark.createDataFrame(edges, "a bigint, b bigint")
-    for cc in (dedup.connected_components, dedup.connected_components_star):
-        got = sorted((r.node, r.label) for r in cc(df).collect())
-        assert got == expect, cc.__name__
+    got = sorted((r.node, r.label) for r in dedup.connected_components(df).collect())
+    assert got == expect
 
 
 def test_connected_components_job_count(spark, job_count):
-    """Propagation runs two jobs per round (one exchange plus its
-    checkpoint): on pairs plus a 4-node path that is the adjacency state
-    (round 1), rounds 2-3 and the round that sees no change, then the
-    collect."""
+    """Contraction runs three jobs per round (two exchanges plus the
+    checkpoint), and round 1 one more for the adjacency groupBy: on
+    pairs plus a 4-node path that is two rounds, then the collect."""
     from cdc_sink_spark.operators import dedup
 
     edges = [(1, 2), (10, 11), (20, 21), (21, 22), (22, 23)]
     df = spark.createDataFrame(edges, "a bigint, b bigint")
     got = []
-    assert job_count(lambda: got.extend(dedup.connected_components(df).collect())) == 9
+    assert job_count(lambda: got.extend(dedup.connected_components(df).collect())) == 8
     assert sorted((r.node, r.label) for r in got) == [
         (1, 1), (2, 1), (10, 10), (11, 10), (20, 20), (21, 20), (22, 20), (23, 20)
     ]

@@ -337,6 +337,59 @@ def test_memo_puts_survive_concurrent_compaction(spark, tmp_path):
     assert [memo.get(f"k{i}") for i in range(n)] == [f"v{i}" for i in range(n)]
 
 
+def test_dlq_concurrent_enqueue_keeps_each_reject_once(spark, tmp_path):
+    """Two processes enqueue the same rejects at the same time: the
+    queue ends up holding each one once. A subprocess with its own
+    Spark session and this one enqueue the same batches in the same
+    order, starting together."""
+    import subprocess
+    import sys
+    import time
+
+    path, ready = str(tmp_path / "dlq"), str(tmp_path / "ready")
+    n = 4
+    code = (
+        "import sys\n"
+        "from cdc_sink_spark.operators.dlq import DeadLetterQueue\n"
+        "from cdc_sink_spark.session import get_spark\n"
+        "spark = get_spark('dlq-child', shuffle_partitions=2)\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "q = DeadLetterQueue(spark, sys.argv[1])\n"
+        "batches = [[(i * 10 + j, 'cas') for j in range(5)] for i in range(int(sys.argv[3]))]\n"
+        "open(sys.argv[2], 'w').close()\n"
+        "for b in batches:\n"
+        "    q.enqueue(spark.createDataFrame(b, 'id bigint, __reason string'), 't')\n"
+    )
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    child = subprocess.Popen(
+        [sys.executable, "-c", code, path, ready, str(n)],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env,
+    )
+    q = dlq.DeadLetterQueue(spark, path)
+    batches = [
+        spark.createDataFrame([(i * 10 + j, "cas") for j in range(5)], "id bigint, __reason string")
+        for i in range(n)
+    ]
+    deadline = time.monotonic() + 120
+    try:
+        while not os.path.exists(ready):
+            assert child.poll() is None, "the enqueueing process exited early"
+            assert time.monotonic() < deadline, "the enqueueing process never started"
+            time.sleep(0.02)
+        for b in batches:
+            q.enqueue(b, "t")
+        child.wait(timeout=max(1.0, deadline - time.monotonic()))
+    finally:
+        child.kill()
+        child.wait()
+    assert child.returncode == 0
+    payloads = [r.payload for r in q.read().collect()]
+    assert sorted(payloads) == sorted(
+        f'{{"id":{i * 10 + j}}}' for i in range(n) for j in range(5)
+    )
+
+
 def test_build_once_keeps_two_versions(tmp_path):
     """build_once builds a key once, and after three distinct keys only
     the two newest versions remain."""
