@@ -104,9 +104,10 @@ def seq_serial(
     Rejection semantics: CAS- and deadline-rejected mutations under
     serial consistency are FINAL — the CAS ratchet only rises and time
     only moves forward, so unlike besteffort's FK orphans a retry can
-    never succeed; they are therefore not parked or returned. Callers
-    needing a record of final rejections (DLQ) route through the
-    conveyor / StreamingApplier, whose batch apply surfaces them.
+    never succeed; they are consumed by the fold, not parked or
+    returned. Callers needing a record of rejections (DLQ) apply with
+    ``apply_mutations``, which returns them (the conveyor, and
+    StreamingApplier outside serial mode).
     """
     cfg = cfg or ApplyConfig()
     ts_col = kw.get("ts_col", "__ts")
@@ -295,7 +296,6 @@ def seq_besteffort(
     fk_parent: DataFrame | None = None,
     fk_cols: dict[str, str] | None = None,
     cfg: ApplyConfig | None = None,
-    with_reason: bool = False,
     **kw,
 ) -> tuple[DataFrame, DataFrame]:
     """Best-effort mode (sequencer/besteffort): apply what can apply now,
@@ -311,21 +311,8 @@ def seq_besteffort(
     (key, HLC) of the failed mutation, so parking is per-mutation —
     successfully-applied mutations of the same key are NOT re-parked
     (that would resubmit applied work every sweep).
-
-    ``with_reason=True`` adds a ``__park_reason`` column to the parked
-    frame ('fk_orphan' | 'cas' | 'deadline') so callers can separate the
-    genuinely RETRYABLE class (FK orphans — a later batch can deliver the
-    parent) from FINAL rejections (the CAS ratchet only rises, time only
-    moves forward) and route the latter to a DLQ instead of re-offering
-    them every sweep.
     """
     parked = muts.limit(0)
-    if with_reason:
-        parked = parked.withColumn("__park_reason", F.lit(None).cast("string"))
-
-    def _tag(df: DataFrame, reason: str) -> DataFrame:
-        return df.withColumn("__park_reason", F.lit(reason)) if with_reason else df
-
     if fk_parent is not None and fk_cols:
         # EVERY constraint is enforced, not just the first dict entry: a
         # row parks as soon as ONE of its FKs is orphaned, and only rows
@@ -347,33 +334,20 @@ def seq_besteffort(
             )
         muts = remaining
         for p in parked_parts:
-            parked = parked.unionByName(_tag(p, "fk_orphan"))
+            parked = parked.unionByName(p)
     snapshot, rejected = apply_mutations(target, muts, key_cols, cfg, **kw)
     if rejected is not None:
         ts_col = kw.get("ts_col", "__ts")
         rej_keys = rejected.select(
             *[F.col(k).alias(f"__r_{k}") for k in key_cols],
             F.col("__rej_ts").alias("__r_ts"),
-            F.col("__reason").alias("__r_reason"),
         ).distinct()
         cond = F.col(ts_col) == F.col("__r_ts")
         for k in key_cols:
             cond = cond & (muts[k] == F.col(f"__r_{k}"))
         # No broadcast hint: a CAS storm can make `rejected` large; let
         # AQE pick broadcast vs shuffle from the runtime size.
-        if with_reason:
-            # Inner join instead of semi, to carry the reason along. A
-            # mutation maps to at most ONE distinct rejection row:
-            # deadline-expired rows are split off BEFORE the apply, so a
-            # (key, ts) can't be both 'deadline' and 'cas' — the join
-            # cannot fan a mutation out.
-            rejected_muts = muts.join(rej_keys, cond, "inner").select(
-                *[muts[c] for c in muts.columns],
-                F.col("__r_reason").alias("__park_reason"),
-            )
-        else:
-            rejected_muts = muts.join(rej_keys.drop("__r_reason"), cond, "left_semi")
-        parked = parked.unionByName(rejected_muts)
+        parked = parked.unionByName(muts.join(rej_keys, cond, "left_semi"))
     return snapshot, parked
 
 

@@ -162,7 +162,7 @@ def streaming_mode_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     target = os.path.join(workdir, "target")
     spark.createDataFrame([], "k bigint, val double, __tie bigint").write.parquet(target)
-    applier = pipeline.ModeSwitchingApplier(
+    applier = pipeline.StreamingApplier(
         target,
         ["k"],
         parked_path=os.path.join(workdir, "parked"),

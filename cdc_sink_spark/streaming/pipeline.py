@@ -11,6 +11,11 @@ them per resolved window. Spark-first, the same pipeline is:
 Watermarks bound the LWW state: a key whose latest mutation is older
 than the watermark is flushed and dropped, mirroring how the reference
 unstages work at/below the resolved frontier.
+
+``StreamingApplier`` is the one foreachBatch apply: each micro-batch
+picks its sequencer (serial over a resolved feed, or the immediate
+apply), and every mode then shares one replay guard, one reject route,
+one ``TargetStore`` commit and one frontier advance.
 """
 
 from __future__ import annotations
@@ -25,8 +30,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from cdc_sink_spark.operators import artifact, decorators
+from cdc_sink_spark.functions.hlc import parse_hlc
+from cdc_sink_spark.operators import artifact, decorators, sequencer
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
+from cdc_sink_spark.operators.dlq import DeadLetterQueue
 from cdc_sink_spark.session import release_checkpoint
 from cdc_sink_spark.sources import cdcjson
 
@@ -143,8 +150,8 @@ def _write_schema_sentinel(df: DataFrame, path: str) -> None:
 
 
 class TargetStore:
-    """The parquet target of both streaming appliers: its layout, the
-    read an apply starts from, and the commit of the result.
+    """The parquet target of ``StreamingApplier``: its layout, the read
+    an apply starts from, and the commit of the result.
 
     With ``n_buckets`` the target is partitioned by key bucket ``__kb``
     (``init_bucketed_target``). Mutations only change rows in their own
@@ -227,21 +234,59 @@ class TargetStore:
 
 
 class StreamingApplier:
-    """foreachBatch sink: applies each micro-batch onto a parquet target
-    snapshot via the batch apply operator (sequencer/immediate shape).
+    """foreachBatch sink: applies each micro-batch onto a parquet target,
+    picking the sequencer that plans the batch first.
 
-    The target is a ``TargetStore``. Each micro-batch, after the applied
-    ledger's anti-join, is materialized once by ``TargetStore.materialize``,
-    whose job also finds its max HLC and touched buckets; the apply, the
-    DLQ, the commit and the ledger mark all read that checkpoint, and the
-    call frees every checkpoint it takes before it returns. With
-    ``n_buckets`` set, the store reads and rewrites only the touched
-    buckets and deletes any the batch emptied, which the write job reports
-    through ``df.observe``. Untouched buckets are never read or rewritten.
-    Without ``n_buckets`` the store swaps in the whole snapshot. Without a
-    rule that can reject (``ApplyConfig.can_reject``) the reject path is
-    skipped: the DLQ is never called and the whole batch is marked.
+    Reference: ``internal/sequencer/switcher/switcher.go`` only swaps
+    which sequencer plans a batch; every mode shares one acceptor stack
+    (once/marker, apply, DLQ: ``sequencer/decorators``,
+    ``switcher/group.go``). Here the swap is a per-micro-batch choice,
+    recorded in ``mode_history`` (the last 1024 batches):
+
+      serial (ModeConsistent) -> seq_serial: apply only the mutations a
+                                 resolved stamp covers; park the rest.
+      besteffort / immediate  -> apply_mutations: apply everything (best
+                                 effort without an FK parent is exactly
+                                 the immediate apply).
+
+    Serial needs a resolved feed (``resolved_dir``, ndjson
+    ``{"resolved": "<hlc>"}`` lines) and a parked store
+    (``parked_path``). ``switcher_mode`` leaves it for best effort when
+    the backlog (batch plus parked rows) passes ``backlog_limit`` or the
+    newest mutation runs ``lag_limit_nanos`` past the newest stamp;
+    without a feed it is immediate. Parked rows are re-offered to every
+    later batch whatever its mode, so a mid-stream flip converges.
+
+    After the choice every mode runs one path:
+      1. ledger filter: with ``staging`` (a StagingTable), mutations
+         already applied are dropped, so a batch replayed under its id
+         (or redelivered later) applies nothing twice;
+      2. the parked rows join the filtered batch and ``TargetStore.
+         materialize`` checkpoints the work set once; its job also
+         yields the row count, the max HLC, the parked rows read and the
+         touched buckets. The resolved stamps are read once (one job);
+      3. sequence (above);
+      4. reject route: only with a rule that can reject
+         (``ApplyConfig.can_reject``), apply_mutations' ``(key,
+         __rej_ts, __reason)`` rows go to ``dlq``, or, with a parked
+         store and no ``dlq``, to a queue at ``parked_path + "_dlq"``.
+         Serial mode's CAS rejects are final and consumed by
+         seq_serial's grouped fold;
+      5. commit through the ``TargetStore`` (with ``n_buckets``, only the
+         touched buckets are read and rewritten);
+      6. the parked store is replaced by what serial mode left over, free
+         of duplicate rows, only when it was read non-empty or something
+         is parked now;
+      7. ledger mark of the work set minus the rejects and minus what was
+         parked again;
+      8. frontier advance (``checkpoints``): to the newest resolved stamp
+         with a feed, else to the work set's max HLC.
+
+    Every checkpoint the call takes is freed before it returns. Deadline
+    rules are refused: the applier has no ``now`` to judge them by.
     """
+
+    STAMPS = "ts struct<nanos:bigint, logical:int>"
 
     def __init__(
         self,
@@ -254,15 +299,42 @@ class StreamingApplier:
         checkpoints=None,  # operators.checkpoint.CheckpointGroup
         staging=None,  # operators.staging.StagingTable: once/marker replay guard
         n_buckets: int | None = None,  # target partitioned by key bucket
+        *,
+        parked_path: str | None = None,
+        resolved_dir: str | None = None,
+        backlog_limit: int = 10_000,
+        lag_limit_nanos: int = 60 * 1_000_000_000,
     ):
+        self.cfg = cfg or ApplyConfig()
+        if self.cfg.deadlines:
+            raise ValueError("deadline rules need an explicit `now`; a streaming applier has none")
+        if resolved_dir is not None and parked_path is None:
+            raise ValueError("serial mode (resolved_dir) parks mutations: set parked_path")
         self.store = TargetStore(target_path, key_cols, n_buckets)
         self.key_cols = key_cols
-        self.cfg = cfg or ApplyConfig()
         self.tie_breaker = tie_breaker
-        self.dlq = dlq
         self.target_table = target_table
         self.checkpoints = checkpoints
         self.staging = staging
+        self.parked_path = parked_path
+        self.resolved_dir = resolved_dir
+        self.backlog_limit = backlog_limit
+        self.lag_limit_nanos = lag_limit_nanos
+        if parked_path is not None:
+            artifact.recover_dir(parked_path)  # a store swap killed mid-way
+            os.makedirs(parked_path, exist_ok=True)
+            if dlq is None:
+                dlq = DeadLetterQueue(SparkSession.active(), parked_path + "_dlq")
+        self.dlq = dlq
+        self.mode_history: list[tuple[int, str]] = []
+
+    def _resolved_stamps(self, spark: SparkSession) -> list | None:
+        """Every resolved stamp (one job), or None without a feed."""
+        if self.resolved_dir is None or not os.path.isdir(self.resolved_dir):
+            return None
+        raw = spark.read.schema("resolved string").json(self.resolved_dir)
+        ts = parse_hlc(F.col("resolved"))
+        return [r.ts for r in raw.select(ts.alias("ts")).filter(ts.isNotNull()).collect()]
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -276,52 +348,108 @@ class StreamingApplier:
             # older mutation in a LATER micro-batch from overwriting a
             # newer row.
             batch = self.staging.filter_applied(batch, self.key_cols, ts_col="__ts")
+        aggs = [F.max("__ts").alias("hlc")]
+        if self.parked_path is not None:
+            # Parked rows were never marked applied, so they join after
+            # the ledger filter; tagged, so the same job counts them.
+            parked = spark.read.schema(batch.schema).parquet(self.parked_path)
+            batch = batch.withColumn("__parked", F.lit(False)).unionByName(
+                parked.withColumn("__parked", F.lit(True))
+            )
+            aggs.append(F.count_if("__parked").alias("parked_in"))
         # Materialized BEFORE mark_applied appends to the ledger the
         # anti-join above reads, so nothing below re-runs the anti-join
         # (or the source's parse) against a changed ledger listing.
-        frontier = [F.max("__ts").alias("hlc")] if self.checkpoints is not None else []
-        batch, stats, touched = self.store.materialize(batch, *frontier)
+        checkpointed, stats, touched = self.store.materialize(batch, *aggs)
+        work = checkpointed.drop("__parked")
+        hlc, stamps = stats["hlc"], self._resolved_stamps(spark)
+        newest = max(stamps or [], default=None)
+        lag = 0
+        if stamps is not None:
+            # group.go flips to best effort when the frontier falls too
+            # far behind the incoming feed.
+            lag = max(0, (hlc[0] if hlc else 0) - (newest[0] if newest else 0))
+        mode = sequencer.switcher_mode(
+            stats["n"], lag, backlog_limit=self.backlog_limit,
+            lag_limit_nanos=self.lag_limit_nanos,
+        )
+        if mode == "serial" and stamps is None:
+            mode = "immediate"
+        self.mode_history.append((batch_id, mode))
+        del self.mode_history[:-1024]  # a long-lived stream keeps the recent choices
         with ExitStack() as pinned:
-            pinned.callback(release_checkpoint, batch)
-            snapshot, rejected = apply_mutations(
-                self.store.read(spark, touched), batch, self.key_cols, self.cfg,
-                tie_breaker=self.tie_breaker,
-            )
-            applied = batch
-            # Without a rule that can reject, the reject frame is empty by
-            # construction: no checkpoint, no DLQ call, no ledger exclusion.
-            if self.cfg.can_reject:
-                if self.staging is not None:
-                    # The ledger exclusion below reads the rejects after
-                    # the commit has replaced the target their lineage reads.
-                    rejected = rejected.localCheckpoint(eager=True)
-                    pinned.callback(release_checkpoint, rejected)
-                    # Rejected mutations stay OUT of the ledger so a DLQ
-                    # replay or retry isn't silently dropped by filter_applied.
-                    applied = decorators.mark_exclude_rejected(
-                        batch, rejected, self.key_cols, ts_col="__ts"
-                    )
-                if self.dlq is not None:
-                    # The DLQ checkpoints its rendered frame once and
-                    # early-outs on an empty reject set.
-                    self.dlq.enqueue(rejected, self.target_table)
+            pinned.callback(release_checkpoint, checkpointed)
+            target = self.store.read(spark, touched)
+            # What the ledger must not mark: the rejects, or what is
+            # parked again. No mode has both.
+            left, excluded = None, None
+            if mode == "serial":
+                # Plain LWW collapses all covered windows into one apply.
+                # A CAS ratchet is per window, and a TOAST sentinel must
+                # resolve against the prior window's winner, so either
+                # routes through the grouped per-key window fold.
+                collapse = not (self.cfg.cas_columns or self.cfg.toast_sentinel is not None)
+                snapshot, left = sequencer.seq_serial(
+                    target, work, spark.createDataFrame([(s,) for s in stamps], self.STAMPS),
+                    self.key_cols, self.cfg, collapse_windows=collapse, ts_col="__ts",
+                    tie_breaker=self.tie_breaker,
+                )
+                left, left_stats, _ = self.store.materialize(left)
+                pinned.callback(release_checkpoint, left)
+                left = excluded = left if left_stats["n"] else None
+            else:
+                snapshot, rejected = apply_mutations(
+                    target, work, self.key_cols, self.cfg, tie_breaker=self.tie_breaker,
+                )
+                # Without a rule that can reject, the reject frame is empty
+                # by construction: no checkpoint, no DLQ call.
+                if self.cfg.can_reject:
+                    if self.staging is not None:
+                        # The ledger exclusion below reads the rejects after
+                        # the commit has replaced the target their lineage reads.
+                        rejected = rejected.localCheckpoint(eager=True)
+                        pinned.callback(release_checkpoint, rejected)
+                        # Rejected mutations stay OUT of the ledger so a DLQ
+                        # replay or retry isn't silently dropped by filter_applied.
+                        excluded = rejected
+                    if self.dlq is not None:
+                        # The DLQ checkpoints its rendered frame once and
+                        # early-outs on an empty reject set.
+                        self.dlq.enqueue(rejected, self.target_table)
             self.store.commit(snapshot, touched)
+            if left is not None or stats.get("parked_in"):
+                self._park(left)
             if self.staging is not None:
                 # marker-decorator: record the batch applied only after the
                 # snapshot write landed (crash before this line -> replay is
                 # filtered next time by LWW idempotence, not double-marked).
+                applied = work if excluded is None else decorators.mark_exclude_rejected(
+                    work, excluded, self.key_cols, ts_col="__ts"
+                )
                 self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")
-        if self.checkpoints is not None and stats["hlc"] is not None:
-            # Durable applied-through frontier (staging/checkpoint): the
-            # batch max HLC becomes the partition mark AFTER the snapshot
-            # write lands, so a restart resumes from a timestamp whose
-            # effects are guaranteed on disk.
-            mx = stats["hlc"]
+        # Durable applied-through frontier (staging/checkpoint), recorded
+        # AFTER the snapshot write lands, so a restart resumes from a
+        # timestamp whose effects are on disk.
+        mark = hlc if stamps is None else newest
+        if self.checkpoints is not None and mark is not None:
             cur = self.checkpoints.resolved(self.target_table)
-            if cur is None or (mx[0], mx[1]) > cur:
+            if cur is None or (mark[0], mark[1]) > cur:
                 # pass cur: advance() then skips its own re-read of
                 # the memo log (one scan per batch, not three)
-                self.checkpoints.advance(self.target_table, mx[0], mx[1], cur=cur)
+                self.checkpoints.advance(self.target_table, mark[0], mark[1], cur=cur)
+
+    def _park(self, left: DataFrame | None) -> None:
+        """Replace the parked store with ``left`` (None empties it). A
+        replayed batch parks its own pending rows beside their stored
+        copies, so exact duplicates are dropped; distinct mutations that
+        share a key and an HLC differ in some column and stay."""
+        nxt = self.parked_path + ".next"
+        shutil.rmtree(nxt, ignore_errors=True)
+        if left is None:
+            os.makedirs(nxt)
+        else:
+            left.dropDuplicates().write.parquet(nxt)
+        artifact.replace_dir(nxt, self.parked_path)
 
 
 def run_pipeline_once(
@@ -350,178 +478,6 @@ def run_pipeline_once(
         .start()
     )
     q.awaitTermination()
-
-
-class ModeSwitchingApplier:
-    """switcher.go as a foreachBatch policy: a meta-sequencer that picks
-    the apply mode PER MICRO-BATCH from live backlog pressure.
-
-    Reference: ``internal/sequencer/switcher/switcher.go:70`` (Start
-    swaps delegate sequencers when the mode variable changes) +
-    ``group.go:109 switchModeLocked``. The reference flips a long-lived
-    delegate under a notify.Var; in Spark's micro-batch model the same
-    contract is cheaper — every batch already passes through one policy
-    point, so "switching" is just choosing which sequencer plans THIS
-    batch. The three delegates map onto the repo's sequencer operators:
-
-      serial (ModeConsistent)   -> seq_serial, collapse_windows: apply
-                                   only mutations covered by a resolved
-                                   stamp; the rest stay parked.
-      besteffort (ModeBestEffort)-> seq_besteffort: apply everything
-                                   applicable now, park failures.
-
-    Parked mutations live in a durable parquet store and are re-offered
-    on EVERY subsequent batch regardless of mode, which is what makes a
-    mid-stream flip converge: anything serial left behind is drained by
-    a later batch (or the stream's final batch) exactly like the
-    reference's staged-mutation sweep.
-    """
-
-    def __init__(
-        self,
-        target_path: str,
-        key_cols: list[str],
-        parked_path: str,
-        cfg: ApplyConfig | None = None,
-        tie_breaker: list[str] | None = None,
-        backlog_limit: int = 10_000,
-        lag_limit_nanos: int = 60 * 1_000_000_000,
-        resolved_dir: str | None = None,
-        checkpoints=None,
-        target_table: str = "target",
-        n_buckets: int | None = None,  # target partitioned by key bucket
-        dlq=None,  # DeadLetterQueue for FINAL (cas/deadline) rejections;
-        # None -> an implicit durable queue at parked_path + "_dlq" is
-        # created on first use (finals are never silently dropped)
-    ):
-        self.store = TargetStore(target_path, key_cols, n_buckets)
-        self.key_cols = key_cols
-        self.parked_path = parked_path
-        self.cfg = cfg
-        self.tie_breaker = tie_breaker
-        self.backlog_limit = backlog_limit
-        self.lag_limit_nanos = lag_limit_nanos
-        self.resolved_dir = resolved_dir
-        self.checkpoints = checkpoints
-        self.target_table = target_table
-        self.dlq = dlq
-        self.mode_history: list[tuple[int, str]] = []
-
-    def _resolved_stamps(self, spark: SparkSession) -> DataFrame | None:
-        if self.resolved_dir is None or not os.path.isdir(self.resolved_dir):
-            return None
-        from cdc_sink_spark.functions.hlc import parse_hlc
-
-        raw = spark.read.schema("resolved string").json(self.resolved_dir)
-        return raw.select(parse_hlc(F.col("resolved")).alias("ts")).filter(
-            F.col("ts").isNotNull()
-        )
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if os.path.isdir(self.parked_path):
-            parked = spark.read.schema(batch.schema).parquet(self.parked_path)
-        else:
-            parked = batch.limit(0)
-        # Materialize the WORK set once: the sequencer reads it, and what
-        # it leaves over is written back to the parked store it reads. The
-        # same job yields the whole mode decision's input (backlog depth +
-        # newest mutation ts) and the touched buckets: those of the work
-        # set, since any parked row can drain this batch.
-        work, stats, touched = self.store.materialize(
-            batch.unionByName(parked), F.max("__ts.nanos").alias("hi")
-        )
-        with ExitStack() as pinned:
-            pinned.callback(release_checkpoint, work)
-            self._apply(spark, work, stats, touched, batch_id, pinned)
-
-    def _apply(self, spark, work, stats, touched, batch_id, pinned: ExitStack) -> None:
-        from cdc_sink_spark.operators import sequencer
-
-        resolved = self._resolved_stamps(spark)
-        lag, fr = 0, None
-        if resolved is not None:
-            # The newest frontier stamp, read once: the mode decision's
-            # lag and the mark checkpoints.advance records are the same
-            # stamp. Lag is newest mutation vs newest frontier stamp
-            # (group.go flips to besteffort when the frontier falls too
-            # far behind the incoming feed).
-            fr = resolved.agg(F.max("ts")).first()[0]
-            lag = max(0, (stats["hi"] or 0) - (fr[0] if fr is not None else 0))
-        mode = sequencer.switcher_mode(
-            stats["n"], lag, backlog_limit=self.backlog_limit,
-            lag_limit_nanos=self.lag_limit_nanos,
-        )
-        if mode == "serial" and resolved is None:
-            mode = "immediate"  # no frontier feed: core degenerates
-        self.mode_history.append((batch_id, mode))
-        target = self.store.read(spark, touched)
-        if mode == "serial":
-            # Plain LWW collapses all covered windows into one apply;
-            # with CAS configured the per-window ratchet is semantic —
-            # and with a TOAST sentinel the placeholder must resolve
-            # against the PRIOR WINDOW's winner, not the pre-batch
-            # target — so either routes through the grouped per-key
-            # window fold instead.
-            collapse = not (
-                self.cfg
-                and (self.cfg.cas_columns or self.cfg.toast_sentinel is not None)
-            )
-            snapshot, left_over = sequencer.seq_serial(
-                target, work, resolved, self.key_cols, self.cfg,
-                collapse_windows=collapse, ts_col="__ts",
-                tie_breaker=self.tie_breaker,
-            )
-        else:
-            # "besteffort", and "immediate" (no resolved feed yet) which
-            # is best-effort without an FK parent: apply-and-park-failures.
-            snapshot, left_over = sequencer.seq_besteffort(
-                target, work, self.key_cols, cfg=self.cfg, ts_col="__ts",
-                tie_breaker=self.tie_breaker, with_reason=True,
-            )
-        left_over = left_over.localCheckpoint(eager=True)
-        pinned.callback(release_checkpoint, left_over)
-        if "__park_reason" in left_over.columns:
-            # CAS- and deadline-rejected mutations are FINAL under this
-            # class's own semantics (the CAS ratchet only rises, time only
-            # moves forward — see seq_serial's rejection contract), so
-            # re-parking them would re-apply and re-park the same rows
-            # every micro-batch forever AND inflate the backlog count that
-            # feeds switcher_mode (a sustained CAS conflict could latch
-            # the pipeline into besteffort permanently). Route them to the
-            # DLQ (idempotent enqueue — crash-replayed batches won't
-            # duplicate entries); only genuinely retryable parks (FK
-            # orphans, serial's uncovered pending) go back to the store.
-            is_final = F.col("__park_reason").isin("cas", "deadline")
-            final = left_over.filter(is_final)
-            left_over = left_over.filter(
-                ~F.coalesce(is_final, F.lit(False))
-            ).drop("__park_reason")
-            if self.dlq is None and not final.isEmpty():
-                # No DLQ configured but final rejections occurred: default
-                # to a durable implicit DLQ beside the parked store rather
-                # than dropping rows (a restart would zero any in-memory
-                # counter — CAS/deadline rejects must stay inspectable and
-                # replayable, exactly like the pre-r13 parked store, just
-                # without the infinite re-apply loop).
-                from cdc_sink_spark.operators.dlq import DeadLetterQueue
-
-                self.dlq = DeadLetterQueue(spark, self.parked_path + "_dlq")
-            if self.dlq is not None:
-                self.dlq.enqueue(
-                    final.withColumnRenamed("__park_reason", "__reason"),
-                    self.target_table,
-                )
-        self.store.commit(snapshot, touched)
-        # The parked store stays a whole-store rewrite: it is
-        # FAILURE-sized (shrinks to zero in steady state), so the rewrite
-        # volume is already proportional to the parked backlog, never to
-        # the table.
-        left_over.write.mode("overwrite").parquet(self.parked_path)
-        if self.checkpoints is not None and fr is not None:
-            cur = self.checkpoints.resolved(self.target_table)
-            if cur is None or (fr[0], fr[1]) > cur:
-                self.checkpoints.advance(self.target_table, fr[0], fr[1], cur=cur)
 
 
 def streaming_dedup_time_key(

@@ -774,11 +774,10 @@ def test_seq_besteffort_enforces_every_fk(spark):
     assert {r.id for r in parked.collect()} == {2, 7}
 
 
-def test_seq_besteffort_with_reason_tags_park_class(spark):
-    """with_reason=True labels every parked row with WHY it parked —
-    'fk_orphan' (retryable: a later batch can deliver the parent) vs
-    'cas' (final: the ratchet only rises) — so callers can route final
-    rejections to a DLQ instead of re-offering them every sweep."""
+def test_seq_besteffort_parks_cas_rejects_and_fk_orphans(spark):
+    """A CAS-rejected mutation and an FK orphan both park: the snapshot
+    keeps the target row the CAS rule protected, and the parked set
+    holds exactly the two mutations that did not apply."""
     from cdc_sink_spark.operators.apply import ApplyConfig
 
     target = spark.createDataFrame([Row(id=1, org_id=10, v=5.0)],
@@ -792,17 +791,10 @@ def test_seq_besteffort_with_reason_tags_park_class(spark):
     )
     snap, parked = sequencer.seq_besteffort(
         target, muts, ["id"], fk_parent=parent, fk_cols={"id": "pid"},
-        cfg=ApplyConfig(cas_columns=["v"]), ts_col="__ts", with_reason=True,
-    )
-    assert {r.id: r.v for r in snap.collect()} == {1: 5.0}  # v=3 failed CAS
-    got = {(r.id, r["__park_reason"]) for r in parked.collect()}
-    assert got == {(1, "cas"), (9, "fk_orphan")}
-    # default keeps the historical schema (no reason column)
-    _, parked_plain = sequencer.seq_besteffort(
-        target, muts, ["id"], fk_parent=parent, fk_cols={"id": "pid"},
         cfg=ApplyConfig(cas_columns=["v"]), ts_col="__ts",
     )
-    assert "__park_reason" not in parked_plain.columns
+    assert {r.id: r.v for r in snap.collect()} == {1: 5.0}  # v=3 failed CAS
+    assert {r.id for r in parked.collect()} == {1, 9}
 
 
 def test_merge_fallback_rule_resolves_conflict(spark):

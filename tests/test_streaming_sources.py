@@ -821,7 +821,7 @@ def test_mode_switch_serial_parks_uncovered(spark, tmp_path):
     os.makedirs(resolved_dir)
     with open(os.path.join(resolved_dir, "r.json"), "w") as f:
         f.write(_json.dumps({"resolved": "5.0000000000"}) + "\n")
-    applier = pipeline.ModeSwitchingApplier(
+    applier = pipeline.StreamingApplier(
         target, ["id"], parked_path=str(tmp_path / "parked"),
         backlog_limit=10, resolved_dir=resolved_dir,
         lag_limit_nanos=1 << 60,
@@ -867,7 +867,7 @@ def test_mode_switch_serial_cas_ratchet(spark, tmp_path):
     with open(os.path.join(resolved_dir, "r.json"), "w") as f:
         f.write(_json.dumps({"resolved": "10.0000000000"}) + "\n")
         f.write(_json.dumps({"resolved": "20.0000000000"}) + "\n")
-    applier = pipeline.ModeSwitchingApplier(
+    applier = pipeline.StreamingApplier(
         target, ["id"], parked_path=str(tmp_path / "parked"),
         cfg=ApplyConfig(cas_columns=["v"]),
         backlog_limit=100, resolved_dir=resolved_dir, lag_limit_nanos=1 << 60,
@@ -904,7 +904,7 @@ def test_mode_switch_serial_toast_across_windows(spark, tmp_path):
     with open(os.path.join(resolved_dir, "r.json"), "w") as f:
         f.write(_json.dumps({"resolved": "10.0000000000"}) + "\n")
         f.write(_json.dumps({"resolved": "20.0000000000"}) + "\n")
-    applier = pipeline.ModeSwitchingApplier(
+    applier = pipeline.StreamingApplier(
         target, ["id"], parked_path=str(tmp_path / "parked"),
         cfg=ApplyConfig(toast_sentinel=TOAST),
         backlog_limit=100, resolved_dir=resolved_dir, lag_limit_nanos=1 << 60,
@@ -1124,8 +1124,8 @@ def test_mode_switcher_bucketed_target(spark, tmp_path):
     )
     N_B = 8
     pipeline.init_bucketed_target(seed, target, ["id"], N_B)
-    applier = pipeline.ModeSwitchingApplier(
-        target, ["id"], parked, backlog_limit=1_000_000, n_buckets=N_B
+    applier = pipeline.StreamingApplier(
+        target, ["id"], parked_path=parked, backlog_limit=1_000_000, n_buckets=N_B
     )
     batch = spark.createDataFrame(
         [Row(id=3, v=100.0, __ts=Row(nanos=5, logical=0), __deleted=False)],
@@ -1162,13 +1162,16 @@ def _muts(spark, rows):
 
 
 def test_bucketed_appliers_job_count(spark, tmp_path, job_count):
-    """One steady-state micro-batch through each bucketed applier, wired
-    as a deployment would be, runs a pinned number of Spark jobs. The
-    batch's stats and touched buckets ride the one job that materializes
-    it, and the set of buckets the commit leaves non-empty rides the
-    commit write itself, so none of them runs a job of its own. The
-    target read after the first batch infers no schema, and without a
-    CAS rule the ``StreamingApplier`` runs no reject path."""
+    """One steady-state micro-batch through the bucketed applier in three
+    wirings a deployment would use (ledger + DLQ + frontier; serial mode
+    over a resolved feed; a parked store without a feed) runs a pinned
+    number of Spark jobs. The batch's stats, parked-row count and touched
+    buckets ride the one job that materializes it, and the set of buckets
+    the commit leaves non-empty rides the commit write itself, so none of
+    them runs a job of its own. The target read after the first batch
+    infers no schema, without a CAS rule no reject path runs, the
+    resolved stamps are read by one job, and an empty parked store is
+    not rewritten."""
     from cdc_sink_spark.operators.checkpoint import CheckpointGroup
     from cdc_sink_spark.operators.dlq import DeadLetterQueue
     from cdc_sink_spark.operators.memo import Memo
@@ -1196,22 +1199,106 @@ def test_bucketed_appliers_job_count(spark, tmp_path, job_count):
     with open(os.path.join(store("resolved"), "r.json"), "w") as f:
         f.write(json.dumps({"resolved": "10.0000000000"}) + "\n")
     pipeline.init_bucketed_target(seed, store("t2"), ["id"], 8)
-    switching = pipeline.ModeSwitchingApplier(
-        store("t2"), ["id"], store("parked"),
+    switching = pipeline.StreamingApplier(
+        store("t2"), ["id"], parked_path=store("parked"),
         backlog_limit=100, lag_limit_nanos=1 << 60,
         resolved_dir=store("resolved"),
         checkpoints=CheckpointGroup(Memo(spark, store("memo2")), "t"),
         target_table="t",
         n_buckets=8,
     )
+    pipeline.init_bucketed_target(seed, store("t3"), ["id"], 8)
+    unfed = pipeline.StreamingApplier(
+        store("t3"), ["id"], parked_path=store("parked3"),
+        backlog_limit=100, lag_limit_nanos=1 << 60,
+        checkpoints=CheckpointGroup(Memo(spark, store("memo3")), "t"),
+        target_table="t",
+        n_buckets=8,
+    )
     streaming(warm, 0)
     switching(warm, 0)
+    unfed(warm, 0)
     counts = (
         job_count(lambda: streaming(batch, 1)),
         job_count(lambda: switching(batch, 1)),
+        job_count(lambda: unfed(batch, 1)),
     )
     assert switching.mode_history[-1] == (1, "serial")
-    assert counts == (6, 12)
+    assert unfed.mode_history[-1] == (1, "immediate")
+    assert counts == (6, 10, 4)
+
+
+def test_streaming_applier_serial_replay_parks_once(spark, tmp_path):
+    """A serial-mode batch replayed under its own batch id (a crash
+    before the stream checkpoint commits) changes nothing: the ledger
+    drops the mutation already applied, and the one beyond the frontier
+    is parked once, not once per run."""
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    target = str(tmp_path / "target")
+    spark.createDataFrame([Row(id=9, v="seed")], "id bigint, v string").write.parquet(target)
+    resolved_dir = str(tmp_path / "resolved")
+    os.makedirs(resolved_dir)
+    with open(os.path.join(resolved_dir, "r.json"), "w") as f:
+        f.write(json.dumps({"resolved": "5.0000000000"}) + "\n")
+    parked = str(tmp_path / "parked")
+    applier = pipeline.StreamingApplier(
+        target, ["id"], staging=StagingTable(spark, str(tmp_path / "staging")),
+        parked_path=parked, resolved_dir=resolved_dir, lag_limit_nanos=1 << 60,
+    )
+    batch = _muts(spark, [(1, "a", 4), (2, "b", 7)])
+    for _ in range(3):
+        applier(batch, 0)
+        out = {r.id: r.v for r in spark.read.parquet(target).collect()}
+        assert out == {1: "a", 9: "seed"}
+        assert [(r.id, r.v, r["__ts"].nanos) for r in spark.read.parquet(parked).collect()] == [
+            (2, "b", 7)
+        ]
+    assert applier.mode_history == [(0, "serial")] * 3
+
+
+def test_streaming_applier_cas_replay_keeps_dlq(spark, tmp_path):
+    """With a CAS rule and a DLQ, a replayed batch that applied one
+    mutation and rejected another leaves the DLQ and the target as they
+    were: the applied mutation is in the ledger, so it is not re-judged
+    against its own result ('zz' > 'zz' is false) and dead-lettered."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    target = str(tmp_path / "target")
+    spark.createDataFrame(
+        [Row(id=1, v="seed1"), Row(id=2, v="seed2")], "id bigint, v string"
+    ).write.parquet(target)
+    dlq = DeadLetterQueue(spark, str(tmp_path / "dlq"))
+    applier = pipeline.StreamingApplier(
+        target, ["id"], cfg=ApplyConfig(cas_columns=["v"]), dlq=dlq,
+        staging=StagingTable(spark, str(tmp_path / "staging")),
+        parked_path=str(tmp_path / "parked"),
+    )
+    # id 1: 'a' < 'seed1' is a CAS reject; id 2: 'zz' > 'seed2' applies.
+    batch = _muts(spark, [(1, "a", 5), (2, "zz", 6)])
+
+    def state():
+        out = {r.id: r.v for r in spark.read.parquet(target).collect()}
+        return out, sorted(map(tuple, dlq.read().collect()))
+
+    applier(batch, 0)
+    first = state()
+    assert first[0] == {1: "seed1", 2: "zz"} and [r[2] for r in first[1]] == ["cas"]
+    applier(batch, 0)
+    assert state() == first
+
+
+def test_streaming_applier_refuses_deadline_rules(spark, tmp_path):
+    """A deadline rule needs an explicit ``now``, which no micro-batch
+    has: the constructor refuses it instead of the first batch failing."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
+    with pytest.raises(ValueError, match="deadline"):
+        pipeline.StreamingApplier(
+            str(tmp_path / "target"), ["id"], cfg=ApplyConfig(deadlines={"v": 60.0})
+        )
 
 
 def _bucket_files(target):
@@ -1248,8 +1335,8 @@ def test_bucketed_applier_deletes_emptied_bucket(spark, tmp_path, kind):
     if kind == "streaming":
         applier = pipeline.StreamingApplier(target, ["id"], n_buckets=8)
     else:
-        applier = pipeline.ModeSwitchingApplier(
-            target, ["id"], str(tmp_path / "parked"), n_buckets=8
+        applier = pipeline.StreamingApplier(
+            target, ["id"], parked_path=str(tmp_path / "parked"), n_buckets=8
         )
     applier(batch, 0)
     after = _bucket_files(target)
@@ -1359,8 +1446,8 @@ def test_applier_releases_its_checkpoints(spark, tmp_path, kind):
             n_buckets=8,
         )
     else:
-        applier = pipeline.ModeSwitchingApplier(
-            target, ["id"], str(tmp_path / "parked"), cfg=cfg, dlq=dlq,
+        applier = pipeline.StreamingApplier(
+            target, ["id"], parked_path=str(tmp_path / "parked"), cfg=cfg, dlq=dlq,
             target_table="t", n_buckets=8,
         )
     # id 1: 'a' < 'seed1' is a CAS reject; id 2: 'zz' > 'seed2' applies.
@@ -1422,7 +1509,7 @@ def test_mode_switch_final_rejects_drain_to_dlq_not_parked(spark, tmp_path):
     target = str(tmp_path / "target")
     spark.createDataFrame([Row(id=1, v=5.0)], "id bigint, v double").write.parquet(target)
     dlq = DeadLetterQueue(spark, str(tmp_path / "dlq"))
-    applier = pipeline.ModeSwitchingApplier(
+    applier = pipeline.StreamingApplier(
         target, ["id"], parked_path=str(tmp_path / "parked"),
         cfg=ApplyConfig(cas_columns=["v"]),
         backlog_limit=100, dlq=dlq,  # no resolved feed -> immediate mode
@@ -1459,7 +1546,7 @@ def test_mode_switch_final_rejects_implicit_dlq_without_config(spark, tmp_path):
 
     target = str(tmp_path / "target")
     spark.createDataFrame([Row(id=1, v=5.0)], "id bigint, v double").write.parquet(target)
-    applier = pipeline.ModeSwitchingApplier(
+    applier = pipeline.StreamingApplier(
         target, ["id"], parked_path=str(tmp_path / "parked"),
         cfg=ApplyConfig(cas_columns=["v"]), backlog_limit=100,
     )
