@@ -15,11 +15,11 @@ batch-apply, itself fully parallel).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
+from pyspark.sql.types import ArrayType, DataType
 
 from cdc_sink_spark.operators import msort
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
@@ -33,73 +33,55 @@ def seq_immediate(
     return apply_mutations(target, muts, key_cols, cfg, **kw)
 
 
-def assign_resolved_windows(
-    muts: DataFrame,
-    resolved: DataFrame,
-    ts_col: str = "ts",
-    resolved_ts_col: str = "ts",
-) -> DataFrame:
+def _hlc_array(hlcs: Sequence, ts_type: DataType):
+    """``(nanos, logical)`` HLCs as one literal array of the mutations' ts
+    type, built as one SQL expression: a Column per HLC costs several JVM
+    round trips (1000 frontiers took ~3 s that way on a 4-core box, and
+    0.2 s as one expression)."""
+    items = ", ".join(f"named_struct('nanos', {int(n)}L, 'logical', {int(lg)})" for n, lg in hlcs)
+    return F.expr(f"array({items})").cast(ArrayType(ts_type))
+
+
+def assign_resolved_windows(muts: DataFrame, resolved: Sequence, ts_col: str = "ts") -> DataFrame:
     """Tag each mutation with the earliest resolved timestamp covering it
     (sequencer/core groups work into resolved-timestamp windows).
 
-    Scalable construction (round-9 fix): the previous theta broadcast
-    join (``ts <= resolved_ts``) multiplied the mutation stream by the
-    number of frontiers and re-aggregated with a full-width
-    ``groupBy(*muts.columns)`` shuffle. Now the (tiny) frontier set is
-    collapsed to ONE sorted-array row, broadcast, and the covering
-    frontier picked per row with ``array_min(filter(...))`` — zero
-    shuffle, zero row blowup, stream untouched. The higher-order
-    function is interpreted (not codegen), but it runs on an array of
-    N-frontiers elements per row, which beats materializing N× rows.
+    ``resolved`` is the frontier as ``(nanos, logical)`` HLCs: control
+    data the driver already holds. They become one sorted literal array
+    and the covering frontier is picked per row with
+    ``array_min(filter(...))``: no job, no exchange, no join, and no row
+    blowup (a theta join on ``ts <= resolved`` would multiply the stream
+    by the frontier count). The higher-order function is interpreted,
+    not code-generated, and costs O(frontiers) per row.
     """
-    farr = (
-        resolved.select(F.col(resolved_ts_col).alias("resolved_ts"))
-        .distinct()
-        .agg(F.sort_array(F.collect_set("resolved_ts")).alias("__frontiers"))
-    )
-    covering = F.array_min(
-        F.filter("__frontiers", lambda f: F.col(ts_col) <= f)
-    ).alias("resolved_window")
-    return muts.crossJoin(F.broadcast(farr)).select(*muts.columns, covering)
+    frontiers = _hlc_array(sorted(set(map(tuple, resolved))), muts.schema[ts_col].dataType)
+    covering = F.array_min(F.filter(frontiers, lambda f: F.col(ts_col) <= f))
+    return muts.withColumn("resolved_window", covering)
 
 
 def seq_serial(
     target: DataFrame,
     muts: DataFrame,
-    resolved: DataFrame,
+    resolved: Sequence,
     key_cols: list[str],
     cfg: ApplyConfig | None = None,
-    apply_fn: Callable | None = None,
-    collapse_windows: bool = False,
     **kw,
 ) -> tuple[DataFrame, DataFrame]:
     """Serial mode (sequencer/core): apply resolved windows in ascending
-    order; mutations beyond the last frontier stay staged.
+    order; mutations beyond the last frontier stay staged. ``resolved``
+    holds the frontier's ``(nanos, logical)`` HLCs. Returns ``(snapshot,
+    pending)``.
 
-    Two fully-distributed strategies — no driver-side loop over windows
-    in either (the round-10 review's last ``collect()`` in operators/):
+    The rules pick one of two fully-distributed strategies, with no
+    driver-side loop over windows in either:
 
-    - ``collapse_windows=True``: when per-window side effects don't
-      matter (plain LWW apply, no CAS/deadline interplay across window
-      boundaries), all covered windows collapse into ONE apply of every
-      mutation at-or-below the max frontier — same final snapshot, one
-      join.
-    - otherwise a GROUPED per-key fold: windows are disjoint ts
-      intervals and the reference's own scheduler is key-disjoint
-      (util/lockset), so window-serial semantics factor into an
-      independent sequential fold per key. One shuffle on the key
-      brings each key's window winners together; a JVM-side
-      ``F.aggregate`` over the sorted winner array replays the windows
-      in order (CAS ratchet, deletes) against the target row from one
-      outer join. Cost is O(windows-per-key) per key — constant plan
-      depth however many frontiers a day brings, where the old driver
-      loop built one join PER WINDOW. (Measured on 200k rows x 100
-      windows x 20k keys: old driver loop 44 s, a pandas grouped-apply
-      69 s — ~3 ms of invocation overhead PER GROUP — the expression
-      fold 9 s, and it is the only one whose job count stays constant
-      as frontiers accumulate.)
-
-    A custom ``apply_fn`` is honored via the collapse path only.
+    - plain LWW (no CAS, deadline or TOAST rule): windows commute, so
+      every covered window collapses into ONE apply of the mutations at
+      or below the newest frontier. Covered and pending are split by two
+      comparisons against that literal HLC.
+    - a window-sensitive rule: a CAS ratchet or a deadline acts per
+      window, and a TOAST sentinel resolves against the prior window's
+      winner, so the apply is ``_serial_grouped_fold``.
 
     Rejection semantics: CAS- and deadline-rejected mutations under
     serial consistency are FINAL — the CAS ratchet only rises and time
@@ -110,47 +92,46 @@ def seq_serial(
     StreamingApplier outside serial mode).
     """
     cfg = cfg or ApplyConfig()
+    if cfg.cas_columns or cfg.deadlines or cfg.toast_sentinel is not None:
+        return _serial_grouped_fold(target, muts, resolved, key_cols, cfg, **kw)
     ts_col = kw.get("ts_col", "__ts")
-    tagged = assign_resolved_windows(muts, resolved, ts_col=ts_col)
-    pending = tagged.filter(F.col("resolved_window").isNull()).drop("resolved_window")
-    covered = tagged.filter(F.col("resolved_window").isNotNull())
-    window_sensitive = (
-        cfg.cas_columns or cfg.deadlines or cfg.toast_sentinel is not None
-    )
-    if apply_fn is not None and not collapse_windows and window_sensitive:
-        # Collapsing all windows into one apply changes semantics when a
-        # CAS ratchet / deadline / TOAST sentinel interacts across window
-        # boundaries (a collapsed LWW pick can land on a value the
-        # per-window ratchet would have rejected, and a collapsed TOAST
-        # sentinel resolves against the pre-batch target instead of the
-        # prior window's winner). A custom apply_fn only has the
-        # collapsed path, so refuse rather than silently lose
-        # window-serial order.
-        raise ValueError(
-            "apply_fn with cas_columns/deadlines/toast_sentinel requires "
-            "collapse_windows=True (custom apply functions run on the collapsed "
-            "single-batch path, which is not window-serial); drop apply_fn to "
-            "get the grouped fold"
-        )
-    if collapse_windows or apply_fn is not None:
-        apply_fn = apply_fn or apply_mutations
-        snapshot, _ = apply_fn(target, covered.drop("resolved_window"), key_cols, cfg, **kw)
-        return snapshot, pending
-    snapshot = _serial_grouped_fold(target, covered, key_cols, cfg, **kw)
-    return snapshot, pending
+    covers = F.lit(False)
+    if resolved:
+        newest = _hlc_array([max(map(tuple, resolved))], muts.schema[ts_col].dataType)[0]
+        # A NULL stamp stays pending, as an untagged row of the fold does.
+        covers = F.coalesce(F.col(ts_col) <= newest, F.lit(False))
+    snapshot, _ = apply_mutations(target, muts.filter(covers), key_cols, cfg, **kw)
+    return snapshot, muts.filter(~covers)
 
 
 def _serial_grouped_fold(
     target: DataFrame,
-    covered: DataFrame,
+    muts: DataFrame,
+    resolved: Sequence,
     key_cols: list[str],
     cfg: ApplyConfig,
     now=None,
     ts_col: str = "__ts",
     deleted_col: str = "__deleted",
     tie_breaker: list[str] | None = None,
-) -> DataFrame:
-    """Window-serial apply as one grouped fold per key (see seq_serial).
+) -> tuple[DataFrame, DataFrame]:
+    """Window-serial apply as one grouped fold per key (see seq_serial);
+    returns ``(snapshot, pending)``. Under plain LWW it equals the
+    collapsed apply, and it is the reference the tests hold it to.
+
+    Windows are disjoint ts intervals and the reference's own scheduler
+    is key-disjoint (util/lockset), so window-serial semantics factor
+    into an independent sequential fold per key. Each mutation is tagged
+    with its window (``assign_resolved_windows``), one shuffle on the
+    key brings each key's window winners together, and a JVM-side
+    ``F.aggregate`` over the sorted winner array replays the windows in
+    order (CAS ratchet, deletes) against the target row from one outer
+    join. Cost is O(windows-per-key) per key, with a constant plan depth
+    however many frontiers a day brings. (Measured on 200k rows x 100
+    windows x 20k keys: a driver loop with one join per window 44 s, a
+    pandas grouped-apply 69 s, at ~3 ms of invocation overhead per
+    group, and the expression fold 9 s; only the fold's job count stays
+    constant as frontiers accumulate.)
 
     Column rules (rename/ignore/exprs/extras) and deadlines are
     window-independent, so they run as the SAME DataFrame expressions
@@ -161,6 +142,9 @@ def _serial_grouped_fold(
     """
     from cdc_sink_spark.operators.apply import apply_deadlines, prepare_mutations
 
+    tagged = assign_resolved_windows(muts, resolved, ts_col=ts_col)
+    pending = tagged.filter(F.col("resolved_window").isNull()).drop("resolved_window")
+    covered = tagged.filter(F.col("resolved_window").isNotNull())
     # resolved_window is fold-internal metadata, and tie-breaker columns
     # are ordering inputs: keep both out of extras packing (else the
     # window tag pollutes extras payloads AND the columns are dropped
@@ -284,9 +268,10 @@ def _serial_grouped_fold(
         ],
         final.alias("__acc"),
     ).filter(F.col("__acc.p"))
-    return out.select(
+    snapshot = out.select(
         *key_cols, *[F.col(f"__acc.v.{f.name}").alias(f.name) for f in val_fields]
     ).select(*[f.name for f in out_schema.fields])
+    return snapshot, pending
 
 
 def seq_besteffort(

@@ -112,6 +112,27 @@ class StagingTable:
             artifact.replace_dir(tmp, bpath)
 
 
+def mark_exclude_rejected(
+    muts: DataFrame, rejected: DataFrame, key_cols: list[str], ts_col: str = "ts"
+) -> DataFrame:
+    """The slice of ``muts`` that was applied: ``muts`` minus the (key,
+    HLC) pairs in ``rejected``, for ``StagingTable.mark_applied``
+    (marker.go marks exactly what the target transaction took).
+    ``rejected`` is either apply_mutations' ``(key, __rej_ts)`` rows or
+    mutations parked again in ``muts``' own schema. Marking a rejected or
+    parked mutation applied would lose it: ``filter_applied`` would drop
+    its replay or retry forever."""
+    rej_ts = "__rej_ts" if "__rej_ts" in rejected.columns else ts_col
+    rej = rejected.select(
+        *[F.col(k).alias(f"__rj_{k}") for k in key_cols],
+        F.col(rej_ts).alias("__rj_ts"),
+    )
+    cond = muts[ts_col] == rej["__rj_ts"]
+    for k in key_cols:
+        cond = cond & (muts[k] == rej[f"__rj_{k}"])
+    return muts.join(rej, cond, "left_anti")
+
+
 def resolved_frontier(
     staged: DataFrame, resolved: DataFrame, group_cols: list[str] | None = None
 ) -> DataFrame:

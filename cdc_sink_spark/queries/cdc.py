@@ -489,14 +489,10 @@ def seq_serial_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serial sequencer: two resolved frontiers (Jan 11 / Jan 21);
     mutations beyond the last frontier stay parked, so the snapshot
     reflects only mutations with ts <= Jan 21."""
-    frontiers = spark.createDataFrame(
-        [(1704931200 * 1_000_000_000, 0), (1705795200 * 1_000_000_000, 0)],
-        "nanos long, logical int",
-    ).select(F.struct("nanos", "logical").alias("ts"))
     snap, pending = sequencer.seq_serial(
         _target(spark, sf_dir),
         _typed_muts(spark, sf_dir),
-        frontiers,
+        [(1704931200 * 1_000_000_000, 0), (1705795200 * 1_000_000_000, 0)],
         ["id"],
         tie_breaker=["__tie"],
     )
@@ -778,9 +774,7 @@ def multi_table_temporal_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _mutations(spark, sf_dir)
     # frontier logical = 3 (the max the stream produces), so the HLC
     # tuple compare degenerates to nanos <= f on both engines exactly.
-    resolved = spark.createDataFrame(
-        [(1705276800 * 1_000_000_000, 3)], "nanos long, logical int"
-    ).select(F.struct("nanos", "logical").alias("ts"))
+    resolved = [(1705276800 * 1_000_000_000, 3)]
 
     def one(table_mod: int, name: str) -> DataFrame:
         muts = (
@@ -796,7 +790,7 @@ def multi_table_temporal_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         target = spark.createDataFrame([], "id bigint, bal double")
         snap, pending = sequencer.seq_serial(
             target, muts, resolved, ["id"], ts_col="__ts",
-            tie_breaker=["__tie"], collapse_windows=True,
+            tie_breaker=["__tie"],
         )
         return snap.agg(
             F.lit(name).alias("src_table"),

@@ -151,8 +151,8 @@ def scan_apply(
     ``coalesce_ranges=True`` is the backlog-drain fast path: all pending
     ranges fold into ONE distributed read applied through the LAST
     resolved marker, committing once. Identical final state for the
-    idempotent LWW apply (the same trade seq_serial's collapse_windows
-    makes); per-range commit granularity is the cost — a crash replays
+    idempotent LWW apply (the same trade seq_serial makes when it
+    collapses plain-LWW windows); per-range commit granularity is the cost — a crash replays
     the whole backlog instead of one range. A day of 30-second resolved
     intervals is ~3k ranges: the per-range loop is ~3k sequential Spark
     jobs, the coalesced path is one.

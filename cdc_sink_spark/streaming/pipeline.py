@@ -31,9 +31,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cdc_sink_spark.functions.hlc import parse_hlc
-from cdc_sink_spark.operators import artifact, decorators, sequencer
+from cdc_sink_spark.operators import artifact, sequencer
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
 from cdc_sink_spark.operators.dlq import DeadLetterQueue
+from cdc_sink_spark.operators.staging import mark_exclude_rejected
 from cdc_sink_spark.session import release_checkpoint
 from cdc_sink_spark.sources import cdcjson
 
@@ -239,7 +240,7 @@ class StreamingApplier:
 
     Reference: ``internal/sequencer/switcher/switcher.go`` only swaps
     which sequencer plans a batch; every mode shares one acceptor stack
-    (once/marker, apply, DLQ: ``sequencer/decorators``,
+    (``once.go``, ``marker.go``, apply and DLQ, composed per group in
     ``switcher/group.go``). Here the swap is a per-micro-batch choice,
     recorded in ``mode_history`` (the last 1024 batches):
 
@@ -265,7 +266,8 @@ class StreamingApplier:
          materialize`` checkpoints the work set once; its job also
          yields the row count, the max HLC, the parked rows read and the
          touched buckets. The resolved stamps are read once (one job);
-      3. sequence (above);
+      3. sequence (above). Serial mode hands the stamps it read to
+         seq_serial as literals: no stamp aggregate or join in its plan;
       4. reject route: only with a rule that can reject
          (``ApplyConfig.can_reject``), apply_mutations' ``(key,
          __rej_ts, __reason)`` rows go to ``dlq``, or, with a parked
@@ -285,8 +287,6 @@ class StreamingApplier:
     Every checkpoint the call takes is freed before it returns. Deadline
     rules are refused: the applier has no ``now`` to judge them by.
     """
-
-    STAMPS = "ts struct<nanos:bigint, logical:int>"
 
     def __init__(
         self,
@@ -339,7 +339,7 @@ class StreamingApplier:
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if self.staging is not None:
-            # once-decorator semantics (sequencer/decorators/once.go): a
+            # once semantics (the reference's sequencer once.go): a
             # crash between snapshot write and stream-checkpoint commit
             # replays the micro-batch; the applied ledger makes the
             # replay a no-op instead of a double-apply/double-DLQ. The
@@ -384,14 +384,8 @@ class StreamingApplier:
             # parked again. No mode has both.
             left, excluded = None, None
             if mode == "serial":
-                # Plain LWW collapses all covered windows into one apply.
-                # A CAS ratchet is per window, and a TOAST sentinel must
-                # resolve against the prior window's winner, so either
-                # routes through the grouped per-key window fold.
-                collapse = not (self.cfg.cas_columns or self.cfg.toast_sentinel is not None)
                 snapshot, left = sequencer.seq_serial(
-                    target, work, spark.createDataFrame([(s,) for s in stamps], self.STAMPS),
-                    self.key_cols, self.cfg, collapse_windows=collapse, ts_col="__ts",
+                    target, work, stamps, self.key_cols, self.cfg, ts_col="__ts",
                     tie_breaker=self.tie_breaker,
                 )
                 left, left_stats, _ = self.store.materialize(left)
@@ -423,7 +417,7 @@ class StreamingApplier:
                 # marker-decorator: record the batch applied only after the
                 # snapshot write landed (crash before this line -> replay is
                 # filtered next time by LWW idempotence, not double-marked).
-                applied = work if excluded is None else decorators.mark_exclude_rejected(
+                applied = work if excluded is None else mark_exclude_rejected(
                     work, excluded, self.key_cols, ts_col="__ts"
                 )
                 self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")

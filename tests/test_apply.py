@@ -193,10 +193,9 @@ def test_null_key_target_rows_survive_untouched(spark):
     # Same invariant through the window-serial grouped fold.
     from cdc_sink_spark.operators import sequencer
 
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=10, logical=0))], "ts struct<nanos:long, logical:int>"
+    snap2, _ = sequencer._serial_grouped_fold(
+        target, muts, [(10, 0)], ["k0", "k1"], ApplyConfig(), ts_col="__ts"
     )
-    snap2, _ = sequencer.seq_serial(target, muts, resolved, ["k0", "k1"], ts_col="__ts")
     got2 = {(r.k0, r.k1): r.v for r in snap2.collect()}
     assert got2 == {(None, 5): "keep", (1, 1): "new"}
 

@@ -174,10 +174,7 @@ def _m(spark, rows, val_type="string"):
 def test_seq_serial_applies_windows_in_order_and_parks_tail(spark):
     target = spark.createDataFrame([], "id bigint, val string")
     muts = _m(spark, [(1, "w1", 5), (2, "w2", 15), (3, "beyond", 99)])
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=0)) for n in (10, 20)],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = [(10, 0), (20, 0)]
     snap, pending = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
     assert {r.id: r.val for r in snap.collect()} == {1: "w1", 2: "w2"}
     assert [r.id for r in pending.collect()] == [3]
@@ -197,9 +194,7 @@ def test_seq_serial_grouped_fold_matches_window_loop_cas(spark):
                                    "id bigint, val double")
     muts = _m(spark, [(1, 7.0, 5), (1, 6.0, 15), (2, 41.0, 5), (2, 60.0, 15), (3, 1.0, 25)],
               val_type="double")
-    resolved = spark.createDataFrame(
-        [(10, 0), (20, 0)], "nanos long, logical int"
-    ).select(F.struct("nanos", "logical").alias("ts"))
+    resolved = [(10, 0), (20, 0)]
     cfg = ApplyConfig(cas_columns=["val"])
 
     snap, pending = sequencer.seq_serial(target, muts, resolved, ["id"], cfg, ts_col="__ts")
@@ -220,10 +215,10 @@ def test_seq_serial_grouped_fold_matches_window_loop_cas(spark):
         ).drop("resolved_window")
         loop_snap, _ = apply_mutations(loop_snap, batch, ["id"], cfg, ts_col="__ts")
     assert got == {r.id: r.val for r in loop_snap.collect()}
-    # And the collapsed path genuinely differs here (ratchet case).
-    collapsed, _ = sequencer.seq_serial(
-        target, muts, resolved, ["id"], cfg, ts_col="__ts", collapse_windows=True
-    )
+    # And one collapsed apply of the covered rows genuinely differs here
+    # (ratchet case).
+    covered = tagged.filter(F.col("resolved_window").isNotNull()).drop("resolved_window")
+    collapsed, _ = apply_mutations(target, covered, ["id"], cfg, ts_col="__ts")
     assert {r.id: r.val for r in collapsed.collect()}[1] == 6.0
 
 
@@ -256,10 +251,7 @@ def test_seq_serial_toast_sentinel_matches_window_loop(spark):
         "id bigint, big string, small string, "
         "__ts struct<nanos:long, logical:int>, __deleted boolean",
     )
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=0)) for n in (10, 20)],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = [(10, 0), (20, 0)]
     cfg = ApplyConfig(toast_sentinel=TOAST)
     snap, pending = sequencer.seq_serial(target, muts, resolved, ["id"], cfg, ts_col="__ts")
     got = {r.id: (r.big, r.small) for r in snap.collect()}
@@ -281,36 +273,12 @@ def test_seq_serial_toast_sentinel_matches_window_loop(spark):
     assert got == {r.id: (r.big, r.small) for r in loop_snap.collect()}
 
 
-def test_seq_serial_rejects_silent_collapse_with_apply_fn(spark):
-    """A custom apply_fn only has the collapsed path; with CAS/deadline
-    config and collapse_windows=False that would silently lose the
-    per-window ratchet — must refuse, not collapse."""
-    import pytest
-
-    from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
-
-    target = spark.createDataFrame([Row(id=1, val=5.0)], "id bigint, val double")
-    muts = _m(spark, [(1, 7.0, 5)], val_type="double")
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=10, logical=0))], "ts struct<nanos:long, logical:int>"
-    )
-    cfg = ApplyConfig(cas_columns=["val"])
-    with pytest.raises(ValueError, match="collapse_windows"):
-        sequencer.seq_serial(
-            target, muts, resolved, ["id"], cfg, ts_col="__ts", apply_fn=apply_mutations
-        )
-    # Explicit collapse_windows=True stays allowed (caller opted in).
-    snap, _ = sequencer.seq_serial(
-        target, muts, resolved, ["id"], cfg, ts_col="__ts",
-        apply_fn=apply_mutations, collapse_windows=True,
-    )
-    assert {r.val for r in snap.collect()} == {7.0}
-
-
 def test_seq_serial_fold_extras_exclude_window_tag(spark):
     """With cfg.extras configured, the fold's internal resolved_window
     column must NOT be packed into the extras JSON (it would both
-    pollute payloads and break the per-window unique_by_key)."""
+    pollute payloads and break the per-window unique_by_key). Extras
+    alone are no window-sensitive rule, so seq_serial would collapse:
+    the fold is called directly."""
     from cdc_sink_spark.operators.apply import ApplyConfig
 
     target = spark.createDataFrame(
@@ -324,12 +292,9 @@ def test_seq_serial_fold_extras_exclude_window_tag(spark):
         "id bigint, val string, stray string, "
         "__ts struct<nanos:long, logical:int>, __deleted boolean",
     )
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=0)) for n in (10, 20)],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = [(10, 0), (20, 0)]
     cfg = ApplyConfig(extras="extras")
-    snap, _ = sequencer.seq_serial(target, muts, resolved, ["id"], cfg, ts_col="__ts")
+    snap, _ = sequencer._serial_grouped_fold(target, muts, resolved, ["id"], cfg, ts_col="__ts")
     rows = snap.collect()
     assert len(rows) == 1
     assert rows[0].val == "w2"
@@ -342,8 +307,8 @@ def test_seq_serial_fold_plan_constant_in_window_count(spark):
     jobs); the fold is one shuffle on the key + one outer join however
     many frontiers a day brings. Pinned: exchange/join counts and plan
     size are IDENTICAL at 2 vs 50 windows, with small absolute bounds
-    (the extras beyond the key shuffle are the tiny frontier collect_set
-    agg and the outer join's two sides)."""
+    (the frontiers are one literal array; the exchanges are the key
+    shuffle and the outer join's two sides)."""
     from cdc_sink_spark.operators.apply import ApplyConfig
 
     def fold_plan(n_windows):
@@ -352,10 +317,7 @@ def test_seq_serial_fold_plan_constant_in_window_count(spark):
              for i in range(n_windows * 3)],
             "id bigint, val double, __ts struct<nanos:long, logical:int>, __deleted boolean",
         )
-        resolved = spark.createDataFrame(
-            [Row(ts=Row(nanos=3 * w + 2, logical=0)) for w in range(n_windows)],
-            "ts struct<nanos:long, logical:int>",
-        )
+        resolved = [(3 * w + 2, 0) for w in range(n_windows)]
         target = spark.createDataFrame([Row(id=1, val=0.0)], "id bigint, val double")
         snap, _ = sequencer.seq_serial(
             target, muts, resolved, ["id"], ApplyConfig(cas_columns=["val"]), ts_col="__ts"
@@ -496,14 +458,11 @@ def test_staging_retry_lifecycle_converges(spark, tmp_path):
 
 
 def test_assign_resolved_windows_no_row_blowup(spark):
-    """The frontier lookup is a broadcast single-row array join: output
+    """The frontier lookup is a literal sorted-array filter: output
     cardinality equals input cardinality (no frontier-count multiply) and
     each mutation gets the EARLIEST covering frontier."""
     muts = _m(spark, [(1, "a", 5), (2, "b", 15), (3, "c", 99)])
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=0)) for n in (10, 20, 30)],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = [(10, 0), (20, 0), (30, 0)]
     tagged = sequencer.assign_resolved_windows(muts, resolved, ts_col="__ts")
     rows = {r.id: r.resolved_window for r in tagged.collect()}
     assert tagged.count() == 3
@@ -513,18 +472,18 @@ def test_assign_resolved_windows_no_row_blowup(spark):
 def test_seq_serial_100_windows_bounded(spark):
     """100 resolved frontiers: the per-window fold must stay tractable
     (the grouped per-key fold keeps the plan depth constant), and
-    collapse mode produces the identical snapshot in one apply."""
+    seq_serial's collapsed plain-LWW apply produces the identical
+    snapshot in one apply."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
     muts = _m(spark, [(i, f"v{i}", i) for i in range(1, 101)])
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=0)) for n in range(1, 101)],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = [(n, 0) for n in range(1, 101)]
     target = spark.createDataFrame([], "id bigint, val string")
-    snap, pending = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
-    assert snap.count() == 100 and pending.count() == 0
-    snap2, _ = sequencer.seq_serial(
-        target, muts, resolved, ["id"], ts_col="__ts", collapse_windows=True
+    snap, pending = sequencer._serial_grouped_fold(
+        target, muts, resolved, ["id"], ApplyConfig(), ts_col="__ts"
     )
+    assert snap.count() == 100 and pending.count() == 0
+    snap2, _ = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
     assert {(r.id, r.val) for r in snap2.collect()} == {
         (r.id, r.val) for r in snap.collect()
     }
@@ -544,78 +503,31 @@ def test_seq_besteffort_parks_cas_rejected(spark):
     assert {r.id for r in parked.collect()} == {1}
 
 
-# --------------------------------------------------------- decorators
-def test_decorators_once_marker_retry(spark, tmp_path):
-    """once/marker/retry composition (internal/sequencer/decorators):
-    a replayed batch re-applies nothing, and transient failures retry
-    with backoff."""
-    from cdc_sink_spark.operators import decorators
-    from cdc_sink_spark.operators.apply import apply_mutations
-    from cdc_sink_spark.operators.staging import StagingTable
-
-    st = StagingTable(spark, str(tmp_path / "staging"))
-    target = spark.createDataFrame([], "id bigint, val string")
-    muts = _m(spark, [(1, "a", 5), (2, "b", 6)])
-
-    # Probe acceptor: records how many mutations REACH the apply after
-    # once()'s filter. Snapshot equality alone is vacuous here — plain
-    # LWW apply is idempotent, so a broken (pass-through) once() would
-    # produce the identical snapshot; the probe makes the filtering
-    # itself observable.
-    reached = []
-
-    def probe_apply(target, muts, key_cols, *a, **kw):
-        reached.append(muts.count())
-        return apply_mutations(target, muts, key_cols, *a, **kw)
-
-    accept = decorators.chain(
-        probe_apply,
-        lambda a: decorators.with_once(a, st, ts_col="__ts"),
-        lambda a: decorators.with_marker(a, st, ts_col="__ts"),
-    )
-    snap1, _ = accept(target, muts, ["id"], None, ts_col="__ts")
-    assert snap1.count() == 2
-    assert reached == [2]
-    # Replay the identical batch: once() drops everything already marked
-    # BEFORE the apply sees it.
-    snap2, _ = accept(snap1, muts, ["id"], None, ts_col="__ts")
-    assert {r.id: r.val for r in snap2.collect()} == {1: "a", 2: "b"}
-    assert reached == [2, 0]
-    assert st.filter_applied(muts, ["id"], ts_col="__ts").count() == 0
-
-    calls = {"n": 0}
-    def flaky(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise RuntimeError("transient sink error")
-        return apply_mutations(*a, **kw)
-
-    slept = []
-    retried = decorators.with_retry(flaky, attempts=4, sleep=slept.append)
-    snap3, _ = retried(target, muts, ["id"], None, ts_col="__ts")
-    assert snap3.count() == 2 and calls["n"] == 3
-    assert slept == [0.25, 0.5]  # exponential backoff
-
-
 def test_marker_keeps_rejected_replayable(spark, tmp_path):
     """marker.go marks exactly what the accept APPLIED: a CAS-rejected
     mutation must stay out of the applied ledger so a later replay (DLQ
     redelivery, best-effort retry after the target moved) is not
-    silently dropped by once()/filter_applied."""
-    from cdc_sink_spark.operators import decorators
+    silently dropped by filter_applied."""
     from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
-    from cdc_sink_spark.operators.staging import StagingTable
+    from cdc_sink_spark.operators.staging import StagingTable, mark_exclude_rejected
 
     st = StagingTable(spark, str(tmp_path / "staging"))
     target = spark.createDataFrame([Row(id=1, val="z")], "id bigint, val string")
     muts = _m(spark, [(1, "a", 5), (2, "b", 6)])  # 'a' < 'z': CAS loses
-    accept = decorators.chain(
-        apply_mutations,
-        lambda a: decorators.with_once(a, st, ts_col="__ts"),
-        lambda a: decorators.with_marker(a, st, ts_col="__ts"),
-    )
     cfg = ApplyConfig(cas_columns=["val"])
-    snap1, rej1 = accept(target, muts, ["id"], cfg, ts_col="__ts")
+
+    def accept(tgt):
+        # once: drop what the ledger holds; marker: mark what was applied.
+        fresh = st.filter_applied(muts, ["id"], ts_col="__ts")
+        snap, rej = apply_mutations(tgt, fresh, ["id"], cfg, ts_col="__ts")
+        snap, rej = snap.localCheckpoint(), rej.localCheckpoint()
+        st.mark_applied(
+            mark_exclude_rejected(fresh, rej, ["id"], ts_col="__ts"),
+            ["id"], ts_col="__ts",
+        )
+        return snap, rej
+
+    snap1, rej1 = accept(target)
     assert {r.id: r.val for r in snap1.collect()} == {1: "z", 2: "b"}
     assert {r.id for r in rej1.collect()} == {1}
     # Applied id=2 is marked; rejected id=1 is NOT.
@@ -624,28 +536,10 @@ def test_marker_keeps_rejected_replayable(spark, tmp_path):
     # The target moves backwards out-of-band (op repair); the replayed
     # mutation must now win its CAS instead of being ledger-dropped.
     repaired = spark.createDataFrame([Row(id=1, val="0")], "id bigint, val string")
-    snap2, rej2 = accept(repaired, muts, ["id"], cfg, ts_col="__ts")
+    snap2, rej2 = accept(repaired)
     assert {r.id: r.val for r in snap2.collect()} == {1: "a"}
     assert rej2.count() == 0
     assert st.filter_applied(muts, ["id"], ts_col="__ts").count() == 0
-
-
-def test_decorators_metrics_observe(spark):
-    """with_metrics rides df.observe: counters come out of the existing
-    action, no extra job."""
-    from cdc_sink_spark.operators import decorators
-    from cdc_sink_spark.operators.apply import apply_mutations
-
-    target = spark.createDataFrame([], "id bigint, val string")
-    muts = spark.createDataFrame(
-        [Row(id=1, val="a", __ts=Row(nanos=1, logical=0), __deleted=False),
-         Row(id=2, val="b", __ts=Row(nanos=2, logical=0), __deleted=True)],
-        MUT_SCHEMA,
-    )
-    metered = decorators.with_metrics(apply_mutations)
-    snap, rejected, obs = metered(target, muts, ["id"], None, ts_col="__ts")
-    assert snap.count() == 1  # the delete removed id=2
-    assert obs.get == {"mutations_in": 2, "deletes_in": 1}
 
 
 def test_version_gate_bootstrap_and_warn(spark, tmp_path):
@@ -705,26 +599,23 @@ def test_checkpoint_registered_unmarked_partition_holds_frontier(spark, tmp_path
 
 
 def test_assign_resolved_windows_never_shuffles_stream(spark, sf_dir):
-    """Plan-shape net for the broadcast-frontier-array rewrite: the
-    mutation stream reaches the frontier lookup with ZERO exchanges on
-    its columns (the old theta-join + full-width groupBy re-shuffled the
-    whole stream and multiplied it by the frontier count)."""
+    """Plan-shape net for the frontier-array lookup: the mutation stream
+    reaches it with ZERO exchanges on its columns (the old theta-join +
+    full-width groupBy re-shuffled the whole stream and multiplied it by
+    the frontier count), and the literal array needs no join at all."""
     from cdc_sink_spark.plans import inspect
     from cdc_sink_spark.queries.cdc import _mutations
     from cdc_sink_spark.operators import sequencer as seq
 
     muts = _mutations(spark, sf_dir)
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n * 10**18, logical=0)) for n in range(1, 4)],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = [(n * 10**18, 0) for n in range(1, 4)]
     tagged = seq.assign_resolved_windows(muts, resolved, ts_col="ts")
     plan = inspect.executed_plan(tagged)
-    # The only exchanges belong to the tiny frontier aggregate + its
-    # single-row broadcast; the stream itself is never hash-partitioned.
+    # The stream itself is never hash-partitioned, and no frontier frame
+    # is joined in.
     assert "hashpartitioning(user_id" not in plan
     assert "hashpartitioning(event_id" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") == 1
+    assert plan.count("BroadcastNestedLoopJoin") == 0
 
 
 def test_seq_besteffort_parks_only_failed_mutations(spark):

@@ -223,10 +223,11 @@ def test_pack_sequences_invariants(spark, docs):
 @settings(**SETTINGS)
 @given(st.data())
 def test_seq_serial_collapse_equals_windowed(spark, data):
-    """collapse_windows=True must produce the same snapshot as the
-    window-by-window fold when there are no CAS/deadline side effects
+    """seq_serial's collapsed apply must produce the same snapshot as
+    the window-by-window fold when there are no CAS/deadline side effects
     (pure LWW apply commutes across window boundaries)."""
     from cdc_sink_spark.operators import sequencer
+    from cdc_sink_spark.operators.apply import ApplyConfig
 
     muts_raw = data.draw(
         st.lists(
@@ -248,14 +249,12 @@ def test_seq_serial_collapse_equals_windowed(spark, data):
         ],
         "id bigint, val string, __ts struct<nanos:long, logical:int>, __deleted boolean",
     )
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=2**30)) for n in frontiers],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = [(n, 2**30) for n in frontiers]
     target = spark.createDataFrame([], "id bigint, val string")
-    s1, p1 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
-    s2, p2 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts",
-                                  collapse_windows=True)
+    s1, p1 = sequencer._serial_grouped_fold(
+        target, muts, resolved, ["id"], ApplyConfig(), ts_col="__ts"
+    )
+    s2, p2 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
     assert sorted((r.id, r.val) for r in s1.collect()) == sorted(
         (r.id, r.val) for r in s2.collect()
     )

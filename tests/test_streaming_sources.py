@@ -808,7 +808,7 @@ def test_mode_switch_flip_converges(spark):
 
 
 def test_mode_switch_serial_parks_uncovered(spark, tmp_path):
-    """ModeSwitchingApplier in serial mode applies only mutations at or
+    """StreamingApplier in serial mode applies only mutations at or
     below the resolved frontier and parks the rest durably (core
     sequencer semantics); a later besteffort batch drains the park."""
     import json as _json
@@ -1110,7 +1110,7 @@ def test_bucketed_applier_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 def test_mode_switcher_bucketed_target(spark, tmp_path):
-    """ModeSwitchingApplier with a bucketed target: parked-drain across
+    """StreamingApplier with a bucketed target: parked-drain across
     a mode flip still converges, and untouched bucket files survive a
     micro-batch byte-identical."""
     import os
@@ -1162,16 +1162,18 @@ def _muts(spark, rows):
 
 
 def test_bucketed_appliers_job_count(spark, tmp_path, job_count):
-    """One steady-state micro-batch through the bucketed applier in three
+    """One steady-state micro-batch through the bucketed applier in four
     wirings a deployment would use (ledger + DLQ + frontier; serial mode
-    over a resolved feed; a parked store without a feed) runs a pinned
-    number of Spark jobs. The batch's stats, parked-row count and touched
-    buckets ride the one job that materializes it, and the set of buckets
-    the commit leaves non-empty rides the commit write itself, so none of
-    them runs a job of its own. The target read after the first batch
+    over a resolved feed, without and with a CAS rule; a parked store
+    without a feed) runs a pinned number of Spark jobs. The batch's
+    stats, parked-row count and touched buckets ride the one job that
+    materializes it, and the set of buckets the commit leaves non-empty
+    rides the commit write itself, so none of them runs a job of its
+    own. The target read after the first batch
     infers no schema, without a CAS rule no reject path runs, the
-    resolved stamps are read by one job, and an empty parked store is
-    not rewritten."""
+    resolved stamps are read by one job and split the batch as literals,
+    and an empty parked store is not rewritten."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
     from cdc_sink_spark.operators.checkpoint import CheckpointGroup
     from cdc_sink_spark.operators.dlq import DeadLetterQueue
     from cdc_sink_spark.operators.memo import Memo
@@ -1215,17 +1217,30 @@ def test_bucketed_appliers_job_count(spark, tmp_path, job_count):
         target_table="t",
         n_buckets=8,
     )
+    pipeline.init_bucketed_target(seed, store("t4"), ["id"], 8)
+    folding = pipeline.StreamingApplier(
+        store("t4"), ["id"], cfg=ApplyConfig(cas_columns=["v"]),
+        parked_path=store("parked4"),
+        backlog_limit=100, lag_limit_nanos=1 << 60,
+        resolved_dir=store("resolved"),
+        checkpoints=CheckpointGroup(Memo(spark, store("memo4")), "t"),
+        target_table="t",
+        n_buckets=8,
+    )
     streaming(warm, 0)
     switching(warm, 0)
     unfed(warm, 0)
+    folding(warm, 0)
     counts = (
         job_count(lambda: streaming(batch, 1)),
         job_count(lambda: switching(batch, 1)),
         job_count(lambda: unfed(batch, 1)),
+        job_count(lambda: folding(batch, 1)),
     )
     assert switching.mode_history[-1] == (1, "serial")
     assert unfed.mode_history[-1] == (1, "immediate")
-    assert counts == (6, 10, 4)
+    assert folding.mode_history[-1] == (1, "serial")
+    assert counts == (6, 6, 4, 8)
 
 
 def test_streaming_applier_serial_replay_parks_once(spark, tmp_path):
@@ -1261,7 +1276,10 @@ def test_streaming_applier_cas_replay_keeps_dlq(spark, tmp_path):
     """With a CAS rule and a DLQ, a replayed batch that applied one
     mutation and rejected another leaves the DLQ and the target as they
     were: the applied mutation is in the ledger, so it is not re-judged
-    against its own result ('zz' > 'zz' is false) and dead-lettered."""
+    against its own result ('zz' > 'zz' is false) and dead-lettered.
+    The rejected one stays out of the ledger (marker.go marks exactly
+    what the target took), so once the target is repaired out of band a
+    replay applies it instead of dropping it as already applied."""
     from cdc_sink_spark.operators.apply import ApplyConfig
     from cdc_sink_spark.operators.dlq import DeadLetterQueue
     from cdc_sink_spark.operators.staging import StagingTable
@@ -1271,10 +1289,10 @@ def test_streaming_applier_cas_replay_keeps_dlq(spark, tmp_path):
         [Row(id=1, v="seed1"), Row(id=2, v="seed2")], "id bigint, v string"
     ).write.parquet(target)
     dlq = DeadLetterQueue(spark, str(tmp_path / "dlq"))
+    st = StagingTable(spark, str(tmp_path / "staging"))
     applier = pipeline.StreamingApplier(
         target, ["id"], cfg=ApplyConfig(cas_columns=["v"]), dlq=dlq,
-        staging=StagingTable(spark, str(tmp_path / "staging")),
-        parked_path=str(tmp_path / "parked"),
+        staging=st, parked_path=str(tmp_path / "parked"),
     )
     # id 1: 'a' < 'seed1' is a CAS reject; id 2: 'zz' > 'seed2' applies.
     batch = _muts(spark, [(1, "a", 5), (2, "zz", 6)])
@@ -1286,8 +1304,18 @@ def test_streaming_applier_cas_replay_keeps_dlq(spark, tmp_path):
     applier(batch, 0)
     first = state()
     assert first[0] == {1: "seed1", 2: "zz"} and [r[2] for r in first[1]] == ["cas"]
+    # Applied id 2 is marked; rejected id 1 is not.
+    assert {r.id for r in st.filter_applied(batch, ["id"], ts_col="__ts").collect()} == {1}
     applier(batch, 0)
     assert state() == first
+    # The target moves backwards out of band (an operator repair); the
+    # replayed mutation now wins its CAS instead of being ledger-dropped.
+    spark.createDataFrame(
+        [Row(id=1, v="0"), Row(id=2, v="zz")], "id bigint, v string"
+    ).write.mode("overwrite").parquet(target)
+    applier(batch, 1)
+    assert state() == ({1: "a", 2: "zz"}, first[1])
+    assert st.filter_applied(batch, ["id"], ts_col="__ts").count() == 0
 
 
 def test_streaming_applier_refuses_deadline_rules(spark, tmp_path):
@@ -1497,7 +1525,7 @@ def test_bare_envelope_without_event_is_upsert(spark):
 
 def test_mode_switch_final_rejects_drain_to_dlq_not_parked(spark, tmp_path):
     """CAS/deadline rejections are FINAL (the ratchet only rises, time
-    only moves forward): ModeSwitchingApplier must route them to the DLQ
+    only moves forward): StreamingApplier must route them to the DLQ
     instead of the parked store — re-parking would re-apply and re-park
     the same rows every micro-batch forever and inflate the backlog count
     feeding switcher_mode (a sustained CAS conflict could latch the

@@ -188,7 +188,6 @@ def test_no_cartesian_products_anywhere(spark, sf_dir):
         "ann_ivf_assign",  # 8-row codebook broadcast
         "embedding_near_dup",  # label-blocked broadcast with range residual
         "checkpoint_resolved_window",  # two 1-row frontier aggregates
-        "seq_serial_batch",  # broadcast of the tiny resolved-frontier set
         "ann_topk_bruteforce",  # 1-row query-vector broadcast
         "ann_ivf_probe",  # codebook + 1-row query-cell broadcasts
         "tfidf_top_terms",  # 1-row corpus-size (N) broadcast
@@ -196,7 +195,7 @@ def test_no_cartesian_products_anywhere(spark, sf_dir):
         "unigram_logprob_score",  # 1-row corpus-total broadcast
         "q11_important_parts",  # 1-row value-total broadcast
         "dlq_replay_cas",  # rejected-keys semi-join on the CAS output
-        "multi_table_temporal_batch",  # frontier array + 1-row count joins
+        "multi_table_temporal_batch",  # 1-row pending-count joins
         "q15_top_supplier",  # 1-row max-revenue broadcast
         "bm25_topk",  # 1-row corpus-stats (N, avgdl, df) broadcast
         "kmeans_refine_step",  # 8-row codebook broadcast

@@ -9,10 +9,11 @@ Cases:
   apply_big     full apply of the deduped batch onto a 1M-row target
   parse_apply   ndjson render -> parse -> apply end-to-end
   frontier_assign  resolved-window tagging, 20M mutations x 1000
-                   frontiers (broadcast sorted-array lookup: zero
+                   frontiers (literal sorted-array lookup: zero
                    shuffle of the stream, zero row blowup)
-  seq_serial_100w  serial sequencer over 100 resolved windows via the
-                   grouped per-key JVM fold (constant job count)
+  seq_serial_100w  serial sequencer over 100 resolved windows with a CAS
+                   rule, so via the grouped per-key JVM fold (constant
+                   job count)
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 
 from cdc_sink_spark import workload
 from cdc_sink_spark.operators import msort
-from cdc_sink_spark.operators.apply import apply_mutations
+from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
 from cdc_sink_spark.session import get_spark
 from cdc_sink_spark.sources import cdcjson
 
@@ -88,12 +89,7 @@ def main() -> None:
 
     from cdc_sink_spark.operators import sequencer
 
-    frontiers = spark.range(1000).select(
-        F.struct(
-            ((F.col("id") + 1) * (N // 1000)).alias("nanos"),
-            F.lit(0).cast("int").alias("logical"),
-        ).alias("ts")
-    )
+    frontiers = [((i + 1) * (N // 1000), 0) for i in range(1000)]
     t0 = time.perf_counter()
     n5 = sequencer.assign_resolved_windows(
         muts.withColumnRenamed("ts", "__ts"), frontiers, ts_col="__ts"
@@ -108,15 +104,14 @@ def main() -> None:
         ),
         F.lit(False).alias("__deleted"),
     )
-    f100 = spark.range(100).select(
-        F.struct(((F.col("id") + 1) * 2_000).alias("nanos"), F.lit(0).cast("int").alias("logical")).alias("ts")
-    )
+    f100 = [((i + 1) * 2_000, 0) for i in range(100)]
     t0 = time.perf_counter()
     snap5, _ = sequencer.seq_serial(
         spark.createDataFrame([], "key bigint, val bigint"),
         small,
         f100,
         ["key"],
+        ApplyConfig(cas_columns=["val"]),
         ts_col="__ts",
     )
     n6 = snap5.count()
