@@ -1,21 +1,24 @@
 """Headline benchmark. Runs the flagship queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "spread": {name: sec}, "layers": {name: stats},
+"sf": ...}.
 
-Each query is forced to full execution with a noop-sink write
-(``df.write.format("noop")`` — materializes every row AND every column
-of the final projection; a bare count() would let Catalyst prune the
-projected expressions), timed after a warmup of the session
-(JVM+codegen warm) using the tiny SF.
+Every Spark-side timing in bench.py and tools/ goes through ``timed``: each run
+builds the query (the ``construct`` span, where driver-side loops,
+checkpoints and index builds run) and forces it with a noop-sink write
+(the ``execute`` span). ``df.write.format("noop")`` materializes every
+row AND every column of the final projection; a bare count() would let
+Catalyst prune the projected expressions. A query's figure is its best
+run; ``layers`` holds that run's construct and execute seconds and its
+jobs, stages, tasks, executor CPU, shuffle and spill, read from Spark's
+status store (``perfbench/harness.Tracer``).
 
-Contention hardening (round 12 — the round-11 headline number was taken
-under CPU contention and overstated a regression by ~13%): best-of-3
-per query, per-query spread recorded alongside the best, the 1-minute
-load average sampled before the run (loadavg_start in the output — a
-reader can discount a polluted run), and an explicit gc between queries
-so localCheckpoint blocks from earlier queries don't squat on block-
-manager memory while later queries execute.
+Contention hardening: best-of-3 per query after a warm-up of the session
+at sf0.001 (JVM and codegen), the per-query spread recorded alongside
+the best, an idle gate (``wait_idle``) before the run, and a gc between
+queries so localCheckpoint blocks from earlier queries don't squat on
+block-manager memory while later queries execute.
 """
 
 from __future__ import annotations
@@ -71,41 +74,101 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Idle gate (round 13 — BENCH_r12 shipped with loadavg 9.2/13.3 and
-    # the round-11 artifact was also contention-polluted): BLOCK until
-    # the 1-minute load average drops under the threshold, up to a
-    # bounded wait, instead of warn-and-proceed. If the machine never
-    # quiets down the run proceeds (the driver must still get a JSON
-    # line) but the output carries "contended": true so no one mistakes
-    # it for an official artifact.
+def wait_idle() -> tuple[float | None, bool]:
+    """Block until the 1-minute load average drops under
+    $SPARK_GRAFT_BENCH_IDLE_LOAD (default 4.0), for at most
+    $SPARK_GRAFT_BENCH_IDLE_WAIT_SEC (default 300). Returns the load
+    average it saw last and whether it gave up waiting: a contended run
+    still prints its JSON line, stamped ``"contended": true`` so no one
+    mistakes it for an official artifact."""
     idle_limit = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD", "4.0"))
     max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT_SEC", "300"))
-    loadavg_start = None
-    contended = False
+    waited = 0.0
     try:
-        waited = 0.0
-        while (loadavg_start := round(os.getloadavg()[0], 2)) > idle_limit:
+        while (load := round(os.getloadavg()[0], 2)) > idle_limit:
             if waited >= max_wait:
-                contended = True
                 print(
-                    f"WARNING: loadavg still {loadavg_start} after waiting "
-                    f"{int(waited)}s — proceeding, but timings are polluted by "
-                    'contention; output is stamped "contended": true',
+                    f"WARNING: loadavg still {load} after {int(waited)}s; proceeding, "
+                    'output stamped "contended": true',
                     file=sys.stderr,
                 )
-                break
+                return load, True
             print(
-                f"loadavg {loadavg_start} > {idle_limit}: waiting for idle "
+                f"loadavg {load} > {idle_limit}: waiting for idle "
                 f"({int(waited)}/{int(max_wait)}s)...",
                 file=sys.stderr,
             )
             time.sleep(10)
             waited += 10
     except OSError:
-        pass
+        return None, False
+    return load, False
+
+
+def new_tracer(spark, run_id: str):
+    """A tracing ``perfbench/harness.Tracer`` for ``timed`` (imported
+    here so that ``import bench`` stays cheap)."""
+    from perfbench.harness import Tracer
+
+    return Tracer(spark, enabled=True, run_id=run_id)
+
+
+LAYER_KEYS = ("jobs", "stages", "tasks", "executor_cpu_s", "shuffle_write_bytes", "spill_bytes")
+
+
+def timed(tracer, name: str, build, runs: int) -> dict:
+    """Best of ``runs`` runs of ``build()`` (returns a DataFrame) and a
+    noop-sink write of its result, each in a ``<name>.construct`` and a
+    ``<name>.execute`` span; the write is the only action the execute
+    span times. Returns ``best_s`` (construct plus execute of the best
+    run), ``spread_s`` (worst minus best) and the best run's
+    ``construct_s``, ``execute_s`` and ``LAYER_KEYS``, the last summed
+    over both spans."""
+    samples = []
+    for _ in range(runs):
+        with tracer.span(f"{name}.construct") as c:
+            df = build()
+        with tracer.span(f"{name}.execute") as x:
+            df.write.format("noop").mode("overwrite").save()
+        samples.append((c.wall_s + x.wall_s, c, x))
+    best, c, x = min(samples, key=lambda s: s[0])
+    stats = [tracer.inclusive(s) for s in (c, x)]
+    return {
+        "best_s": round(best, 3),
+        "spread_s": round(max(s[0] for s in samples) - best, 3),
+        "construct_s": round(c.wall_s, 3),
+        "execute_s": round(x.wall_s, 3),
+        **{k: round(sum(s[k] for s in stats), 3) for k in LAYER_KEYS},
+    }
+
+
+def run_suite(spark, names: list[str], sf_dir: str, runs: int) -> dict[str, dict]:
+    """``timed`` over the registry queries ``names`` at ``sf_dir``, after
+    one untimed warm-up pass at sf0.001 (JVM and codegen). Names missing
+    from the registry are skipped."""
+    fns = {n: registry.QUERIES[n] for n in names if n in registry.QUERIES}
+    warm_dir = "/root/testdata/sf0.001"
+    if os.path.isdir(warm_dir):
+        for fn in fns.values():
+            try:
+                fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+            except Exception:  # noqa: BLE001
+                pass
+    gc.collect()  # release warmup localCheckpoint blocks before timing
+    tracer = new_tracer(spark, "bench")
+    out = {}
+    for name, fn in fns.items():
+        out[name] = timed(tracer, name, lambda: fn(spark, sf_dir), runs)
+        # Drop py4j refs to finished plans so the ContextCleaner can
+        # unpersist their localCheckpoint blocks before the next query.
+        gc.collect()
+    return out
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    loadavg_start, contended = wait_idle()
     spark = get_spark("cdc-sink-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     missing = [n for n in HEADLINE if n not in registry.QUERIES]
@@ -113,44 +176,10 @@ def main() -> None:
         # A renamed registry key must not silently shrink the suite —
         # the total would then sum a different query set than BASELINE's.
         print(f"WARNING: HEADLINE names missing from registry: {missing}", file=sys.stderr)
-
-    def materialize(df) -> None:
-        # noop sink: every row AND every column/expression of the final
-        # projection is computed (a bare count() lets Catalyst prune the
-        # projected expressions — systematically flattering vs a baseline
-        # timed on full result materialization).
-        df.write.format("noop").mode("overwrite").save()
-
-    # Warmup: run the smallest SF once so codegen/JIT costs don't land on q1.
-    warm_dir = "/root/testdata/sf0.001"
-    for name in HEADLINE:
-        fn = registry.QUERIES.get(name)
-        if fn is not None and os.path.isdir(warm_dir):
-            try:
-                materialize(fn(spark, warm_dir))
-            except Exception:  # noqa: BLE001
-                pass
-    gc.collect()  # release warmup localCheckpoint blocks before timing
-
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    timings: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = registry.QUERIES.get(name)
-        if fn is None:
-            continue
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(min(samples), 3)
-        spread[name] = round(max(samples) - min(samples), 3)
-        # Drop py4j refs to finished plans so the ContextCleaner can
-        # unpersist their localCheckpoint blocks before the next query.
-        gc.collect()
-
-    total = round(sum(timings.values()), 3)
+    res = run_suite(spark, HEADLINE, sf_dir, runs)
+    timings = {n: r["best_s"] for n, r in res.items()}
+    spread = {n: r["spread_s"] for n, r in res.items()}
     try:
         loadavg_end = round(os.getloadavg()[0], 2)
     except OSError:
@@ -159,10 +188,11 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "headline_suite_total",
-                "value": total,
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
                 "spread": spread,
+                "layers": res,
                 "runs": runs,
                 "loadavg_start": loadavg_start,
                 "loadavg_end": loadavg_end,

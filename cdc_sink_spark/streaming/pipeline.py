@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from bisect import bisect_left
 from contextlib import ExitStack
 from typing import Iterator
 
@@ -264,10 +265,13 @@ class StreamingApplier:
          (or redelivered later) applies nothing twice;
       2. the parked rows join the filtered batch and ``TargetStore.
          materialize`` checkpoints the work set once; its job also
-         yields the row count, the max HLC, the parked rows read and the
-         touched buckets. The resolved stamps are read once (one job);
-      3. sequence (above). Serial mode hands the stamps it read to
-         seq_serial as literals: no stamp aggregate or join in its plan;
+         yields the row count, the max (and, with a feed, min) HLC, the
+         parked rows read and the touched buckets. The resolved stamps
+         are read once (one job);
+      3. sequence (above). Serial mode hands seq_serial, as literals,
+         only the stamps that can cover the work set (``_covering``): no
+         stamp aggregate or join in its plan, and a per-row cost that
+         does not grow with the stamps the feed has accumulated;
       4. reject route: only with a rule that can reject
          (``ApplyConfig.can_reject``), apply_mutations' ``(key,
          __rej_ts, __reason)`` rows go to ``dlq``, or, with a parked
@@ -349,6 +353,8 @@ class StreamingApplier:
             # newer row.
             batch = self.staging.filter_applied(batch, self.key_cols, ts_col="__ts")
         aggs = [F.max("__ts").alias("hlc")]
+        if self.resolved_dir is not None:
+            aggs.append(F.min("__ts").alias("lo"))
         if self.parked_path is not None:
             # Parked rows were never marked applied, so they join after
             # the ledger filter; tagged, so the same job counts them.
@@ -385,7 +391,8 @@ class StreamingApplier:
             left, excluded = None, None
             if mode == "serial":
                 snapshot, left = sequencer.seq_serial(
-                    target, work, stamps, self.key_cols, self.cfg, ts_col="__ts",
+                    target, work, _covering(stamps, stats["lo"], hlc), self.key_cols,
+                    self.cfg, ts_col="__ts",
                     tie_breaker=self.tie_breaker,
                 )
                 left, left_stats, _ = self.store.materialize(left)
@@ -444,6 +451,18 @@ class StreamingApplier:
         else:
             left.dropDuplicates().write.parquet(nxt)
         artifact.replace_dir(nxt, self.parked_path)
+
+
+def _covering(stamps: list, lo, hi) -> list:
+    """The sorted stamps that can cover a mutation stamped in ``[lo, hi]``:
+    from ``lo`` up to the first stamp at or above ``hi``. A mutation's
+    covering stamp is the first at or above its own HLC, so it lies in
+    this range, and seq_serial splits and folds the same over it as over
+    every stamp. Empty when the work set has no HLC."""
+    if lo is None:
+        return []
+    s = sorted(map(tuple, stamps))
+    return s[bisect_left(s, tuple(lo)) : bisect_left(s, tuple(hi)) + 1]
 
 
 def run_pipeline_once(

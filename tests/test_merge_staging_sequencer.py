@@ -180,6 +180,24 @@ def test_seq_serial_applies_windows_in_order_and_parks_tail(spark):
     assert [r.id for r in pending.collect()] == [3]
 
 
+def test_seq_serial_empty_frontier_leaves_every_row_pending(spark):
+    """With no resolved stamp, both strategies apply nothing: the
+    collapse (plain LWW) and the grouped fold (a CAS rule) return the
+    target unchanged and every mutation, NULL stamp included, pending."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
+    target = spark.createDataFrame([Row(id=9, val="seed")], "id bigint, val string")
+    muts = spark.createDataFrame(
+        [Row(id=1, val="a", __ts=Row(nanos=4, logical=0), __deleted=False),
+         Row(id=9, val="b", __ts=None, __deleted=False)],
+        MUT_SCHEMA,
+    )
+    for cfg in (ApplyConfig(), ApplyConfig(cas_columns=["val"])):
+        snap, pending = sequencer.seq_serial(target, muts, [], ["id"], cfg, ts_col="__ts")
+        assert [tuple(r) for r in snap.collect()] == [(9, "seed")]
+        assert sorted(r.id for r in pending.collect()) == [1, 9]
+
+
 def test_seq_serial_grouped_fold_matches_window_loop_cas(spark):
     """The grouped per-key fold must reproduce EXACT window-by-window
     apply semantics under CAS — including the ratchet case where they

@@ -1243,6 +1243,61 @@ def test_bucketed_appliers_job_count(spark, tmp_path, job_count):
     assert counts == (6, 6, 4, 8)
 
 
+def test_streaming_applier_serial_folds_over_covering_stamps_only(spark, tmp_path, monkeypatch):
+    """A feed holds 1,000 resolved stamps (10, 20, ..., 10000) and a
+    serial CAS batch spans 3 of them (HLCs 100-125, plus a row with no
+    HLC, which stays pending). The applier hands the fold only the
+    stamps from the batch's min HLC to the first stamp at or above its
+    max (100, 110, 120, 130), and the target and parked store equal
+    ``_serial_grouped_fold`` over the full list. (Spark prints at most
+    25 fields of the literal array, so the full list would read 25.)"""
+    from cdc_sink_spark.operators import sequencer
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
+    stamps = [(10 * i, 0) for i in range(1, 1001)]
+    resolved_dir = str(tmp_path / "resolved")
+    os.makedirs(resolved_dir)
+    with open(os.path.join(resolved_dir, "r.json"), "w") as f:
+        f.writelines(json.dumps({"resolved": f"{n}.0000000000"}) + "\n" for n, _ in stamps)
+    seed = spark.createDataFrame([Row(id=1, v="m"), Row(id=2, v="m")], "id bigint, v string")
+    target = str(tmp_path / "target")
+    seed.write.parquet(target)
+    batch = _muts(spark, [(1, "n", 100), (1, "a", 112), (2, "z", 118), (3, "c", 125)]).union(
+        spark.createDataFrame([Row(id=4, v="d", __ts=None, __deleted=False)], _MUT_SCHEMA)
+    )
+    cfg = ApplyConfig(cas_columns=["v"])
+    want_snap, want_pending = sequencer._serial_grouped_fold(
+        seed, batch, stamps, ["id"], cfg, ts_col="__ts"
+    )
+    want = (sorted(map(tuple, want_snap.collect())), sorted(map(tuple, want_pending.collect())))
+
+    plans = []
+    real = sequencer.seq_serial
+
+    def spy(target, muts, resolved, *a, **kw):
+        snap, left = real(target, muts, resolved, *a, **kw)
+        plans.append(snap._jdf.queryExecution().analyzed().toString())
+        return snap, left
+
+    applier = pipeline.StreamingApplier(
+        target, ["id"], cfg=cfg, parked_path=str(tmp_path / "parked"),
+        resolved_dir=resolved_dir, lag_limit_nanos=1 << 60,
+    )
+    monkeypatch.setattr(sequencer, "seq_serial", spy)
+    applier(batch, 0)
+    assert applier.mode_history == [(0, "serial")]
+    got_pending = spark.read.schema(batch.schema).parquet(str(tmp_path / "parked"))
+    got = (
+        sorted(map(tuple, spark.read.parquet(target).collect())),
+        sorted(map(tuple, got_pending.collect())),
+    )
+    assert got == want
+    assert want[0] == [(1, "n"), (2, "z"), (3, "c")]  # 'a' < 'n' fails CAS
+    assert [r[0] for r in want[1]] == [4]  # no HLC: pending
+    [plan] = plans
+    assert 1 <= plan.count("named_struct(nanos") <= 4, plan
+
+
 def test_streaming_applier_serial_replay_parks_once(spark, tmp_path):
     """A serial-mode batch replayed under its own batch id (a crash
     before the stream checkpoint commits) changes nothing: the ledger

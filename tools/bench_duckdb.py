@@ -1,5 +1,7 @@
 """DuckDB side of BASELINE.md: runs the oracle SQL for bench.py's
-headline queries, warm, and prints one JSON line."""
+headline queries, warm, best of $SPARK_GRAFT_BENCH_RUNS, on
+$SPARK_GRAFT_CPUS threads (the Spark side's width), after bench.py's
+idle gate, and prints one JSON line."""
 
 from __future__ import annotations
 
@@ -13,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from bench import HEADLINE
+from bench import HEADLINE, wait_idle
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -22,34 +24,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Same idle gate as bench.py: this tool is the DENOMINATOR of the
     # BASELINE table — a contended DuckDB run silently inflates the
-    # published Spark-vs-DuckDB ratio, the exact asymmetry the Spark
-    # side's gate exists to prevent. Block until idle, else stamp.
-    idle_limit = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD", "4.0"))
-    max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT_SEC", "300"))
-    loadavg_start = None
-    contended = False
-    try:
-        waited = 0.0
-        while (loadavg_start := round(os.getloadavg()[0], 2)) > idle_limit:
-            if waited >= max_wait:
-                contended = True
-                print(
-                    f"WARNING: loadavg still {loadavg_start} after {int(waited)}s — "
-                    'proceeding; output stamped "contended": true',
-                    file=sys.stderr,
-                )
-                break
-            print(
-                f"loadavg {loadavg_start} > {idle_limit}: waiting for idle "
-                f"({int(waited)}/{int(max_wait)}s)...",
-                file=sys.stderr,
-            )
-            time.sleep(10)
-            waited += 10
-    except OSError:
-        pass
+    # published Spark-vs-DuckDB ratio.
+    loadavg_start, contended = wait_idle()
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    # The width bench.py's Spark session runs at (session.get_spark).
+    con.execute(f"SET threads TO {int(os.environ.get('SPARK_GRAFT_CPUS', '32'))}")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):

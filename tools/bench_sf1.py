@@ -23,6 +23,9 @@ spill directory: the heavy CTEs (minhash signatures over 1M docs) can
 otherwise OOM-kill the whole bench — a killed child is reported as
 "oom", a capped one as ">cap" (default 600s, SPARK_GRAFT_SF1_CAP).
 
+The Spark side is timed by ``bench.timed`` (best of 2 noop-sink writes
+after one warm write), and each result carries its layer stats.
+
 Usage: python tools/bench_sf1.py [mult]   # default 10 = sf1
 Prints one JSON line; SCALE.md carries the rendered table.
 """
@@ -35,12 +38,12 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import bench
 from cdc_sink_spark.queries import registry
 from cdc_sink_spark.session import get_spark
 
@@ -169,6 +172,7 @@ def main() -> None:
     spark = get_spark("sf1-bench")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = build_sf1(spark, mult)
+    tracer = bench.new_tracer(spark, "sf1-bench")
     results: dict[str, dict] = {}
     # dedup_incremental persists its band index keyed by the sf_dir tag;
     # remove it (dir + catalog table) with the temp dataset or every run
@@ -182,14 +186,10 @@ def main() -> None:
             fn = registry.QUERIES[key]
             # Spark: warm once (also builds dedup_incremental's persisted
             # index — its contract is the steady-state probe), then
-            # best-of-2 noop-sink writes.
+            # best-of-2 through bench.timed.
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            s = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                s.append(time.perf_counter() - t0)
-            spark_sec = round(min(s), 3)
+            layers = bench.timed(tracer, key, lambda: fn(spark, sf_dir), 2)
+            spark_sec = layers["best_s"]
             duck_sec = duck_run(sf_dir, registry.ORACLES[key], cap)
             if isinstance(duck_sec, float):
                 ratio = round(duck_sec / spark_sec, 1)
@@ -197,7 +197,7 @@ def main() -> None:
                 ratio = f">{round(float(duck_sec[1:]) / spark_sec, 1)}"
             else:
                 ratio = duck_sec  # oom / error: no number to divide
-            results[key] = {"spark": spark_sec, "duckdb": duck_sec, "ratio": ratio}
+            results[key] = {"spark": spark_sec, "duckdb": duck_sec, "ratio": ratio, "layers": layers}
             print(f"{key}: spark {spark_sec}s duckdb {duck_sec} ({ratio}x)", file=sys.stderr)
         print(json.dumps({"mult": mult, "cap": cap, "results": results}))
     finally:

@@ -1,9 +1,10 @@
 """Round-13 optimization profiler.
 
-Times individual registry queries with the noop sink (best-of-N after an
-sf0.001 warmup, same methodology as bench.py) and writes each query's
-``explain("formatted")`` text to plans/r13/<name>_<tag>.txt so plan-shape
-claims in OPTIMIZATION_r13.md are checkable without running Spark.
+Writes each query's ``explain("formatted")`` text to
+plans/r13/<name>_<tag>.txt, so plan-shape claims in OPTIMIZATION_r13.md
+are checkable without running Spark, then times the queries with
+``bench.run_suite`` (the bench.py clock: best-of-N noop-sink writes
+after an sf0.001 warm-up, with per-query layer stats).
 
 Usage:
     python tools/profile_r13.py --tag before [--runs 3] [query ...]
@@ -15,14 +16,13 @@ captured; pass --no-time to skip timing (plans only).
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from cdc_sink_spark.queries import registry
 from cdc_sink_spark.session import get_spark
 
@@ -43,44 +43,24 @@ def main() -> None:
     ap.add_argument("--plans-dir", default=os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"))
     args = ap.parse_args()
 
-    from bench import HEADLINE  # noqa: E402 — repo root on sys.path above
-
-    names = args.queries or HEADLINE
+    names = args.queries or bench.HEADLINE
     os.makedirs(args.plans_dir, exist_ok=True)
     spark = get_spark("cdc-sink-spark-profile-r13")
     spark.sparkContext.setLogLevel("ERROR")
 
-    warm_dir = "/root/testdata/sf0.001"
-    timings: dict[str, float] = {}
-    spread: dict[str, float] = {}
     for name in names:
         fn = registry.QUERIES.get(name)
         if fn is None:
             print(f"SKIP unknown query {name}", file=sys.stderr)
             continue
-        spark.sparkContext.setJobDescription(f"r13-profile:{name}")
-        df = fn(spark, args.sf_dir)
         with open(os.path.join(args.plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
-            f.write(formatted_plan(df))
-        if args.no_time:
-            continue
-        if os.path.isdir(warm_dir):
-            try:
-                fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception:  # noqa: BLE001
-                pass
-        samples = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(min(samples), 3)
-        spread[name] = round(max(samples) - min(samples), 3)
-        gc.collect()
-        spark.sparkContext.setJobDescription(None)
+            f.write(formatted_plan(fn(spark, args.sf_dir)))
 
+    res = {} if args.no_time else bench.run_suite(spark, names, args.sf_dir, args.runs)
+    timings = {n: r["best_s"] for n, r in res.items()}
+    spread = {n: r["spread_s"] for n, r in res.items()}
     print(json.dumps({"tag": args.tag, "sf_dir": args.sf_dir, "runs": args.runs,
-                      "queries": timings, "spread": spread,
+                      "queries": timings, "spread": spread, "layers": res,
                       "total": round(sum(timings.values()), 3)}))
 
 

@@ -3,7 +3,8 @@ sf1-EQUIVALENT scale (10x the sf0.1 row counts) on synthetic data with
 the same statistical shape as the driver's testdata — duplicate-cluster
 structure included — to measure how the documented one-shuffle /
 O(diameter) designs actually scale. Prints one JSON line with sf0.1-
-equivalent and sf1-equivalent timings per query.
+equivalent and sf1-equivalent timings per query, each with its layer
+stats; queries and the probe are timed by ``bench.timed``.
 
 Shapes (matching /root/testdata generators, seed-free determinism via
 hash(doc_id, position) so any N reproduces bit-identically):
@@ -23,13 +24,13 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+import bench
 from cdc_sink_spark.session import get_spark
 
 # sf0.1 row counts (TESTDATA.md); the multiplier scales from here.
@@ -111,7 +112,11 @@ def synth_dir(spark: SparkSession, mult: int) -> str:
     return out
 
 
-def run(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+def run(spark: SparkSession, sf_dir: str, tracer) -> tuple[dict, dict]:
+    """Seconds and row counts per case, and each case's layer stats.
+    Every query case and the probe are timed by ``bench.timed`` (the
+    bench.py clock: a noop-sink write, so no projected expression is
+    pruned); row counts come from an untimed ``count()``."""
     from cdc_sink_spark.queries import cdc, textops
 
     cases = {
@@ -120,28 +125,23 @@ def run(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         "dedup_connected_components": textops.dedup_connected_components,
         "conveyor_end_to_end": cdc.conveyor_end_to_end,
     }
-    timings = {}
+    layers, rows = {}, {}
     for name, fn in cases.items():
-        # noop-sink write, the same clock bench.py uses: count() lets
-        # Catalyst prune expressions that only feed the final projection
-        # (similarity estimates etc.), which would understate per-row
-        # compute relative to BASELINE.md's fully-materialized numbers.
-        # The row count is taken separately (cheap second execution of a
-        # small result) so the published _rows fields remain.
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        timings[f"{name}_rows"] = fn(spark, sf_dir).count()
-    timings.update(incremental_probe(spark, sf_dir))
-    return timings
+        layers[name] = bench.timed(tracer, name, lambda: fn(spark, sf_dir), 1)
+        rows[f"{name}_rows"] = fn(spark, sf_dir).count()
+    probe_layers, rows["incremental_probe_batch_rows"] = incremental_probe(spark, sf_dir, tracer)
+    layers.update(probe_layers)
+    return {**{k: round(v["best_s"], 2) for k, v in layers.items()}, **rows}, layers
 
 
-def incremental_probe(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+def incremental_probe(spark: SparkSession, sf_dir: str, tracer) -> tuple[dict, int]:
     """Steady-state incremental dedup: build the persisted band index
     once per corpus size, then probe a FIXED-size batch (BASE_DOCS new
-    docs). The claim under test: probe time stays flat (±20%) while the
-    corpus grows 10x — index build is the only O(corpus) step and it
-    runs once, not per batch."""
+    docs), best of 3. The claim under test: probe time stays flat (±20%)
+    while the corpus grows 10x — index build is the only O(corpus) step
+    and it runs once, not per batch. The build writes the index rather
+    than a query result, so it is timed by a span of its own. Returns
+    both steps' layer stats and the probe's row count."""
     from cdc_sink_spark.operators.lshindex import BandIndex
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
@@ -155,38 +155,34 @@ def incremental_probe(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     path = tempfile.mkdtemp(prefix="scale-lsh-idx-")
     tag = os.path.basename(path).replace("-", "_")
     idx = BandIndex(spark, path=os.path.join(path, "idx"), table_name=f"t_{tag}")
-    t0 = time.perf_counter()
-    idx.build(docs)
-    t_build = round(time.perf_counter() - t0, 2)
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        # noop write, not count(): count would prune the est column's
-        # zip_with agreement computation out of the timed probe.
-        idx.probe(batch).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
+    with tracer.span("incremental_index_build") as s:
+        idx.build(docs)
+    inc = tracer.inclusive(s)
+    layers = {
+        "incremental_index_build": {
+            "best_s": round(s.wall_s, 3), **{k: round(inc[k], 3) for k in bench.LAYER_KEYS}
+        },
+        "incremental_probe_batch": bench.timed(
+            tracer, "incremental_probe_batch", lambda: idx.probe(batch), 3
+        ),
+    }
     n = idx.probe(batch).count()
     shutil.rmtree(path, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS t_{tag}")
-    return {
-        "incremental_index_build": t_build,
-        "incremental_probe_batch": round(best, 2),
-        "incremental_probe_batch_rows": n,
-    }
+    return layers, n
 
 
 def main() -> None:
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     spark = get_spark("scale-dedup")
     spark.sparkContext.setLogLevel("ERROR")
-    dirs = {}
-    out = {}
+    tracer = bench.new_tracer(spark, "scale-dedup")
+    dirs, out, layers = {}, {}, {}
     # dict.fromkeys dedups (1, 1) when invoked with multiplier 1 — the
     # naive tuple ran the x1 case twice and leaked the first tempdir.
     for m in dict.fromkeys((1, mult)):
         dirs[m] = synth_dir(spark, m)
-        out[f"x{m}"] = run(spark, dirs[m])
+        out[f"x{m}"], layers[f"x{m}"] = run(spark, dirs[m], tracer)
     for d in dirs.values():
         shutil.rmtree(d, ignore_errors=True)
     total = sum(v for r in out.values() for k, v in r.items() if not k.endswith("_rows"))
@@ -197,6 +193,7 @@ def main() -> None:
                 "value": round(total, 2),
                 "unit": "sec",
                 "cases": out,
+                "layers": layers,
                 "base_docs": BASE_DOCS,
                 "multiplier": mult,
             }
