@@ -76,12 +76,16 @@ HEADLINE = [
 
 def wait_idle() -> tuple[float | None, bool]:
     """Block until the 1-minute load average drops under
-    $SPARK_GRAFT_BENCH_IDLE_LOAD (default 4.0), for at most
-    $SPARK_GRAFT_BENCH_IDLE_WAIT_SEC (default 300). Returns the load
-    average it saw last and whether it gave up waiting: a contended run
-    still prints its JSON line, stamped ``"contended": true`` so no one
-    mistakes it for an official artifact."""
-    idle_limit = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD", "4.0"))
+    $SPARK_GRAFT_BENCH_IDLE_LOAD (default: half the cores the run uses,
+    $SPARK_GRAFT_CPUS or else every core), for at most
+    $SPARK_GRAFT_BENCH_IDLE_WAIT_SEC (default 300). A default at the
+    full core count would let a run start on the previous run's tail.
+    Returns the load average it saw last and whether it gave up waiting:
+    a contended run still prints its JSON line, stamped
+    ``"contended": true`` so no one mistakes it for an official
+    artifact."""
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    idle_limit = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD", cores / 2))
     max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT_SEC", "300"))
     waited = 0.0
     try:

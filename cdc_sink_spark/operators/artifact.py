@@ -20,9 +20,15 @@ live (Pillai et al., "All File Systems Are Not Created Equal", OSDI
 2014). ``replace_dir`` moves the live directory aside to
 ``.<name>.old`` in the same parent, a name Spark's file listing skips,
 so a crash between its two renames leaves the data there and
-``recover_dir`` restores it. An owner calls ``recover_dir`` when it
+``recover_dir`` restores it. An owner calls ``recover_dir`` (or
+``recover_children`` for a store that swaps its subdirectories) when it
 opens its store, holding the lock it holds around ``replace_dir`` if
 another process may be swapping at that moment.
+
+``replace_dir`` swaps in the memo's and the LSH band index's
+compactions, the staging retire's boundary bucket, and every commit of
+the streaming target and its parked store (``streaming/pipeline.
+TargetStore``): the whole directory, or each key bucket a batch touched.
 
 Versions. ``build_once`` publishes an immutable ``root/v-<sha256>``
 directory per key: readers resolve a version and writers publish the
@@ -75,14 +81,28 @@ def recover_dir(live: str) -> None:
         os.rename(aside, live)
 
 
-def replace_dir(new: str, live: str) -> None:
+def recover_children(parent: str) -> None:
+    """``recover_dir`` for every directory in ``parent`` whose
+    ``replace_dir`` a crash interrupted (its ``.<name>.old`` is there)."""
+    if os.path.isdir(parent):
+        for entry in os.listdir(parent):
+            if entry.startswith(".") and entry.endswith(".old"):
+                recover_dir(os.path.join(parent, entry[1:-4]))
+
+
+def replace_dir(new: str | None, live: str) -> None:
     """Make directory ``new`` the directory at ``live``: ``live`` is
-    renamed aside, ``new`` renamed in, and only then the old copy goes."""
+    renamed aside, ``new`` renamed in, and only then the old copy goes.
+    A missing ``live`` is just renamed in; ``new=None`` removes ``live``
+    through the same aside rename."""
     recover_dir(live)
     aside = _aside(live)
-    os.rename(live, aside)
-    os.rename(new, live)
-    shutil.rmtree(aside)
+    if os.path.isdir(live):
+        os.rename(live, aside)
+    if new is not None:
+        os.rename(new, live)
+    if os.path.isdir(aside):
+        shutil.rmtree(aside)
 
 
 def build_once(root: str, key, build: Callable[[str], None]) -> str:

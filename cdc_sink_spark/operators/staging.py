@@ -40,10 +40,7 @@ class StagingTable:
         self.data_path = os.path.join(path, "data")
         # A retire killed mid-swap left its boundary bucket aside as
         # ".hlc_bucket=<b>.old" (artifact.replace_dir); restore it.
-        if os.path.isdir(self.data_path):
-            for entry in os.listdir(self.data_path):
-                if entry.startswith(".hlc_bucket=") and entry.endswith(".old"):
-                    artifact.recover_dir(os.path.join(self.data_path, entry[1:-4]))
+        artifact.recover_children(self.data_path)
 
     def stage(self, muts: DataFrame, ts_col: str = "ts") -> None:
         """Durably persist mutations (Stager.Store)."""

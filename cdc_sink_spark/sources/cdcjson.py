@@ -42,7 +42,9 @@ _OPTS = {"primitivesAsString": "false"}
 
 def parse_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     """Parse raw ndjson lines into the canonical mutation layout
-    (model.MUTATION_SCHEMA) plus a ``resolved`` passthrough column.
+    (model.MUTATION_SCHEMA) plus a ``resolved`` passthrough column. The
+    frame's other columns (a source's provenance: kafka offsets, the
+    bucket file) pass through after them.
 
     after/before/key are re-extracted with get_json_object so nested
     JSON survives verbatim (from_json would need the payload schema).
@@ -54,6 +56,7 @@ def parse_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
         F.get_json_object(line, "$.before").alias("before"),
         parse_hlc(F.get_json_object(line, "$.updated")).alias("ts"),
         F.get_json_object(line, "$.resolved").alias("resolved_str"),
+        *[c for c in lines.columns if c != value_col],
     )
 
 

@@ -36,23 +36,7 @@ def from_kafka_frame(frame: DataFrame) -> DataFrame:
         "partition",
         "offset",
     )
-    return _with_provenance(lines)
-
-
-def _with_provenance(lines: DataFrame) -> DataFrame:
-    line = F.col("value")
-    from cdc_sink_spark.functions.hlc import parse_hlc
-
-    return lines.select(
-        F.get_json_object(line, "$.key").alias("key"),
-        F.get_json_object(line, "$.after").alias("data"),
-        F.get_json_object(line, "$.before").alias("before"),
-        parse_hlc(F.get_json_object(line, "$.updated")).alias("ts"),
-        F.get_json_object(line, "$.resolved").alias("resolved_str"),
-        "topic",
-        "partition",
-        "offset",
-    )
+    return cdcjson.parse_lines(lines)
 
 
 def claim_epochs(parsed: DataFrame) -> DataFrame:

@@ -34,8 +34,9 @@ _LAST_KEY = "objstore-last::{ident}"
 def read_bucket(
     spark: SparkSession, path: str, streaming: bool = False, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """ndjson files under a bucket prefix, with source-file provenance.
-    The streaming variant rides Structured Streaming's file source
+    """ndjson files under a bucket prefix, with source-file provenance
+    (``src_file``, which ``cdcjson.parse_lines`` passes through). The
+    streaming variant rides Structured Streaming's file source
     (exactly-once file tracking via the checkpoint); ``scan_apply``
     below is the batch-mode resolved-range walk."""
     from pyspark.sql import functions as F
@@ -48,23 +49,6 @@ def read_bucket(
     else:
         lines = spark.read.text(path)
     return lines.withColumn("src_file", F.input_file_name())
-
-
-def parse_bucket(lines: DataFrame) -> DataFrame:
-    """Parse bucket lines to mutations, keeping file provenance."""
-    from pyspark.sql import functions as F
-
-    from cdc_sink_spark.functions.hlc import parse_hlc
-
-    line = F.col("value")
-    return lines.select(
-        F.get_json_object(line, "$.key").alias("key"),
-        F.get_json_object(line, "$.after").alias("data"),
-        F.get_json_object(line, "$.before").alias("before"),
-        parse_hlc(F.get_json_object(line, "$.updated")).alias("ts"),
-        F.get_json_object(line, "$.resolved").alias("resolved_str"),
-        "src_file",
-    )
 
 
 @dataclass
@@ -135,7 +119,6 @@ def scan_apply(
     key_cols: list[str],
     ident: str = "objstore",
     leases=None,
-    max_ranges: int | None = None,
     coalesce_ranges: bool = False,
 ) -> int:
     """One scan pass (conn.go apply): discover resolved ranges after the
@@ -166,8 +149,6 @@ def scan_apply(
     try:
         last = get_last(memo, ident)
         ranges = resolved_ranges(list_bucket(root), last)
-        if max_ranges is not None:
-            ranges = ranges[:max_ranges]
         n_coalesced = 0
         if coalesce_ranges and ranges:
             n_coalesced = len(ranges) - 1  # reported as ranges covered

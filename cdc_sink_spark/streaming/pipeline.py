@@ -128,9 +128,10 @@ def bucket_col(key_cols: list[str], n_buckets: int):
 
 
 def init_bucketed_target(df: DataFrame, path: str, key_cols: list[str], n_buckets: int) -> None:
-    """Write the initial target snapshot partitioned by key bucket so the
-    streaming appliers can dynamic-partition-overwrite only touched
-    buckets per micro-batch instead of rewriting the whole table."""
+    """Write the initial target snapshot partitioned by key bucket, one
+    ``__kb=<b>`` directory per bucket, so a micro-batch's commit swaps
+    in only the buckets it touched instead of rewriting the whole table
+    (``TargetStore.commit``)."""
     df.withColumn("__kb", bucket_col(key_cols, n_buckets)).write.mode(
         "overwrite"
     ).partitionBy("__kb").parquet(path)
@@ -153,24 +154,38 @@ def _write_schema_sentinel(df: DataFrame, path: str) -> None:
 
 class TargetStore:
     """The parquet target of ``StreamingApplier``: its layout, the read
-    an apply starts from, and the commit of the result.
+    an apply starts from, and the commit of the result. The applier's
+    parked store is an unbucketed ``TargetStore`` too.
 
     With ``n_buckets`` the target is partitioned by key bucket ``__kb``
     (``init_bucketed_target``). Mutations only change rows in their own
     keys' buckets, so the read is pruned to the touched buckets and the
-    commit rewrites exactly those. Without ``n_buckets`` the commit swaps
-    in the whole snapshot (the local stand-in for a transactional UPSERT;
-    under Delta/Iceberg the apply plan is the same either way).
+    commit replaces exactly those. Without ``n_buckets`` the commit
+    replaces the whole directory (the local stand-in for a transactional
+    UPSERT; under Delta/Iceberg the apply plan is the same either way).
 
     An applier materializes its micro-batch once, in a job that also
-    yields its stats and touched buckets (``materialize``); the bucketed
-    commit then writes the snapshot with no checkpoint of its own.
+    yields its stats and touched buckets (``materialize``); the commit
+    then writes the snapshot with no checkpoint of its own.
+
+    After a crash, each bucket (or the whole unbucketed directory) holds
+    either what it held before the batch or what the batch made of it:
+    every directory is replaced by ``artifact.replace_dir``, and opening
+    the store restores any directory a crash left aside. The applied
+    ledger is marked only after the commit, so the stream replays the
+    batch under the same id and the whole batch is applied again; under
+    LWW that is idempotent on buckets already swapped. A CAS rule judges
+    the replayed mutations against their own result, so an applied one
+    can still be dead-lettered on replay.
     """
 
     def __init__(self, path: str, key_cols: list[str], n_buckets: int | None):
         self.path = path
         self.bucket = bucket_col(key_cols, n_buckets) if n_buckets else None
-        artifact.recover_dir(path)  # an unbucketed commit killed mid-swap
+        # Restore what a commit killed mid-swap left aside: the whole
+        # directory, or its touched buckets.
+        artifact.recover_dir(path)
+        artifact.recover_children(path)
         self.schema = None  # inferred by the first read
 
     def materialize(self, frame: DataFrame, *aggs) -> tuple[DataFrame, dict, list[int] | None]:
@@ -203,36 +218,38 @@ class TargetStore:
             return target
         return target.filter(F.col("__kb").isin(touched)).drop("__kb")
 
-    def commit(self, snapshot: DataFrame, touched: list[int] | None) -> None:
-        """Replace what ``read`` returned with ``snapshot``, whose lineage
-        reads the target.
+    def commit(self, snapshot: DataFrame | None, touched: list[int] | None) -> None:
+        """Replace what ``read`` returned with ``snapshot`` (None: no
+        rows), whose lineage may read the target.
 
-        Unbucketed, the snapshot is written beside the target and swapped
-        in by ``artifact.replace_dir``. Bucketed, it is written straight
-        through a dynamic partition overwrite: Spark writes every task's
-        output to a staging directory and replaces the ``__kb=<b>``
-        directories only at job commit, after every task that reads the
-        target has finished, so the write may read the buckets it
-        replaces. A job that fails leaves every bucket as it was."""
-        if self.bucket is None:
-            nxt = self.path + ".next"
+        One Spark job writes the snapshot beside the target, at
+        ``path + ".next"`` (partitioned by ``__kb`` when bucketed), so
+        the write never touches a directory it reads and a job that
+        fails leaves the target as it was. Then ``artifact.replace_dir``
+        swaps in what the write replaces: unbucketed, the whole
+        directory; bucketed, each touched ``__kb=<b>``. A touched bucket
+        the write left empty is removed through the same aside rename,
+        and one with no directory yet is renamed in. Each swapped bucket
+        is the directory the write made, renamed, not files copied."""
+        nxt = self.path + ".next"
+        if snapshot is None:
+            shutil.rmtree(nxt, ignore_errors=True)
+            os.makedirs(nxt)
+        elif self.bucket is None:
             snapshot.write.mode("overwrite").parquet(nxt)
+        else:
+            snapshot.withColumn("__kb", self.bucket).write.mode("overwrite").partitionBy(
+                "__kb"
+            ).parquet(nxt)
+        if self.bucket is None:
             artifact.replace_dir(nxt, self.path)
             return
-        # Dynamic overwrite replaces only the buckets present in the
-        # output, so a touched bucket the batch emptied would keep its
-        # stale files. The write job itself observes which it wrote.
-        present = Observation()
-        (
-            snapshot.withColumn("__kb", self.bucket)
-            .observe(present, F.collect_set("__kb").alias("kb"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__kb")
-            .parquet(self.path)
-        )
-        for b in set(touched) - set(present.get["kb"]):
-            shutil.rmtree(os.path.join(self.path, f"__kb={b}"), ignore_errors=True)
+        for b in touched:
+            new = os.path.join(nxt, f"__kb={b}")
+            artifact.replace_dir(
+                new if os.path.isdir(new) else None, os.path.join(self.path, f"__kb={b}")
+            )
+        shutil.rmtree(nxt)
 
 
 class StreamingApplier:
@@ -315,17 +332,16 @@ class StreamingApplier:
         if resolved_dir is not None and parked_path is None:
             raise ValueError("serial mode (resolved_dir) parks mutations: set parked_path")
         self.store = TargetStore(target_path, key_cols, n_buckets)
+        self.parked = None if parked_path is None else TargetStore(parked_path, key_cols, None)
         self.key_cols = key_cols
         self.tie_breaker = tie_breaker
         self.target_table = target_table
         self.checkpoints = checkpoints
         self.staging = staging
-        self.parked_path = parked_path
         self.resolved_dir = resolved_dir
         self.backlog_limit = backlog_limit
         self.lag_limit_nanos = lag_limit_nanos
         if parked_path is not None:
-            artifact.recover_dir(parked_path)  # a store swap killed mid-way
             os.makedirs(parked_path, exist_ok=True)
             if dlq is None:
                 dlq = DeadLetterQueue(SparkSession.active(), parked_path + "_dlq")
@@ -355,10 +371,10 @@ class StreamingApplier:
         aggs = [F.max("__ts").alias("hlc")]
         if self.resolved_dir is not None:
             aggs.append(F.min("__ts").alias("lo"))
-        if self.parked_path is not None:
+        if self.parked is not None:
             # Parked rows were never marked applied, so they join after
             # the ledger filter; tagged, so the same job counts them.
-            parked = spark.read.schema(batch.schema).parquet(self.parked_path)
+            parked = spark.read.schema(batch.schema).parquet(self.parked.path)
             batch = batch.withColumn("__parked", F.lit(False)).unionByName(
                 parked.withColumn("__parked", F.lit(True))
             )
@@ -444,13 +460,7 @@ class StreamingApplier:
         replayed batch parks its own pending rows beside their stored
         copies, so exact duplicates are dropped; distinct mutations that
         share a key and an HLC differ in some column and stay."""
-        nxt = self.parked_path + ".next"
-        shutil.rmtree(nxt, ignore_errors=True)
-        if left is None:
-            os.makedirs(nxt)
-        else:
-            left.dropDuplicates().write.parquet(nxt)
-        artifact.replace_dir(nxt, self.parked_path)
+        self.parked.commit(None if left is None else left.dropDuplicates(), None)
 
 
 def _covering(stamps: list, lo, hi) -> list:

@@ -328,7 +328,7 @@ def test_band_index_probe_equals_full_recompute(spark, corpus_words, batch_words
     )
 )
 def test_bucketed_applier_equals_legacy(spark, tmp_path_factory, batches):
-    """Dynamic-partition-overwrite bucketing is an IO optimization only:
+    """Swapping in only the touched buckets is an IO optimization only:
     any sequence of micro-batches must leave the bucketed target equal
     to the legacy whole-rewrite target."""
     from cdc_sink_spark.streaming import pipeline

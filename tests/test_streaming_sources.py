@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from cdc_sink_spark.sources import kafka, mylogical, objstore, pglogical
+from cdc_sink_spark.sources import cdcjson, kafka, mylogical, objstore, pglogical
 from cdc_sink_spark.streaming import pipeline
 
 
@@ -207,7 +207,7 @@ def test_objstore_provenance(spark, tmp_path):
     feed = str(tmp_path / "bucket")
     _write_feed(feed, FEED)
     lines = objstore.read_bucket(spark, feed)
-    parsed = objstore.parse_bucket(lines)
+    parsed = cdcjson.parse_lines(lines)
     rows = parsed.filter(F.col("ts").isNotNull()).collect()
     assert len(rows) == 4
     assert all(r.src_file.endswith("feed-0.ndjson") for r in rows)
@@ -1054,8 +1054,8 @@ def test_pglogical_zero_padded_text_stays_quoted(spark):
 
 
 def test_bucketed_applier_rewrites_only_touched_buckets(spark, tmp_path):
-    """With n_buckets set, the micro-batch applier dynamic-partition-
-    overwrites ONLY the buckets the batch's keys hash into: the final
+    """With n_buckets set, the micro-batch applier swaps in ONLY the
+    buckets the batch's keys hash into: the final
     snapshot matches the legacy whole-rewrite result, and untouched
     bucket partitions keep their exact on-disk files (rewrite volume ∝
     touched keys, not table size)."""
@@ -1167,9 +1167,9 @@ def test_bucketed_appliers_job_count(spark, tmp_path, job_count):
     over a resolved feed, without and with a CAS rule; a parked store
     without a feed) runs a pinned number of Spark jobs. The batch's
     stats, parked-row count and touched buckets ride the one job that
-    materializes it, and the set of buckets the commit leaves non-empty
-    rides the commit write itself, so none of them runs a job of its
-    own. The target read after the first batch
+    materializes it, and the commit finds the buckets its side write
+    left empty by listing that write's directories, so none of them runs
+    a job of its own. The target read after the first batch
     infers no schema, without a CAS rule no reject path runs, the
     resolved stamps are read by one job and split the batch as literals,
     and an empty parked store is not rewritten."""
@@ -1400,10 +1400,9 @@ def _bucket_files(target):
 @pytest.mark.parametrize("kind", ["streaming", "mode_switching"])
 def test_bucketed_applier_deletes_emptied_bucket(spark, tmp_path, kind):
     """A micro-batch that deletes every row of one bucket removes that
-    bucket's directory: a dynamic partition overwrite only replaces the
-    buckets present in what it writes, so the applier must drop the
-    emptied one itself. Every bucket the batch did not touch stays
-    byte-identical."""
+    bucket's directory: the side write has no directory for it, so the
+    commit moves the old one aside and drops it. Every bucket the batch
+    did not touch stays byte-identical."""
     target = str(tmp_path / "target")
     seed = spark.createDataFrame(
         [Row(id=i, v=f"seed{i}") for i in range(64)], "id bigint, v string"
@@ -1433,10 +1432,11 @@ def test_bucketed_applier_deletes_emptied_bucket(spark, tmp_path, kind):
 
 
 def test_bucketed_commit_failure_leaves_target_intact(spark, tmp_path):
-    """The bucketed commit writes its snapshot straight over the buckets
-    the snapshot reads. A write job that fails part-way raises and leaves
-    every bucket directory byte-identical and the target readable: the
-    dynamic overwrite replaces buckets only at job commit."""
+    """The bucketed commit's snapshot reads the buckets it replaces. A
+    write job that fails part-way raises and leaves every bucket
+    directory byte-identical and the target readable: the snapshot is
+    written beside the target, and no bucket is swapped before the
+    write has finished."""
     target = str(tmp_path / "target")
     seed = spark.createDataFrame(
         [Row(id=i, v=f"seed{i}") for i in range(64)], "id bigint, v string"
@@ -1481,6 +1481,129 @@ def test_unbucketed_commit_killed_mid_swap_recovers_on_open(spark, tmp_path, mon
     pipeline.TargetStore(target, ["id"], None)  # reopen
     out = {r.id: r.v for r in spark.read.parquet(target).collect()}
     assert out == {i: f"seed{i}" for i in range(16)}
+
+
+_CRASH_EXIT = {"written": 21, "mid_swap": 22, "half": 23}
+
+# A child process applies batch 0 through _crash_applier and calls
+# os._exit at one durable step of the bucketed commit: after the side
+# write, before any swap ("written"); between the two renames of the
+# first swap that has an old bucket to move aside ("mid_swap"); or
+# after argv[3] bucket swaps ("half").
+_CRASH_CHILD = """
+import os, sys
+from cdc_sink_spark.operators import artifact
+from cdc_sink_spark.session import get_spark
+from tests.test_streaming_sources import _CRASH_EXIT, _CRASH_ROWS, _crash_applier, _muts
+
+root, point, half = sys.argv[1], sys.argv[2], int(sys.argv[3])
+spark = get_spark("crash-child", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+target = os.path.abspath(os.path.join(root, "target"))
+swapped, rename, replace = [], os.rename, artifact.replace_dir
+
+def replace_or_die(new, live):
+    if os.path.dirname(os.path.abspath(live)) == target:
+        if point == "written" or (point == "half" and len(swapped) == half):
+            os._exit(_CRASH_EXIT[point])
+        swapped.append(live)
+    replace(new, live)
+
+def rename_or_die(src, dst):
+    rename(src, dst)
+    if point == "mid_swap" and os.path.dirname(os.path.abspath(dst)) == target:
+        os._exit(_CRASH_EXIT[point])
+
+artifact.replace_dir = replace_or_die
+os.rename = rename_or_die
+_crash_applier(spark, root)(_muts(spark, _CRASH_ROWS), 0)
+sys.exit(1)  # the kill point was never reached
+"""
+
+
+def _crash_applier(spark, root):
+    """The replicate_steady wiring: ledger, frontier, DLQ, 8 buckets."""
+    from cdc_sink_spark.operators.checkpoint import CheckpointGroup
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+    from cdc_sink_spark.operators.memo import Memo
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    return pipeline.StreamingApplier(
+        os.path.join(root, "target"), ["id"],
+        dlq=DeadLetterQueue(spark, os.path.join(root, "dlq")),
+        target_table="t",
+        checkpoints=CheckpointGroup(Memo(spark, os.path.join(root, "memo")), "t"),
+        staging=StagingTable(spark, os.path.join(root, "staging")),
+        n_buckets=8,
+    )
+
+
+# (id, v, nanos) mutations over most buckets: updates, a key written
+# twice, deletes, and an insert of key 999.
+_CRASH_ROWS = (
+    [(i, f"new{i}", 5 + i) for i in range(12)]
+    + [(3, "late", 40), (20, None, 30), (21, None, 30), (22, None, 30), (999, "ins", 50)]
+)
+
+
+@pytest.mark.parametrize(
+    "point,new_bucket",
+    [("written", False), ("mid_swap", False), ("half", False), ("half", True)],
+)
+def test_bucketed_commit_killed_in_child_converges_on_replay(
+    spark, tmp_path, point, new_bucket
+):
+    """A child process with its own Spark session applies one batch to a
+    bucketed target and dies (``os._exit``) at one step of the commit:
+    after the side write, between the two renames of a bucket swap, or
+    after half the touched buckets are swapped. A fresh applier then
+    replays the batch under the same id. The ledger was never marked, so
+    the whole batch is applied again over buckets that are each before
+    or after it, and the target equals the LWW model with no ``.old`` or
+    ``.next`` directory left. With ``new_bucket`` the seed leaves key
+    999's bucket without a directory, so its swap is a plain rename in."""
+    import subprocess
+    import sys
+
+    root = str(tmp_path)
+    kb = pipeline.bucket_col(["id"], 8)
+    ids = spark.range(64).union(spark.range(999, 1000)).select("id", kb.alias("b"))
+    bucket_of = {r.id: r.b for r in ids.collect()}
+    seed = {
+        i: f"seed{i}" for i in range(64)
+        if not (new_bucket and bucket_of[i] == bucket_of[999])
+    }
+    pipeline.init_bucketed_target(
+        spark.createDataFrame(sorted(seed.items()), "id bigint, v string"),
+        os.path.join(root, "target"), ["id"], 8,
+    )
+    touched = {bucket_of[i] for i, _, _ in _CRASH_ROWS}
+    assert len(touched) > 2
+    if new_bucket:
+        assert not os.path.isdir(os.path.join(root, "target", f"__kb={bucket_of[999]}"))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    child = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD, root, point, str(len(touched) // 2)],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env, timeout=300,
+    )
+    assert child.returncode == _CRASH_EXIT[point]
+
+    _crash_applier(spark, root)(_muts(spark, _CRASH_ROWS), 0)
+    model = dict(seed)
+    for i, v, _ in sorted(_CRASH_ROWS, key=lambda r: r[2]):
+        if v is None:
+            model.pop(i, None)
+        else:
+            model[i] = v
+    out = spark.read.parquet(os.path.join(root, "target")).drop("__kb").collect()
+    assert len(out) == len(model)
+    assert {r.id: r.v for r in out} == model
+    left = [
+        os.path.join(d, n) for d, dirs, _ in os.walk(root) for n in dirs
+        if n.endswith((".old", ".next"))
+    ]
+    assert left == []
 
 
 def test_streaming_applier_ledger_guards_cross_batch_redelivery(spark, tmp_path):

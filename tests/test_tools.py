@@ -1,5 +1,6 @@
-"""The timing harness every Spark-side tool shares (``bench.timed``), and
-an import check of ``bench`` and every ``tools/*.py`` module."""
+"""The timing harness every Spark-side tool shares (``bench.timed``), its
+idle gate (``bench.wait_idle``), and an import check of ``bench`` and
+every ``tools/*.py`` module."""
 
 from __future__ import annotations
 
@@ -59,3 +60,20 @@ def test_timed_returns_best_run(spark):
     assert out["spread_s"] == pytest.approx(max(runs) - min(runs), abs=2e-3)
     assert out["jobs"] >= 1 and out["tasks"] >= 1
     assert set(bench.LAYER_KEYS) <= set(out)
+
+
+def test_wait_idle_waits_below_the_core_count(monkeypatch):
+    """On 4 cores a load average of 3.5 is the tail of a previous run,
+    not an idle machine: the gate waits until the load falls to half the
+    cores, and an explicit threshold still overrides the default."""
+    loads, sleeps = [3.5, 3.5, 1.5], []
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_IDLE_LOAD", raising=False)
+    monkeypatch.setattr(os, "getloadavg", lambda: (loads.pop(0), 0.0, 0.0))
+    monkeypatch.setattr(bench.time, "sleep", sleeps.append)
+    assert bench.wait_idle() == (1.5, False)
+    assert len(sleeps) == 2
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_IDLE_LOAD", "4.0")
+    loads[:] = [3.5]
+    assert bench.wait_idle() == (3.5, False)
+    assert len(sleeps) == 2

@@ -12,7 +12,10 @@ Cases:
   lww_uniform   LWW dedup over N mutations across N/10 keys
   lww_skewed    same N but 90% of mutations hit ONE key (salted path)
   apply_big     full apply of the deduped batch onto a 1M-row target
-  parse_apply   ndjson render -> parse -> apply end-to-end
+  parse_apply   ndjson render -> parse -> apply end-to-end, the raw
+                lines going to the one ``from_json`` in
+                ``typed_mutations`` as the stream, the conveyor and
+                objstore pass them
   frontier_assign  resolved-window tagging, N mutations x 1000
                    frontiers (literal sorted-array lookup: zero
                    shuffle of the stream, zero row blowup, O(frontiers)
@@ -85,9 +88,7 @@ def main() -> None:
         spark, n_parents=200_000, n_children=2_000_000, n_updates=1_000_000
     )
     lines = workload.to_ndjson_lines(children, "child", ["child", "parent", "val"])
-    typed2 = cdcjson.typed_mutations(
-        cdcjson.parse_lines(lines), "child bigint, parent bigint, val bigint", ["child"]
-    )
+    typed2 = cdcjson.typed_mutations(lines, "child bigint, parent bigint, val bigint", ["child"])
     empty = spark.createDataFrame([], "child bigint, parent bigint, val bigint")
     case(
         "parse_apply_3m", "parse_apply",
